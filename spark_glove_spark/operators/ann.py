@@ -29,7 +29,12 @@ from spark_glove_spark.functions.vector import (
     lit_double_array,
     lit_long_array,
 )
-from spark_glove_spark.registry import defer_cleanup, defer_unpersist, query
+from spark_glove_spark.registry import (
+    defer_cleanup,
+    defer_unpersist,
+    deferred_tempdir,
+    query,
+)
 from spark_glove_spark.sources import parallelized, table
 
 DIM = 64
@@ -672,16 +677,13 @@ def pipeline_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     cadence vs staleness is a policy knob the catalog makes explicit
     instead of implicit."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "embeddings")
     mid = e.agg(F.max("vec_id")).collect()[0][0] // 2
     corpus0 = e.where(F.col("vec_id") <= mid)
-    base = tempfile.mkdtemp(prefix="ann_lifecycle_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("ann_lifecycle_")
     catalog = os.path.join(base, "catalog")
 
     def build(version: int, corpus: DataFrame) -> None:
@@ -818,8 +820,6 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     histograms, rebuilds pay the normal build cost only when triggered,
     and snapshot isolation makes the swap atomic for readers."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -833,8 +833,7 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.transform("embedding", lambda x: x + F.lit(3.0)).cast("array<float>"),
     )
-    base = tempfile.mkdtemp(prefix="ann_drift_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("ann_drift_")
     catalog = os.path.join(base, "catalog")
 
     def build(version: int, corpus: DataFrame, trigger: str) -> str:
@@ -1257,15 +1256,12 @@ def h16_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins result EQUALITY with the in-memory ivfpq_knn at the same
     seed, the recall floor vs the exact h15 twin, and the
     partition-pruned plan shape."""
-    import shutil
-    import tempfile
 
     e = table(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    path = tempfile.mkdtemp(prefix="ivfpq_index_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("ivfpq_index_")
     ivfpq_build_index(e, path, n_lists=10, m=8, ksub=16, seed=42)
     res = ivfpq_probe_index(
         spark, path, e, probes, k=10, n_probe=3, shortlist=100
@@ -1292,15 +1288,12 @@ def h16_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver (both quantizers are model-specific); the recall floor
     vs the exact filtered twin and the filter-leak check live in
     tests/test_quant.py."""
-    import shutil
-    import tempfile
 
     e = table(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    path = tempfile.mkdtemp(prefix="ivfpq_filt_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("ivfpq_filt_")
     ivfpq_build_index(e, path, n_lists=10, m=8, ksub=16, seed=42)
     res = ivfpq_probe_index(
         spark,
@@ -4321,16 +4314,13 @@ def h16_bq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog gives the code table snapshot isolation and rollback like
     any data table."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     packed, vecs = _bq_packed(spark, sf_dir)
     vecs = defer_unpersist(vecs.persist())
     mid = int(vecs.agg(F.max("vec_id")).collect()[0][0]) // 2
-    base_dir = tempfile.mkdtemp(prefix="bq_index_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("bq_index_")
     codes_path = os.path.join(base_dir, "codes")
     txlog.create(packed.where(F.col("vec_id") <= mid), codes_path)  # v0
     txlog.append(
@@ -4414,15 +4404,12 @@ def h16_bq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right GDPR semantics: the erased user neither appears nor
     queries."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     packed, vecs = _bq_packed(spark, sf_dir)
     vecs = defer_unpersist(vecs.persist())
-    base_dir = tempfile.mkdtemp(prefix="bq_del_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("bq_del_")
     codes_path = os.path.join(base_dir, "codes")
     txlog.create(packed, codes_path)  # v0: full corpus
 
@@ -4527,8 +4514,6 @@ def h16_nsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a catalog-visible policy knob exactly as in
     pipeline_ann_index_lifecycle."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -4544,8 +4529,7 @@ def h16_nsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = int(base.agg(F.max("vec_id")).collect()[0][0])
     mid = hi // 2
-    base_dir = tempfile.mkdtemp(prefix="nsw_index_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("nsw_index_")
     edges_path = os.path.join(base_dir, "edges")
     catalog = os.path.join(base_dir, "catalog")
 
@@ -4714,8 +4698,6 @@ def h16_nsw_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the compaction path — rebuild from surviving vectors, new
     catalog version, tombstone list resets to empty."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -4729,8 +4711,7 @@ def h16_nsw_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
-    base_dir = tempfile.mkdtemp(prefix="nsw_del_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("nsw_del_")
     edges_path = os.path.join(base_dir, "edges")
     catalog = os.path.join(base_dir, "nodes")
     edges = _nsw_edges(base).localCheckpoint(eager=True)
@@ -4884,8 +4865,6 @@ def h16_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only to the driver; the oracle-checked h16_hnsw_portable
     twin carries the algebra certification."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -4901,8 +4880,7 @@ def h16_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = int(base.agg(F.max("vec_id")).collect()[0][0])
     mid = hi // 2
-    base_dir = tempfile.mkdtemp(prefix="hnsw_index_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("hnsw_index_")
     edges_path = os.path.join(base_dir, "edges")
     catalog = os.path.join(base_dir, "catalog")
     l1 = F.col("vec_id") % _HN_L1_MOD == 0
@@ -5143,8 +5121,6 @@ def h16_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-node degree growth <= deg per epoch, and compaction-by-
     rebuild restores the strict invariant when drift triggers it."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -5162,8 +5138,7 @@ def h16_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     w0, w1, w2 = hi // 2, (3 * hi) // 4, hi
     if not w0 < w1 < w2:
         raise AssertionError(f"degenerate watermarks {(w0, w1, w2)}")
-    base_dir = tempfile.mkdtemp(prefix="hnsw_incr_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("hnsw_incr_")
     edges_path = os.path.join(base_dir, "edges")
     catalog = os.path.join(base_dir, "catalog")
     l1m = F.col("vec_id") % _HN_L1_MOD == 0
@@ -5321,8 +5296,6 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, and the catalog row makes the optimize visible to serving
     exactly like Delta's OPTIMIZE."""
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -5338,8 +5311,7 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = int(base.agg(F.max("vec_id")).collect()[0][0])
     w0, w1, w2 = hi // 2, (3 * hi) // 4, hi
-    base_dir = tempfile.mkdtemp(prefix="hnsw_opt_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("hnsw_opt_")
     edges_path = os.path.join(base_dir, "edges")
     catalog = os.path.join(base_dir, "catalog")
     l1m = F.col("vec_id") % _HN_L1_MOD == 0

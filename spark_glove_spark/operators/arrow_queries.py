@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_glove_spark.registry import defer_cleanup, query
+from spark_glove_spark.registry import deferred_tempdir, query
 from spark_glove_spark.sources import table
 
 
@@ -213,8 +213,6 @@ def a44_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning stops at the scan boundary (no prune hook in the Python
     DataSource API) — acceptable for an exchange hop, wrong for a
     landing format; that trade is the docstring's honest caveat."""
-    import shutil
-    import tempfile
 
     e = table(spark, sf_dir, "embeddings")
     src = e.select(
@@ -224,8 +222,7 @@ def a44_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("embedding"),
         "label",
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="sgs_arrow_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_arrow_")
     write_arrow_ipc(src, path, batch_rows=2048)
     _register_arrow(spark)
     back = spark.read.format("sgs_arrow").option("path", path).load()
@@ -389,8 +386,6 @@ def i31_streaming_arrow_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition-planning DataSourceStreamReader exactly as
     pydatasource.py documents for i12, and the BATCH lane (a44)
     already plans one split per file."""
-    import shutil
-    import tempfile
     import uuid
 
     e = table(spark, sf_dir, "embeddings")
@@ -401,8 +396,7 @@ def i31_streaming_arrow_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("embedding"),
         "label",
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="sgs_arrow_stream_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_arrow_stream_")
     write_arrow_ipc(src_df, path, batch_rows=2048)
     _register_arrow_stream(spark)
     src = (

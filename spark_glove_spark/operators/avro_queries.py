@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_glove_spark.registry import defer_cleanup, query
+from spark_glove_spark.registry import deferred_tempdir, query
 from spark_glove_spark.sources import table
 
 
@@ -290,8 +290,6 @@ def a35_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is the d1 hash-agg shape. Avro is a ROW format: no column
     pruning exists at the scan, which is why production lands it in
     parquet at the first hop — this query IS that hop."""
-    import shutil
-    import tempfile
 
     o = table(spark, sf_dir, "orders")
     src = o.select(
@@ -302,8 +300,7 @@ def a35_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_orderstatus"))
         .alias("o_orderstatus"),
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="sgs_avro_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_")
     write_avro(src, path, codec="deflate")
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()
@@ -441,8 +438,6 @@ def i26_streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     production deployment swaps the driver-side simple reader for
     the partition-planning DataSourceStreamReader exactly as
     pydatasource.py documents for i12."""
-    import shutil
-    import tempfile
     import uuid
 
     o = table(spark, sf_dir, "orders")
@@ -454,8 +449,7 @@ def i26_streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_orderstatus"))
         .alias("o_orderstatus"),
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="sgs_avro_stream_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_stream_")
     write_avro(src_df, path, codec="deflate")
     _register_avro_stream(spark)
     src = spark.readStream.format("sgs_avro_stream").option("path", path).load()
@@ -519,15 +513,12 @@ def a36_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     under today's reader. 100 TB: resolution is a per-container
     column mapping computed once from the self-describing header —
     zero per-row cost beyond the projection."""
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import scalar_bounds
 
     o = table(spark, sf_dir, "orders")
     (mid,) = scalar_bounds(o, "o_orderkey", 2)
-    path = tempfile.mkdtemp(prefix="sgs_avro_evo_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_evo_")
     gen1 = (
         o.where(F.col("o_orderkey") <= mid)
         .select("o_orderkey", "o_totalprice")
@@ -598,8 +589,6 @@ def a37_avro_array_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one split per container at read); the vector payload makes this
     the wire format a feature-store ingest actually carries. The
     aggregate is the d1 hash-agg shape on 8 integer buckets."""
-    import shutil
-    import tempfile
 
     e = table(spark, sf_dir, "embeddings")
     src = e.select(
@@ -609,8 +598,7 @@ def a37_avro_array_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("embedding"),
         "label",
     ).repartition(3)
-    path = tempfile.mkdtemp(prefix="sgs_avro_arr_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_arr_")
     write_avro(src, path, codec="deflate")
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()
@@ -678,8 +666,6 @@ def a38_avro_map_enum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator inside whole-stage codegen, the aggregate is a 6-group
     hash agg. Maps are how Kafka topics ship sparse attributes
     without schema churn — this is that lane, spec-exact."""
-    import shutil
-    import tempfile
 
     o = table(spark, sf_dir, "orders")
     src = o.select(
@@ -691,8 +677,7 @@ def a38_avro_map_enum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("o_orderpriority").cast("long"),
         ).alias("attrs"),
     ).repartition(3)
-    path = tempfile.mkdtemp(prefix="sgs_avro_me_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_me_")
     write_avro(src, path, codec="deflate", overrides={"status": "enum<F|O|P>"})
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()
@@ -740,16 +725,13 @@ def i28_streaming_avro_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from its self-describing header; the offset is a file
     index over immutable containers (replay = exactly-once for
     free)."""
-    import shutil
-    import tempfile
     import uuid
 
     from spark_glove_spark.sources import scalar_bounds
 
     o = table(spark, sf_dir, "orders")
     (mid,) = scalar_bounds(o, "o_orderkey", 2)
-    path = tempfile.mkdtemp(prefix="sgs_avro_sevo_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_sevo_")
     gen1 = (
         o.where(F.col("o_orderkey") <= mid)
         .select("o_orderkey", "o_totalprice")
@@ -830,15 +812,12 @@ def a39_avro_type_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     get WIDENED (this lane); both resolve per-container from the
     self-describing header at zero per-row cost beyond the
     projection. 100 TB: same write/read parallelism as a35."""
-    import shutil
-    import tempfile
 
     from spark_glove_spark.sources import scalar_bounds
 
     o = table(spark, sf_dir, "orders")
     (mid,) = scalar_bounds(o, "o_orderkey", 2)
-    path = tempfile.mkdtemp(prefix="sgs_avro_promo_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_promo_")
     gen1 = (
         o.where(F.col("o_orderkey") <= mid)
         .select(
@@ -912,14 +891,11 @@ def i29_streaming_avro_egress(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from spark_glove_spark.streaming.jobs import run_stream_foreach_batch
 
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="sgs_avro_egress_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("sgs_avro_egress_")
     src = os.path.join(base, "src")
     e.repartition(4).write.mode("overwrite").parquet(src)
     sdf = (
@@ -994,8 +970,6 @@ def a40_avro_logical_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec prescribes (codec tooth in tests/test_avro.py). 100 TB:
     identical write/read parallelism to a35 — logical types add zero
     wire bytes over their primitives."""
-    import shutil
-    import tempfile
 
     o = table(spark, sf_dir, "orders")
     src = o.select(
@@ -1003,8 +977,7 @@ def a40_avro_logical_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.to_date("o_orderdate").alias("o_day"),
     ).repartition(3)
-    path = tempfile.mkdtemp(prefix="sgs_avro_lt_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_lt_")
     write_avro(src, path, codec="deflate")
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()
@@ -1052,16 +1025,13 @@ def a41_avro_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_avro.py) — the loud-contract twin of the int 32-bit
     bound. 100 TB: unscaled-int bytes are 5-6 bytes per price here —
     denser than the 8-byte double they replace."""
-    import shutil
-    import tempfile
 
     o = table(spark, sf_dir, "orders")
     src = o.select(
         "o_orderpriority",
         F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
     ).repartition(3)
-    path = tempfile.mkdtemp(prefix="sgs_avro_dec_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_dec_")
     write_avro(src, path, codec="deflate")
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()
@@ -1115,8 +1085,6 @@ def a42_avro_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth guard. 100 TB: structs add ZERO framing bytes over their
     flattened members, so nesting is free on the wire; the win is
     schema fidelity with the upstream event bus."""
-    import shutil
-    import tempfile
 
     c = table(spark, sf_dir, "customer")
     src = c.select(
@@ -1129,8 +1097,7 @@ def a42_avro_nested_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pp"),
         ).alias("profile"),
     ).repartition(3)
-    path = tempfile.mkdtemp(prefix="sgs_avro_struct_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_struct_")
     # the override authors the inner-member nullability Spark DDL
     # cannot carry: bal/pp ride the ["null", T] union inside the record
     write_avro(
@@ -1192,14 +1159,11 @@ def a43_avro_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     container-per-partition write, split-per-container read, d1-shape
     aggregate; the CRC check is a per-block O(bytes) pass inside the
     task, no coordination."""
-    import shutil
-    import tempfile
 
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="sgs_avro_snappy_")
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("sgs_avro_snappy_")
     write_avro(d, path, codec="snappy")
     _register_avro(spark)
     back = spark.read.format("sgs_avro").option("path", path).load()

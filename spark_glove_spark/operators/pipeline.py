@@ -35,13 +35,15 @@ persisted tokenized projection.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_glove_spark.functions.text import shingles, tokenize
 from spark_glove_spark.operators.dedup import prefix_filter_pairs
 from spark_glove_spark.operators.text_analysis import STOPWORDS
-from spark_glove_spark.registry import defer_cleanup, defer_unpersist, query
+from spark_glove_spark.registry import defer_unpersist, deferred_tempdir, query
 from spark_glove_spark.sources import parallelized, scalar_bounds, table
 
 _T = 0.4  # similarity-join threshold (shared with h14)
@@ -354,11 +356,7 @@ def pipeline_sketch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "pipeline_cdc_replication",
-    section="A3,C3,F4",
-    tags=("pipeline", "cdc"),
-    oracle="""
+_CDC_ORACLE = """
 WITH b AS (SELECT o_orderkey AS k, o_totalprice AS price FROM orders),
 mm AS (SELECT CAST(floor(max(k) / 8.0) AS BIGINT) AS h8,
               CAST(floor(max(k) / 4.0) AS BIGINT) AS h4 FROM b),
@@ -378,33 +376,28 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(DISTINCT k) AS BIGINT) AS n_keys,
        round(sum(p), 2) AS total
 FROM fin
-""",
-)
-def pipeline_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table REPLICATION over the change feed — the capstone the
-    changelog exists for: a source txlog table mutates through the
-    a25 history (create → append adjustments → banded COW delete →
-    banded U/D/I merge), a REPLICA table is seeded from the source's
-    version 0, and each commit's net changes (txlog.changes) are
-    re-applied to the replica as one MERGE per version (per key:
-    insert row wins as an upsert, a delete-only key becomes a D op —
-    the standard changelog-to-upsert collapse). The replica must then
-    EQUAL the source bit-for-bit: asserted in-body by symmetric
-    exceptAll emptiness, and hash-matched against the relational
-    reconstruction of the final state (the oracle).
+"""
 
-    100 TB: this is cross-region/lake replication without locks —
-    only touched-file diffs cross the wire, appends ship verbatim,
-    compactions ship nothing, and the replica converges per version
-    with exactly-once semantics from the version numbers themselves."""
-    import tempfile
 
+def _cdc_replica(spark: SparkSession, sf_dir: str, prefix: str):
+    """The CDC pair's shared set-up: a source txlog table mutated
+    through the a25 history (create → append adjustments → banded COW
+    delete → banded U/D/I merge) and a REPLICA seeded from its version
+    0, both under one deferred temp dir. Returns ``(src_path,
+    rep_path, apply)``: ``apply(v)`` re-applies source version ``v``'s
+    net changes (txlog.changes) to the replica as one MERGE through
+    txlog.commit_epoch under the ("cdc", v) watermark — the source
+    version number IS the writer version — and returns whether it
+    landed. Versions must be applied in order (each merge consumes
+    the previous replica state)."""
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     base = o.select(k.alias("k"), F.col("o_totalprice").alias("price"))
-    src_path = tempfile.mkdtemp(prefix="sgs_cdcr_") + "/src"
+    tmp = deferred_tempdir(prefix)
+    src_path = os.path.join(tmp, "src")
+    rep_path = os.path.join(tmp, "replica")
     txlog.create(base.repartitionByRange(8, "k"), src_path)  # v0
     h8, h4 = scalar_bounds(base, "k", 8, 4)  # one agg job for both
     adj = base.where(F.col("k") % 7 == 3).select(
@@ -430,13 +423,9 @@ def pipeline_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     txlog.merge(spark, src_path, ch_src, on=["k"], op_col="op")  # v3
-
-    # --- replica: seed from v0, then replay the change feed ---
-    rep_path = tempfile.mkdtemp(prefix="sgs_cdcr_") + "/replica"
     txlog.create(txlog.read(spark, src_path, version=0), rep_path)
-    latest = txlog.current_version(src_path)
 
-    def _apply_set(v: int) -> DataFrame:
+    def change_set(v: int) -> list[DataFrame]:
         ch = txlog.changes(spark, src_path, v - 1, v)
         # changelog -> upsert collapse: per key, an insert row wins as
         # an upsert; a delete-only key becomes a D op. (At most one
@@ -457,26 +446,24 @@ def pipeline_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         # source ~5 times internally (op validation, key distinct,
         # delete/upsert counts, the rewrite), and each pass would
         # re-run the CDC diff otherwise (r14 optimization round)
-        return collapsed.localCheckpoint(eager=True)
+        return [collapsed.localCheckpoint(eager=True)]
 
-    # The replica merges must apply in version order (each consumes
-    # the previous replica state), but the change-set DIFFS read only
-    # the source log's immutable files — independent of the replica
-    # and of each other. Materialize them concurrently so the diff of
-    # version v+1 overlaps the merge of version v instead of
-    # serializing behind it (guide §2.6; r15 round — the loop tail
-    # VERDICT r14 item 3 names).
-    from concurrent.futures import ThreadPoolExecutor
+    writes = [(rep_path, "cdc", ["k"], "op")]
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_apply_set, v) for v in range(1, latest + 1)]
-        for f in futs:
-            txlog.merge(spark, rep_path, f.result(), on=["k"], op_col="op")
+    def apply(v: int) -> bool:
+        return txlog.commit_epoch(v, writes, lambda: change_set(v))[0]
+
+    return src_path, rep_path, apply
+
+
+def _cdc_converged(spark: SparkSession, src_path: str, rep_path: str) -> DataFrame:
+    """Raise unless the replica equals the source bit-for-bit (both
+    directions), then return the oracle's aggregate of the replica."""
+    from spark_glove_spark.sources import txlog
 
     src_final = txlog.read(spark, src_path)
     rep_final = txlog.read(spark, rep_path)
-    # load-bearing invariant — explicit raises survive python -O:
-    # bit-for-bit convergence, both directions
+    # load-bearing invariant — explicit raises survive python -O
     if src_final.exceptAll(rep_final).limit(1).count() != 0:
         raise AssertionError("replica is missing source rows")
     if rep_final.exceptAll(src_final).limit(1).count() != 0:
@@ -489,30 +476,41 @@ def pipeline_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
+    "pipeline_cdc_replication",
+    section="A3,C3,F4",
+    tags=("pipeline", "cdc"),
+    oracle=_CDC_ORACLE,
+)
+def pipeline_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Table REPLICATION over the change feed — the capstone the
+    changelog exists for: a source txlog table mutates through the
+    a25 history (create → append adjustments → banded COW delete →
+    banded U/D/I merge), a REPLICA table is seeded from the source's
+    version 0, and each commit's net changes (txlog.changes) are
+    re-applied to the replica as one MERGE per version (per key:
+    insert row wins as an upsert, a delete-only key becomes a D op —
+    the standard changelog-to-upsert collapse). The replica must then
+    EQUAL the source bit-for-bit: asserted in-body by symmetric
+    exceptAll emptiness, and hash-matched against the relational
+    reconstruction of the final state (the oracle).
+
+    100 TB: this is cross-region/lake replication without locks —
+    only touched-file diffs cross the wire, appends ship verbatim,
+    compactions ship nothing, and the replica converges per version
+    with exactly-once semantics from the version numbers themselves."""
+    from spark_glove_spark.sources import txlog
+
+    src_path, rep_path, apply = _cdc_replica(spark, sf_dir, "sgs_cdcr_")
+    for v in range(1, txlog.current_version(src_path) + 1):
+        apply(v)
+    return _cdc_converged(spark, src_path, rep_path)
+
+
+@query(
     "pipeline_cdc_exactly_once",
     section="A3,C3,F4,A6",
     tags=("pipeline", "cdc"),
-    oracle="""
-WITH b AS (SELECT o_orderkey AS k, o_totalprice AS price FROM orders),
-mm AS (SELECT CAST(floor(max(k) / 8.0) AS BIGINT) AS h8,
-              CAST(floor(max(k) / 4.0) AS BIGINT) AS h4 FROM b),
-fin AS (
-  SELECT k,
-         CASE WHEN k % 7 = 0 AND k > h8 AND k <= h4
-              THEN floor(price * 120) / 100 ELSE price END AS p
-  FROM b, mm
-  WHERE k > h8 AND NOT (k % 7 = 1 AND k > h8 AND k <= h4)
-  UNION ALL
-  SELECT k + 200000000, floor(price * 25) / 100 FROM b WHERE k % 7 = 3
-  UNION ALL
-  SELECT k + 300000000, floor(price * 45) / 100 FROM b, mm
-  WHERE k % 7 = 2 AND k > h8 AND k <= h4
-)
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT k) AS BIGINT) AS n_keys,
-       round(sum(p), 2) AS total
-FROM fin
-""",
+    oracle=_CDC_ORACLE,
 )
 def pipeline_cdc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pipeline_cdc_replication made RESTART-SAFE — the production
@@ -522,122 +520,33 @@ def pipeline_cdc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the writer watermark (txlog.merge(txn=...) — SetTransaction).
     After convergence, a SIMULATED REPLICATOR RESTART re-delivers
     EVERY version's change set from scratch; all replays must no-op
-    (applied flags asserted in-body), the replica's version count must
-    not move, and the replica must still equal the source bit-for-bit
-    — the same relational oracle as pipeline_cdc_replication, now
-    carrying the exactly-once claim too. The threaded two-replicas-
-    of-one-change-set race is pinned in tests/test_txlog.py.
+    (applied flags asserted in-body) without computing a change set,
+    the replica's version count must not move, and the replica must
+    still equal the source bit-for-bit — the same relational oracle as
+    pipeline_cdc_replication, now carrying the exactly-once claim
+    too. The threaded two-replicas-of-one-change-set race is pinned
+    in tests/test_txlog.py.
 
     100 TB: restart cost is one watermark read per already-applied
     version — the replicator never diffs or dedups the replica; the
     source version numbers give exactly-once for free, which is the
     entire point of shipping CDC over a versioned log."""
-    import tempfile
-
     from spark_glove_spark.sources import txlog
 
-    o = table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    base = o.select(k.alias("k"), F.col("o_totalprice").alias("price"))
-    src_path = tempfile.mkdtemp(prefix="sgs_cdcx_") + "/src"
-    txlog.create(base.repartitionByRange(8, "k"), src_path)  # v0
-    h8, h4 = scalar_bounds(base, "k", 8, 4)  # one agg job for both
-    adj = base.where(F.col("k") % 7 == 3).select(
-        (F.col("k") + 200000000).alias("k"),
-        (F.floor(F.col("price") * 25) / 100).alias("price"),
-    )
-    txlog.append(adj, src_path)  # v1
-    txlog.delete(spark, src_path, f"k <= {h8}", prune=("k", 0, h8))  # v2
-    band = base.where((F.col("k") > h8) & (F.col("k") <= h4))
-    ch_src = (
-        band.where(F.col("k") % 7 == 0)
-        .select("k", (F.floor(F.col("price") * 120) / 100).alias("price"),
-                F.lit("U").alias("op"))
-        .unionByName(
-            band.where(F.col("k") % 7 == 1)
-            .select("k", F.lit(0.0).alias("price"), F.lit("D").alias("op"))
-        )
-        .unionByName(
-            band.where(F.col("k") % 7 == 2)
-            .select((F.col("k") + 300000000).alias("k"),
-                    (F.floor(F.col("price") * 45) / 100).alias("price"),
-                    F.lit("I").alias("op"))
-        )
-    )
-    txlog.merge(spark, src_path, ch_src, on=["k"], op_col="op")  # v3
-
-    rep_path = tempfile.mkdtemp(prefix="sgs_cdcx_") + "/replica"
-    txlog.create(txlog.read(spark, src_path, version=0), rep_path)
-    latest = txlog.current_version(src_path)
-
-    def apply_set_for(v: int) -> DataFrame:
-        ch = txlog.changes(spark, src_path, v - 1, v)
-        return ch.groupBy("k").agg(
-            F.first(
-                F.when(F.col("_change_type") == "insert", F.col("price")),
-                ignorenulls=True,
-            ).alias("ins_price"),
-        ).select(
-            "k",
-            F.coalesce("ins_price", F.lit(0.0)).alias("price"),
-            F.when(F.col("ins_price").isNotNull(), F.lit("U"))
-            .otherwise(F.lit("D"))
-            .alias("op"),
-        )
-
-    flags = []
-    # checkpoint each change set once — merge's internal actions
-    # (op validation, key distinct, counts, rewrite) would re-run
-    # the CDC diff ~5× otherwise (r14 optimization round) — and
-    # materialize the diffs CONCURRENTLY: they read only the source
-    # log's immutable files, so diff v+1 overlaps merge v instead of
-    # serializing behind it (guide §2.6; r15 round, VERDICT r14 item
-    # 3's loop tail). The merges still apply strictly in version
-    # order, one watermark per version, so the exactly-once claim is
-    # untouched. The restart loop below deliberately passes the LAZY
-    # form: its merges must no-op at the watermark check without ever
-    # executing the source plan, which is the exactly-once claim.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                lambda v=v: apply_set_for(v).localCheckpoint(eager=True)
-            )
-            for v in range(1, latest + 1)
-        ]
-        for v, f in zip(range(1, latest + 1), futs):
-            r = txlog.merge(
-                spark, rep_path, f.result(), on=["k"], op_col="op",
-                txn=("cdc", v),
-            )
-            flags.append(r["applied"])
+    src_path, rep_path, apply = _cdc_replica(spark, sf_dir, "sgs_cdcx_")
+    versions = range(1, txlog.current_version(src_path) + 1)
+    flags = [apply(v) for v in versions]
     rep_v = txlog.current_version(rep_path)
     # SIMULATED RESTART: the replicator re-delivers everything
-    for v in range(1, latest + 1):
-        r = txlog.merge(
-            spark, rep_path, apply_set_for(v), on=["k"], op_col="op",
-            txn=("cdc", v),
-        )
-        flags.append(r["applied"])
+    flags += [apply(v) for v in versions]
     # load-bearing invariants — explicit raises survive python -O
-    if flags != [True] * latest + [False] * latest:
+    if flags != [True] * len(versions) + [False] * len(versions):
         raise AssertionError(f"replay applied flags: {flags}")
     if txlog.current_version(rep_path) != rep_v:
         raise AssertionError("restart replay created replica versions")
-    if txlog.last_txn_version(rep_path, "cdc") != latest:
+    if txlog.last_txn_version(rep_path, "cdc") != versions[-1]:
         raise AssertionError("watermark not at the last source version")
-    src_final = txlog.read(spark, src_path)
-    rep_final = txlog.read(spark, rep_path)
-    if src_final.exceptAll(rep_final).limit(1).count() != 0:
-        raise AssertionError("replica is missing source rows")
-    if rep_final.exceptAll(src_final).limit(1).count() != 0:
-        raise AssertionError("replica has rows the source lacks")
-    return rep_final.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("k").alias("n_keys"),
-        F.round(F.sum("price"), 2).alias("total"),
-    )
+    return _cdc_converged(spark, src_path, rep_path)
 
 
 @query(
@@ -1353,6 +1262,24 @@ def pipeline_rag_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rag_ingest_epoch(codes_path: str, batch_df: DataFrame, epoch_id: int) -> None:
+    """One i27 micro-batch: chunk + BQ-code the batch's documents and
+    append the codes to the txlog table at ``codes_path`` exactly once
+    (``rag-codes`` watermark). Module-level so a test can re-deliver
+    an epoch to the registered lane's table."""
+    from spark_glove_spark.sources import txlog
+
+    txlog.commit_epoch(
+        epoch_id,
+        [(codes_path, "rag-codes")],
+        lambda: [
+            _rag_chunk_frame(_rag_segch(batch_df)).select(
+                "cid", _rag_code_col().alias("code")
+            )
+        ],
+    )
+
+
 @query(
     "i27_streaming_rag_ingest",
     section="A5,I5,H16,H17",
@@ -1377,27 +1304,24 @@ def i27_streaming_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-for-row, the strongest batch-equivalence contract available
     (the i24 discipline, carried by the RAG chunk space).
 
-    In-body tooth (explicit raise, survives -O): the replay must have
-    delivered >= 2 micro-batches, or the equality is vacuous.
+    In-body teeth (explicit raises, survive -O): the replay must have
+    delivered >= 2 micro-batches, or the equality is vacuous, and a
+    re-fired final epoch must land nothing.
 
     100 TB: per-trigger cost is chunk+code over the batch's documents
     (one map pass + per-doc windows) + one 10-byte-row append; the
     txn watermark makes restart re-deliveries no-ops, so the serving
     tier (h16_bq_persisted's pinned snapshots) can trail ingest
     without ever seeing a double-counted chunk."""
-    import os
-    import shutil
-    import tempfile
-
     from spark_glove_spark.sources import txlog
     from spark_glove_spark.streaming.jobs import (
+        refire_last_epoch,
         run_stream_foreach_batch,
         stage_ranged_stream,
     )
 
     d = table(spark, sf_dir, "documents")
-    base_dir = tempfile.mkdtemp(prefix="sgs_rag_ingest_")
-    defer_cleanup(lambda: shutil.rmtree(base_dir, ignore_errors=True))
+    base_dir = deferred_tempdir("sgs_rag_ingest_")
     schema = (
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
@@ -1405,31 +1329,19 @@ def i27_streaming_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", os.path.join(base_dir, "docs"), schema, n_files=3
     )
     codes_path = os.path.join(base_dir, "codes")
-    seen: list[int] = []
+    txlog.create_empty(
+        spark.createDataFrame([], "cid long, code long"), codes_path
+    )
 
-    def apply_epoch(batch_df, epoch_id):
-        codes = _rag_chunk_frame(_rag_segch(batch_df)).select(
-            "cid", _rag_code_col().alias("code")
-        )
-        if not os.path.exists(os.path.join(codes_path, "_txlog")):
-            txlog.create(codes, codes_path)
-            txlog.append_idempotent(
-                spark.createDataFrame([], "cid long, code long"),
-                codes_path,
-                "rag-codes",
-                int(epoch_id),
-            )
-        else:
-            txlog.append_idempotent(
-                codes, codes_path, "rag-codes", int(epoch_id)
-            )
-        seen.append(int(epoch_id))
+    def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        _rag_ingest_epoch(codes_path, batch_df, epoch_id)
 
     run_stream_foreach_batch(sdf, apply_epoch, output_mode="append")
-    if len(seen) < 2:
-        raise AssertionError(
-            f"expected >= 2 micro-batches, saw epochs {seen}"
-        )
+    # epoch commits on top of the empty version 0
+    n_epochs = txlog.current_version(codes_path)
+    if n_epochs < 2:
+        raise AssertionError(f"expected >= 2 micro-batches, saw {n_epochs}")
+    refire_last_epoch(apply_epoch, d, [(codes_path, "rag-codes")])
     # materialize: the code table lives in the tempdir the deferred
     # cleanup reclaims at the next declared query
     return txlog.read(spark, codes_path).select("cid", "code").localCheckpoint(

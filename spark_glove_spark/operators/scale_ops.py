@@ -27,7 +27,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_glove_spark.registry import defer_cleanup, query
+from spark_glove_spark.registry import defer_cleanup, deferred_tempdir, query
 from spark_glove_spark.sources import table
 
 _BLOOM_SEEDS = (11, 23, 47)  # k = 3 hash functions
@@ -371,7 +371,6 @@ def a9_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly what the oracle checks: the plain shuffled join
     must produce the identical table.
     """
-    import tempfile
     import uuid
 
     o = table(spark, sf_dir, "orders").select(
@@ -380,7 +379,7 @@ def a9_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    tmp = tempfile.mkdtemp(prefix="bucketed_")
+    tmp = deferred_tempdir("bucketed_")
     # Per-run unique table names: permanent catalog entries with fixed
     # names would collide across concurrent runs sharing a warehouse.
     run_id = uuid.uuid4().hex[:8]

@@ -15,6 +15,8 @@ Determinism rules enforced by convention here (SURVEY.md §4.3.6):
 from __future__ import annotations
 
 import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Optional
@@ -71,6 +73,15 @@ def defer_cleanup(fn: Callable[[], None]) -> None:
     ``localCheckpoint(eager=True)``, the h16_*_persisted pattern) so
     the returned plan no longer references the doomed state."""
     _DEFERRED_CLEANUP.append(fn)
+
+
+def deferred_tempdir(prefix: str) -> str:
+    """A fresh temp dir for one query run, removed (through
+    :func:`defer_cleanup`, so under its contract) when the next
+    declared query starts."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    return path
 
 
 # ADVICE r4: deferred cleanups used to run ONLY when the next declared

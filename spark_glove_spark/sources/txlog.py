@@ -119,6 +119,12 @@ Round-6 surface on top of that substrate:
   consolidate into checkpoints (O(tail) lookup;
   :func:`last_txn_version`); pre-txn checkpoints force full replay
   rather than risk a missed watermark.
+* **Exactly-once epoch commits** — :func:`commit_epoch` is the one way
+  a streaming epoch or a CDC apply step lands its tables: it checks
+  every ``(table, app)`` watermark before building the epoch's frames
+  (a replayed epoch runs no Spark job), then lands the uncovered
+  writes through :func:`append_idempotent` / ``merge(txn=...)``,
+  concurrently, on threads that keep the caller's Spark job group.
 """
 
 from __future__ import annotations
@@ -128,8 +134,11 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime, timezone
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG_DIR = "_txlog"
@@ -2143,6 +2152,71 @@ def merge(
         "rows_deleted": int(n_deleted),
         "applied": True,
     }
+
+
+# Threads commit_epoch adds beside the caller's own: no lane lands more
+# than four tables per epoch, so three writes run at once.
+_EPOCH_WORKERS = 2
+
+
+def commit_epoch(
+    epoch_id: int,
+    writes: list[tuple],
+    build: Callable[[], list[DataFrame] | None],
+) -> list[bool]:
+    """The one EXACTLY-ONCE epoch commit every foreachBatch lane and
+    CDC apply step goes through. ``writes`` lists one write per table:
+    ``(table, app)`` is an :func:`append_idempotent`, ``(table, app,
+    on)`` or ``(table, app, on, op_col)`` a :func:`merge` — each
+    stamped with the writer watermark ``(app, epoch_id)``, so there is
+    one SetTransaction per table per epoch.
+
+    1. Every write's watermark is checked BEFORE ``build`` runs. When
+       all of them already cover ``epoch_id`` (a re-delivered or stale
+       epoch) ``build`` is never called: a replay costs log reads
+       only — no Spark job, no new version.
+    2. Otherwise ``build()`` returns one DataFrame per write, in
+       order (or None: the epoch has nothing to land), and the writes
+       not yet covered land concurrently — the caller's thread takes
+       the first, a pool of ``_EPOCH_WORKERS`` threads the rest. Pool
+       targets inherit the caller's Spark job group and local
+       properties, so their jobs stay attributed to the caller.
+
+    The writes of one call must be independent of each other (resolve
+    every read the frames need inside ``build``; snapshot isolation
+    keeps those reads fixed while the writes land). A lane whose
+    writes depend on each other calls this once per dependent step.
+    Tables must exist (:func:`create_empty` before the stream starts).
+    Returns, per write, whether it landed in this call."""
+    e = int(epoch_id)
+    landed = [False] * len(writes)
+    pending = [
+        i for i, (tbl, app, *_) in enumerate(writes)
+        if last_txn_version(tbl, app) < e
+    ]
+    frames = build() if pending else None
+    if frames is None:
+        return landed
+
+    def land(i: int) -> None:
+        tbl, app, *merge_on = writes[i]
+        df = frames[i]
+        if merge_on:
+            r = merge(df.sparkSession, tbl, df, *merge_on, txn=(app, e))
+            landed[i] = r["applied"]
+        else:
+            landed[i] = append_idempotent(df, tbl, app, e)[1]
+
+    head, *rest = pending
+    with ThreadPoolExecutor(_EPOCH_WORKERS) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(frames[i].sparkSession)(land), i)
+            for i in rest
+        ]
+        land(head)
+        for f in futs:
+            f.result()
+    return landed
 
 
 def changes(

@@ -182,6 +182,26 @@ def run_stream_foreach_batch(
         sess.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def refire_last_epoch(fn, batch_df: DataFrame, writes: list[tuple]) -> None:
+    """In-body replay tooth of a foreachBatch lane: re-deliver the
+    newest committed epoch to the lane's body ``fn`` — foreachBatch's
+    at-least-once restart case — and raise if any table of ``writes``
+    (the lane's ``txlog.commit_epoch`` write tuples) changed version.
+    ``batch_df`` stands in for the re-delivered batch; a body that
+    commits through ``commit_epoch`` never evaluates it, so the tooth
+    costs log reads only."""
+    from spark_glove_spark.sources import txlog
+
+    epoch = max(txlog.last_txn_version(t, app) for t, app, *_ in writes)
+    before = [txlog.current_version(t) for t, *_ in writes]
+    fn(batch_df, epoch)
+    after = [txlog.current_version(t) for t, *_ in writes]
+    if after != before:
+        raise AssertionError(
+            f"re-fired epoch {epoch} advanced a state table: {before} -> {after}"
+        )
+
+
 def stage_ranged_stream(
     df: DataFrame, key: str, base: str, schema: str, n_files: int = 4
 ) -> DataFrame:

@@ -9,6 +9,7 @@ instead of rows-only.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -17,10 +18,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from spark_glove_spark.operators.analytics import MERGE_ORACLE
-from spark_glove_spark.registry import defer_cleanup, query
-from spark_glove_spark.sources import table
+from spark_glove_spark.registry import deferred_tempdir, query
+from spark_glove_spark.sources import table, txlog
 from spark_glove_spark.streaming.jobs import (
     events_path,
+    refire_last_epoch,
     run_stream,
     run_stream_foreach_batch,
     stage_ranged_stream,
@@ -144,16 +146,13 @@ def i4_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped from its (closed) window. Rows-only to the driver — the
     full property (late row absent; present without watermark) is
     asserted in tests/test_streaming.py."""
-    import os
-    import tempfile
-
     import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="i4_replay_")
+    base = deferred_tempdir("i4_replay_")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     # file 1: the last 4 hours of events — enough to advance the
     # watermark past the sentinel's window without replaying the whole
@@ -1075,20 +1074,17 @@ def i17_streaming_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot must equal the batch aggregate — the oracle. Version
     monotonicity and per-version prefix sums are pinned in
     tests/test_txlog.py-style assertions inside this query's replay
-    (n_versions == n_batches is asserted here, not oracle-compared,
-    because file slicing is an execution detail).
+    (four epoch commits on top of the empty version 0 is asserted
+    here, not oracle-compared, because file slicing is an execution
+    detail).
 
     Production shape: this is Structured Streaming's Delta sink
-    pattern — transactional per-epoch appends; idempotent restart
-    needs the epoch id recorded in the commit (txlog's 'operation'
-    field carries it here)."""
-    import os
-    import tempfile
-
-    from spark_glove_spark.sources import txlog
-
+    pattern — transactional per-epoch appends, and restart is
+    idempotent: each epoch commits through txlog.commit_epoch under
+    the ("i17-sink", epoch_id) watermark, so a re-delivered epoch
+    lands nothing (the in-body replay tooth re-fires the last one)."""
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="i17_replay_")
+    base = deferred_tempdir("i17_replay_")
     src = os.path.join(base, "f")
     e.repartition(4).write.mode("overwrite").parquet(src)
     sdf = (
@@ -1100,23 +1096,23 @@ def i17_streaming_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     tbl = os.path.join(base, "table")
+    cols = ["event_id", "event_type", "value"]
+    txlog.create_empty(spark.createDataFrame([], sdf.select(*cols).schema), tbl)
+    writes = [(tbl, "i17-sink")]
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.select("event_id", "event_type", "value")
-        if txlog.current_version(tbl) < 0:
-            txlog.create(rows, tbl)
-        else:
-            txlog.append(rows, tbl, operation=f"epoch-{epoch_id}")
+        txlog.commit_epoch(epoch_id, writes, lambda: [batch_df.select(*cols)])
 
     run_stream_foreach_batch(sdf, sink, "append")
-    n_versions = txlog.current_version(tbl) + 1
     # load-bearing invariants — explicit raises so they survive
     # python -O (ADVICE r5: bare assert is stripped under -O)
-    if n_versions != 4:
-        raise AssertionError(f"expected 4 micro-batch commits, got {n_versions}")
+    n_epochs = txlog.current_version(tbl)
+    if n_epochs != 4:
+        raise AssertionError(f"expected 4 micro-batch commits, got {n_epochs}")
+    refire_last_epoch(sink, e, writes)
     # prefix property: every version's row count is non-decreasing
     counts = [
-        txlog.read(spark, tbl, version=v).count() for v in range(n_versions)
+        txlog.read(spark, tbl, version=v).count() for v in range(n_epochs + 1)
     ]
     if not (counts == sorted(counts) and counts[-1] == e.count()):
         raise AssertionError(f"non-monotone version prefix: {counts}")
@@ -1178,15 +1174,11 @@ def i20_streaming_cooccurrence_update(
     Window=2 keeps every 1/d weight (1.0, 0.5) exactly representable,
     so accumulation order across micro-batches cannot perturb the
     sums."""
-    import os
-    import tempfile
-
     from spark_glove_spark.functions.text import tokenize
     from spark_glove_spark.operators.cooccurrence import _forward_pairs
-    from spark_glove_spark.sources import txlog
 
     d = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="i20_replay_")
+    base = deferred_tempdir("i20_replay_")
     src = os.path.join(base, "f")
     d.repartition(4).write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(
@@ -1209,9 +1201,11 @@ def i20_streaming_cooccurrence_update(
         F.round(F.sum(F.lit(1.0) / F.col("d")), 6).alias("x")
     )
     tbl = os.path.join(base, "table")
+    txlog.create_empty(spark.createDataFrame([], agg.schema), tbl)
+    writes = [(tbl, "i20-cooc", ["wi", "wj"])]
     epochs = {"n": 0, "rows": 0}
 
-    def apply_delta(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> list[DataFrame] | None:
         # one eager checkpoint per epoch: foreachBatch hands a LOGICAL
         # plan, so the count below plus the merge's key-distinct,
         # upsert-count and write actions would each re-execute the
@@ -1221,15 +1215,16 @@ def i20_streaming_cooccurrence_update(
         rows = batch_df.select("wi", "wj", "x").localCheckpoint(eager=True)
         n = rows.count()
         if n == 0:
-            return
+            return None
         epochs["n"] += 1
         epochs["rows"] += n
-        if txlog.current_version(tbl) < 0:
-            txlog.create(rows, tbl)
-        else:
-            txlog.merge(spark, tbl, rows, on=["wi", "wj"])
+        return [rows]
+
+    def apply_delta(batch_df: DataFrame, epoch_id: int) -> None:
+        txlog.commit_epoch(epoch_id, writes, lambda: delta(batch_df))
 
     run_stream_foreach_batch(agg, apply_delta, "update")
+    refire_last_epoch(apply_delta, txlog.read(spark, tbl), writes)
     out = txlog.read(spark, tbl).select("wi", "wj", "x")
     # load-bearing invariants — explicit raises survive python -O:
     # the replay really was incremental (several epochs), and update
@@ -1292,14 +1287,9 @@ def i21_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is O(touched bins), and the versioned state table gives
     the drift dashboard time travel for free — what did the
     distribution look like at epoch N?"""
-    import os
-    import tempfile
-
-    from spark_glove_spark.sources import txlog
-
     e = table(spark, sf_dir, "events")
     lo, hi = e.agg(F.min("value"), F.max("value")).collect()[0]
-    base = tempfile.mkdtemp(prefix="i21_replay_")
+    base = deferred_tempdir("i21_replay_")
     src = os.path.join(base, "f")
     e.repartition(4).write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(
@@ -1317,26 +1307,29 @@ def i21_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("a_c"), F.sum(1 - F.col("is_a")).alias("b_c")
     )
     tbl = os.path.join(base, "state")
+    txlog.create_empty(spark.createDataFrame([], agg.schema), tbl)
+    writes = [(tbl, "i21-bins", ["bin"])]
     epochs = {"n": 0}
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> list[DataFrame] | None:
         # eager checkpoint for the same multi-action reason as i20's
-        # apply_delta — the merge would re-execute the stateful
-        # aggregate per internal action otherwise
+        # delta — the merge would re-execute the stateful aggregate
+        # per internal action otherwise
         rows = batch_df.select("bin", "a_c", "b_c").localCheckpoint(
             eager=True
         )
         if rows.count() == 0:
-            return
+            return None
         epochs["n"] += 1
-        if txlog.current_version(tbl) < 0:
-            txlog.create(rows, tbl)
-        else:
-            txlog.merge(spark, tbl, rows, on=["bin"])
+        return [rows]
+
+    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        txlog.commit_epoch(epoch_id, writes, lambda: delta(batch_df))
 
     run_stream_foreach_batch(agg, upsert, "update")
     if epochs["n"] < 2:
         raise AssertionError(f"replay collapsed to {epochs['n']} epochs")
+    refire_last_epoch(upsert, txlog.read(spark, tbl), writes)
     g = txlog.read(spark, tbl)
     tot = g.agg(F.sum("a_c").alias("na"), F.sum("b_c").alias("nb"))
     pa = (F.col("a_c") + 1).cast("double") / (F.col("na") + 10)
@@ -1418,31 +1411,37 @@ def i22_streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-partitioned storage makes that a pruned scan); state grows
     with the corpus but is NEVER rescanned wholesale. This is i5's
     exact-key streaming dedup upgraded to NEAR-dup."""
-    import os
-    import tempfile
-
     from spark_glove_spark.operators.dedup import (
         buckets_from_sig,
         portable_shingles,
         portable_sig,
     )
-    from spark_glove_spark.sources import txlog
 
     d = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="i22_replay_")
+    base = deferred_tempdir("i22_replay_")
     sdf = stage_ranged_stream(
         d,
         "doc_id",
         base,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    sh_tbl = os.path.join(base, "shingles")
-    bk_tbl = os.path.join(base, "buckets")
+    tables = _dedup_history_init(d, base)
     verdicts_tbl = os.path.join(base, "verdicts")
+    txlog.create_empty(
+        spark.createDataFrame([], "doc_id long, kept long"), verdicts_tbl
+    )
+    # three independent writers: bk_new/sh_new project the eager sig_new
+    # checkpoint, and verdict's plan reads bk/sh snapshots resolved
+    # before any append (snapshot isolation)
+    writes = [
+        (verdicts_tbl, "i22-verdicts"),
+        (tables["bk"], "i22-buckets"),
+        (tables["sh"], "i22-shingles"),
+    ]
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def build(batch_df: DataFrame) -> list[DataFrame] | None:
         if batch_df.count() == 0:
-            return
+            return None
         # ONE eager checkpoint carrying shingle sets AND the minhash
         # signature (r14 optimization round): banding derives from the
         # checkpointed mins as a trivial projection, where the former
@@ -1453,49 +1452,8 @@ def i22_streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         sh_new = sig_new.select("doc_id", "shingles")
         bk_new = buckets_from_sig(sig_new)
-        have_hist = txlog.current_version(bk_tbl) >= 0
-        bk_all = (
-            txlog.read(spark, bk_tbl).unionByName(bk_new)
-            if have_hist
-            else bk_new
-        )
-        sh_all = (
-            txlog.read(spark, sh_tbl).unionByName(sh_new)
-            if have_hist
-            else sh_new
-        )
-        a = bk_all.alias("a")
-        b = bk_new.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-        sa = sh_all.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("set_a")
-        )
-        sb = sh_new.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("set_b")
-        )
-        inter = F.size(F.array_intersect("set_a", "set_b"))
-        union = F.size("set_a") + F.size("set_b") - inter
-        dropped = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .where(inter.cast("double") / union >= 0.5)
-            .select("doc_b")
-            .distinct()
-        )
         verdict = sh_new.select("doc_id").join(
-            dropped.withColumnRenamed("doc_b", "doc_id").withColumn(
+            _online_dups(spark, tables, sh_new, bk_new).withColumn(
                 "dup", F.lit(1)
             ),
             "doc_id",
@@ -1506,43 +1464,82 @@ def i22_streaming_online_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("kept"),
         )
-        # The three per-epoch writes are independent writers to three
-        # independent tables: bk_new/sh_new project the eager sig_new
-        # checkpoint, and verdict's plan reads bk/sh snapshots whose
-        # file lists txlog.read resolved BEFORE any append (snapshot
-        # isolation — appends land as new immutable files the resolved
-        # plans never see). Overlap them in a small pool instead of
-        # running serially (guide §2.6; the _curate_epoch pattern).
-        # Replay semantics unchanged: the drain harness delivers each
-        # epoch exactly once (processAllAvailable, no restart), the
-        # per-table create/append branch is evaluated inside each
-        # thread against its own table only, and no declared output
-        # observes intermediate cross-table ordering — verdicts are
-        # read once, after the stream has fully drained.
-        from concurrent.futures import ThreadPoolExecutor
+        return [f.coalesce(1) for f in (verdict, bk_new, sh_new)]
 
-        def _land(tbl: str, frame: DataFrame) -> None:
-            if txlog.current_version(tbl) < 0:
-                txlog.create(frame.coalesce(1), tbl)
-            else:
-                txlog.append(frame.coalesce(1), tbl)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(_land, tbl, frame)
-                for tbl, frame in ((bk_tbl, bk_new), (sh_tbl, sh_new))
-            ]
-            _land(verdicts_tbl, verdict)
-            for f in futs:
-                f.result()
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        txlog.commit_epoch(epoch_id, writes, lambda: build(batch_df))
 
     run_stream_foreach_batch(sdf, process, "append")
     # load-bearing invariants — explicit raises survive python -O
-    n_epochs = txlog.current_version(verdicts_tbl) + 1
+    # (version 0 is the pre-created empty table)
+    n_epochs = txlog.current_version(verdicts_tbl)
     if n_epochs < 2:
         raise AssertionError(f"replay collapsed to {n_epochs} epochs")
+    refire_last_epoch(process, d, writes)
     return txlog.read(spark, verdicts_tbl).select("doc_id", "kept")
 
+
+def _dedup_history_init(docs: DataFrame, base: str) -> dict:
+    """Pre-create the two EMPTY history tables of an online near-dup
+    filter (band buckets and shingle sets of every document seen so
+    far) under ``base``; returns their paths as ``{"bk", "sh"}``."""
+    from spark_glove_spark.operators.dedup import (
+        portable_band_buckets,
+        portable_shingles,
+    )
+
+    tables = {
+        "bk": os.path.join(base, "buckets"),
+        "sh": os.path.join(base, "shingles"),
+    }
+    sh_empty = portable_shingles(docs.select("doc_id", "text").limit(0))
+    txlog.create_empty(sh_empty, tables["sh"])
+    txlog.create_empty(portable_band_buckets(sh_empty), tables["bk"])
+    return tables
+
+
+def _online_dups(
+    spark: SparkSession, tables: dict, sh_new: DataFrame, bk_new: DataFrame
+) -> DataFrame:
+    """``doc_id``s of the batch (``sh_new``/``bk_new``) that are
+    J >= 0.5-similar to an EARLIER document of history ∪ batch:
+    candidates from the band join, verified by exact Jaccard. The
+    history snapshots are resolved here, before the epoch's appends,
+    and the strict ``doc_id <`` means a replayed batch never pairs
+    with its own already-landed rows."""
+    bk_all = txlog.read(spark, tables["bk"]).unionByName(bk_new)
+    sh_all = txlog.read(spark, tables["sh"]).unionByName(sh_new)
+    a = bk_all.alias("a")
+    b = bk_new.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        .distinct()
+    )
+    sa = sh_all.select(
+        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("set_a")
+    )
+    sb = sh_new.select(
+        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("set_b")
+    )
+    inter = F.size(F.array_intersect("set_a", "set_b"))
+    union = F.size("set_a") + F.size("set_b") - inter
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .where(inter.cast("double") / union >= 0.5)
+        .select("doc_b")
+        .distinct()
+        .withColumnRenamed("doc_b", "doc_id")
+    )
 
 
 def _curate_tables_init(spark: SparkSession, docs: DataFrame, base: str) -> dict:
@@ -1551,26 +1548,12 @@ def _curate_tables_init(spark: SparkSession, docs: DataFrame, base: str) -> dict
     per-lang monitor), so every epoch write goes through ONE uniform
     exactly-once path (no create/append branching inside the hot
     loop). Returns the path dict :func:`_curate_epoch` consumes."""
-    import os
-
-    from spark_glove_spark.operators.dedup import (
-        portable_band_buckets,
-        portable_shingles,
-    )
-    from spark_glove_spark.sources import txlog
-
-    tables = {
-        "bk": os.path.join(base, "buckets"),
-        "sh": os.path.join(base, "shingles"),
-        "cur": os.path.join(base, "curated"),
-        "mon": os.path.join(base, "monitor"),
-    }
+    tables = _dedup_history_init(docs, base)
+    tables["cur"] = os.path.join(base, "curated")
+    tables["mon"] = os.path.join(base, "monitor")
     # create_empty (r14): schema-only creates via pyarrow — the four
     # zero-row Spark write jobs this used to pay were pure fixed
     # overhead on the benched entry's clock
-    sh_empty = portable_shingles(docs.select("doc_id", "text").limit(0))
-    txlog.create_empty(sh_empty, tables["sh"])
-    txlog.create_empty(portable_band_buckets(sh_empty), tables["bk"])
     txlog.create_empty(
         spark.createDataFrame([], "doc_id long, lang string, n int"),
         tables["cur"],
@@ -1584,31 +1567,50 @@ def _curate_tables_init(spark: SparkSession, docs: DataFrame, base: str) -> dict
     return tables
 
 
+def _curate_writes(tables: dict) -> list[tuple]:
+    """The capstone's per-epoch ``commit_epoch`` writes, one writer app
+    per table; the monitor MERGE first, so the caller's thread runs the
+    heaviest write while the pool lands the three appends."""
+    return [
+        (tables["mon"], "psc-monitor", ["lang"]),
+        (tables["bk"], "psc-buckets"),
+        (tables["sh"], "psc-shingles"),
+        (tables["cur"], "psc-curated"),
+    ]
+
+
 def _curate_epoch(
     spark: SparkSession, tables: dict, batch_df: DataFrame, epoch_id: int
 ) -> None:
     """One micro-batch of the streaming curate capstone, EXACTLY-ONCE
     under foreachBatch's at-least-once re-delivery (VERDICT r9 item 4):
-    every state write carries the epoch id as a SetTransaction
-    watermark — history and curated appends go through
-    :func:`txlog.append_idempotent` (one writer app per table) and the
-    monitor upsert through ``merge(txn=("psc-monitor", epoch_id))`` —
-    so a restarted stream replaying a completed epoch no-ops every
-    write instead of double-appending (the i17 sink's carried gap).
+    all four state writes go through ONE :func:`txlog.commit_epoch`
+    (see :func:`_curate_writes`), so a restarted stream replaying a
+    completed epoch checks four watermarks and runs no Spark job.
     Module-level (not a closure) so the restart regression in
-    tests/test_streaming.py can re-deliver an epoch directly.
+    tests/test_streaming.py can re-deliver an epoch directly."""
+    txlog.commit_epoch(
+        epoch_id,
+        _curate_writes(tables),
+        lambda: _curate_frames(spark, tables, batch_df),
+    )
 
-    Replay determinism inside the epoch: the near-dup filter joins the
-    batch against history ∪ batch with a strict ``doc_id <`` — on
-    replay the history already contains this epoch's rows, but equal
-    doc_ids never pair, so ``kept`` recomputes identically and the
-    downstream no-ops see the same payload."""
+
+def _curate_frames(
+    spark: SparkSession, tables: dict, batch_df: DataFrame
+) -> list[DataFrame] | None:
+    """The frames :func:`_curate_epoch` lands, in :func:`_curate_writes`
+    order — or None when no document passes the quality gate. Every
+    read of state happens here, before any write lands, so the four
+    writes are independent: history appends project the fused
+    checkpoint, the curated append and the monitor delta read the
+    ``kept`` checkpoint, and the monitor upsert folds that delta into
+    the PRE-epoch monitor snapshot."""
     from spark_glove_spark.functions.text import shingles, tokenize
     from spark_glove_spark.operators.dedup import (
         buckets_from_sig,
         portable_sig,
     )
-    from spark_glove_spark.sources import txlog
 
     # no leading batch_df.count(): every write below is already behind
     # the sig.count() guard, and the fused checkpoint is the batch's
@@ -1645,84 +1647,18 @@ def _curate_epoch(
         )
     ).localCheckpoint(eager=True)
     if sig.count() == 0:
-        return
+        return None
     live = sig.where(F.size("shingles") > 0)
     sh_new = live.select("doc_id", "shingles")
     bk_new = buckets_from_sig(live)
-    bk_all = txlog.read(spark, tables["bk"]).unionByName(bk_new)
-    sh_all = txlog.read(spark, tables["sh"]).unionByName(sh_new)
-    a = bk_all.alias("a")
-    b = bk_new.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sh_all.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("set_a")
-    )
-    sb = sh_new.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("set_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    dropped = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(inter.cast("double") / union >= 0.5)
-        .select("doc_b")
-        .distinct()
-        .withColumnRenamed("doc_b", "doc_id")
-    )
-    kept = sig.join(dropped, "doc_id", "left_anti").select(
-        "doc_id", "lang", "n"
-    ).localCheckpoint(eager=True)
     # history accumulates EVERY quality-passed doc (kept or dropped) —
-    # the order-free contract i22 proves; exactly-once per epoch.
-    # The two history appends are independent writers to independent
-    # tables, and the kept count reads its own checkpoint — so the
-    # three jobs OVERLAP in a small pool instead of running serially
-    # (guide §2.6: Spark happily runs concurrent jobs; actions were
-    # only sequential because this function called them sequentially).
-    # Exactly-once is untouched: each append carries its own
-    # per-table SetTransaction watermark, and replay no-ops each
-    # writer independently, in any order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                txlog.append_idempotent,
-                frame.coalesce(1),
-                tbl,
-                app,
-                int(epoch_id),
-            )
-            for app, tbl, frame in (
-                ("psc-buckets", tables["bk"], bk_new),
-                ("psc-shingles", tables["sh"], sh_new),
-            )
-        ]
-        n_kept = kept.count()
-        for f in futs:
-            f.result()
-    if n_kept == 0:
-        return
-    # 3 + 4, overlapped the same way: the transactional curated sink
-    # and the incremental monitor MERGE write different tables under
-    # different watermarks, and the monitor delta reads kept's
-    # checkpoint plus the PRE-epoch monitor state — independent of
-    # the curated append by construction. (On replay the delta is
-    # recomputed against the POST-epoch state and would be wrong —
-    # the watermark no-op discards it unapplied, exactly as before.)
+    # the order-free contract i22 proves
+    kept = sig.join(
+        _online_dups(spark, tables, sh_new, bk_new), "doc_id", "left_anti"
+    ).select("doc_id", "lang", "n").localCheckpoint(eager=True)
+    # 3 + 4: the transactional curated sink and the incremental monitor
+    # (an epoch that keeps nothing still stamps both watermarks, with
+    # an empty append and a watermark-only merge)
     delta = kept.groupBy("lang").agg(
         F.count(F.lit(1)).alias("d_docs"),
         F.sum("n").cast("long").alias("d_tokens"),
@@ -1732,35 +1668,20 @@ def _curate_epoch(
         F.col("n_docs").alias("o_docs"),
         F.col("total_tokens").alias("o_tokens"),
     )
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fcur = pool.submit(
-            txlog.append_idempotent,
-            kept.coalesce(1),
-            tables["cur"],
-            "psc-curated",
-            int(epoch_id),
+    mon_rows = (
+        delta.join(old, "lang", "left")
+        .select(
+            "lang",
+            (F.col("d_docs") + F.coalesce(F.col("o_docs"), F.lit(0))).alias(
+                "n_docs"
+            ),
+            (
+                F.col("d_tokens") + F.coalesce(F.col("o_tokens"), F.lit(0))
+            ).alias("total_tokens"),
         )
-        src_rows = (
-            delta.join(old, "lang", "left")
-            .select(
-                "lang",
-                (F.col("d_docs") + F.coalesce(F.col("o_docs"), F.lit(0))).alias(
-                    "n_docs"
-                ),
-                (
-                    F.col("d_tokens") + F.coalesce(F.col("o_tokens"), F.lit(0))
-                ).alias("total_tokens"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        txlog.merge(
-            spark,
-            tables["mon"],
-            src_rows,
-            on=["lang"],
-            txn=("psc-monitor", int(epoch_id)),
-        )
-        fcur.result()
+        .localCheckpoint(eager=True)
+    )
+    return [mon_rows, bk_new.coalesce(1), sh_new.coalesce(1), kept.coalesce(1)]
 
 
 @query(
@@ -1868,12 +1789,8 @@ def _streaming_curate(
     merges — not a duplicate audit re-read of every snapshot
     (VERDICT r10 item 3). The result values stay fully oracle-checked
     either way."""
-    import tempfile
-
-    from spark_glove_spark.sources import txlog
-
     d = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="psc_replay_")
+    base = deferred_tempdir("psc_replay_")
     sdf = stage_ranged_stream(
         d,
         "doc_id",
@@ -1893,10 +1810,11 @@ def _streaming_curate(
     # yield epochs where the online filter keeps NOTHING (measured on
     # the 10x scale probe, whose replicas are exact near-dups of
     # epoch 1 — the filter working as designed), and such epochs add
-    # no curated commit. (version 0 of every table is the pre-created
-    # empty snapshot, so epoch commits = current_version)
+    # only an empty curated commit. (version 0 of every table is the
+    # pre-created empty snapshot, so epoch commits = current_version)
     if txlog.current_version(tables["bk"]) < 2:
         raise AssertionError("replay collapsed to a single micro-batch")
+    refire_last_epoch(process, d, _curate_writes(tables))
     out = (
         txlog.read(spark, tables["cur"])
         .groupBy("lang")
@@ -1959,10 +1877,6 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrains in-line (drift is handled by the lifecycle REBUILD, a
     policy decision the catalog makes explicit); probes pay the same
     pruned-list scans as the batch index."""
-    import os
-    import shutil
-    import tempfile
-
     from spark_glove_spark.operators.ann import (
         _centroid_literals,
         _ivf_centroids,
@@ -1970,17 +1884,15 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _probe_lists,
         _score_lists,
     )
-    from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "embeddings")
     # train half: quantizer fit once on the historical corpus; the
     # stream below only assigns against these frozen literals
     cents = _centroid_literals(_ivf_centroids(e, 10, 42, 10))
-    base = tempfile.mkdtemp(prefix="i23_replay_")
     # streamed source AND the returned plan read from this tempdir
     # lazily — reclaim at the next declared query, not never (the
     # h16_ivf_persisted leak class, r10 review)
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("i23_replay_")
     sdf = stage_ranged_stream(
         e, "vec_id", base, "vec_id long, embedding array<float>, label int"
     )
@@ -1988,19 +1900,23 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog.create_empty(
         e.limit(0).withColumn("list_id", F.lit(0)), lists_tbl
     )
+    writes = [(lists_tbl, "ann-ingest")]
+
+    def assign(batch_df: DataFrame) -> list[DataFrame] | None:
+        if batch_df.count() == 0:
+            return None
+        return [
+            batch_df.withColumn("list_id", _nearest_list_expr(cents)).coalesce(1)
+        ]
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.count() == 0:
-            return
-        assigned = batch_df.withColumn("list_id", _nearest_list_expr(cents))
-        txlog.append_idempotent(
-            assigned.coalesce(1), lists_tbl, "ann-ingest", int(epoch_id)
-        )
+        txlog.commit_epoch(epoch_id, writes, lambda: assign(batch_df))
 
     run_stream_foreach_batch(sdf, process, "append")
     # load-bearing invariants — explicit raises survive python -O
     if txlog.current_version(lists_tbl) < 2:
         raise AssertionError("replay collapsed to a single micro-batch")
+    refire_last_epoch(process, e.limit(5), writes)
     acc = txlog.read(spark, lists_tbl)
     direct = e.withColumn("list_id", _nearest_list_expr(cents))
     # MULTISET equality, not set equality: vec_ids are unique in the
@@ -2026,6 +1942,28 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single consumer (the broadcast in _score_lists): no pin needed —
     # ivf_probe_index's eager checkpoint exists for its TWO consumers
     return _score_lists(acc, _probe_lists(probes, cents, 3), 10)
+
+
+def _bq_codes_empty(e: DataFrame) -> DataFrame:
+    """Zero-row ``(vec_id, w_lo, w_hi)``: the schema of a streamed BQ
+    code table (i24, i25)."""
+    return e.limit(0).select(
+        "vec_id",
+        F.lit(0).cast("long").alias("w_lo"),
+        F.lit(0).cast("long").alias("w_hi"),
+    )
+
+
+def _bq_batch_codes(batch_df: DataFrame) -> DataFrame:
+    """Sign-packed ``(vec_id, w_lo, w_hi)`` codes of an embeddings
+    micro-batch — the batch packing of h16_bq_portable, per epoch."""
+    from spark_glove_spark.operators.ann import _PL_SCALE, _bq_pack
+
+    qv = F.transform(
+        "embedding",
+        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
+    )
+    return _bq_pack(batch_df.select("vec_id", qv.alias("qv")))
 
 
 @query(
@@ -2056,56 +1994,35 @@ def i24_streaming_bq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen over the batch; rerank fetches full vectors
     from the STATIC corpus store by id — arrival order, batching, and
     epoch replays are provably invisible to served results."""
-    import os
-    import shutil
-    import tempfile
-
     from spark_glove_spark.operators.ann import (
         _BQ_TOPK,
-        _PL_SCALE,
-        _bq_pack,
         _bq_packed,
         _bq_scored,
         _bq_search,
     )
-    from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="i24_replay_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("i24_replay_")
     sdf = stage_ranged_stream(
         e, "vec_id", base, "vec_id long, embedding array<float>, label int"
     )
     codes_tbl = os.path.join(base, "codes")
-    empty = (
-        e.limit(0)
-        .select(
-            "vec_id",
-            F.lit(0).cast("long").alias("w_lo"),
-            F.lit(0).cast("long").alias("w_hi"),
-        )
-        .coalesce(1)
-    )
-    txlog.create(empty, codes_tbl)
+    txlog.create_empty(_bq_codes_empty(e), codes_tbl)
+    writes = [(codes_tbl, "bq-ingest")]
+
+    def pack(batch_df: DataFrame) -> list[DataFrame] | None:
+        if batch_df.count() == 0:
+            return None
+        return [_bq_batch_codes(batch_df).coalesce(1)]
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.count() == 0:
-            return
-        qv = F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)
-            ),
-        )
-        codes = _bq_pack(batch_df.select("vec_id", qv.alias("qv")))
-        txlog.append_idempotent(
-            codes.coalesce(1), codes_tbl, "bq-ingest", int(epoch_id)
-        )
+        txlog.commit_epoch(epoch_id, writes, lambda: pack(batch_df))
 
     run_stream_foreach_batch(sdf, process, "append")
     # load-bearing invariants — explicit raises survive python -O
     if txlog.current_version(codes_tbl) < 2:
         raise AssertionError("replay collapsed to a single micro-batch")
+    refire_last_epoch(process, e.limit(5), writes)
     acc = txlog.read(spark, codes_tbl)
     packed_batch, vecs = _bq_packed(spark, sf_dir)
     # MULTISET equality (corpus-bounded collects: the code table is
@@ -2190,44 +2107,30 @@ def i25_streaming_index_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays cheap); exact truth at scale is the sampled verification
     tier (h15's role throughout this repo). Output: the monitor table
     (epoch, n_probes, hits_total, mean_recall)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from spark_glove_spark.operators.ann import (
         _BQ_TOPK,
-        _PL_SCALE,
-        _bq_pack,
         _bq_packed,
         _bq_search,
     )
-    from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="i25_replay_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("i25_replay_")
     sdf = stage_ranged_stream(
         e, "vec_id", base, "vec_id long, embedding array<float>, label int"
     )
     codes_tbl = os.path.join(base, "codes")
     mon_tbl = os.path.join(base, "monitor")
-    empty_codes = (
-        e.limit(0)
-        .select(
-            "vec_id",
-            F.lit(0).cast("long").alias("w_lo"),
-            F.lit(0).cast("long").alias("w_hi"),
-        )
-        .coalesce(1)
+    txlog.create_empty(_bq_codes_empty(e), codes_tbl)
+    txlog.create_empty(
+        spark.createDataFrame(
+            [],
+            "epoch long, n_probes long, hits_total long, mean_recall double",
+        ),
+        mon_tbl,
     )
-    txlog.create(empty_codes, codes_tbl)
-    empty_mon = spark.createDataFrame(
-        [],
-        "epoch long, n_probes long, hits_total long, mean_recall double",
-    ).coalesce(1)
-    txlog.create(empty_mon, mon_tbl)
+    writes = [(mon_tbl, "bq-monitor25"), (codes_tbl, "bq-ingest25")]
 
     packed_all, vecs_all = _bq_packed(spark, sf_dir)
 
@@ -2294,70 +2197,36 @@ def i25_streaming_index_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_recall"),
         )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def build(batch_df: DataFrame, epoch_id: int) -> list[DataFrame] | None:
         if batch_df.count() == 0:
-            return
-        qv = F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)
-            ),
-        )
+            return None
         # One eager checkpoint of the batch's codes: the codes append
         # and the monitor's accumulated-index union both consume it
         # without re-packing, and its materialized files are what make
-        # the two writers independent (below).
-        codes = _bq_pack(
-            batch_df.select("vec_id", qv.alias("qv"))
-        ).localCheckpoint(eager=True)
+        # the two writers independent.
+        codes = _bq_batch_codes(batch_df).localCheckpoint(eager=True)
         # The monitor row measures the POST-append index; build that
         # set as pre-append snapshot ∪ this batch's codes instead of
         # re-reading the table after the append — identical rows
         # (vec_ids are disjoint across epochs: the stream is ranged by
         # vec_id), and it makes the two per-epoch writers independent,
-        # so they OVERLAP instead of running serially (guide §2.6; the
-        # _curate_epoch pattern). Replay semantics unchanged: both
-        # appends carry their own SetTransaction watermark, and
-        # append_idempotent no-ops at the watermark BEFORE evaluating
-        # its frame — a replayed epoch (whose pre-append snapshot
-        # would already contain these codes) never computes the
-        # monitor row at all, exactly as before.
+        # so commit_epoch lands them concurrently.
         acc = txlog.read(spark, codes_tbl).unionByName(codes)
-        from concurrent.futures import ThreadPoolExecutor
+        return [
+            _epoch_monitor_row(int(epoch_id), acc).coalesce(1),
+            codes.coalesce(1),
+        ]
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fcodes = pool.submit(
-                txlog.append_idempotent,
-                codes.coalesce(1),
-                codes_tbl,
-                "bq-ingest25",
-                int(epoch_id),
-            )
-            txlog.append_idempotent(
-                _epoch_monitor_row(int(epoch_id), acc).coalesce(1),
-                mon_tbl,
-                "bq-monitor25",
-                int(epoch_id),
-            )
-            fcodes.result()
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        txlog.commit_epoch(epoch_id, writes, lambda: build(batch_df, epoch_id))
 
     run_stream_foreach_batch(sdf, process, "append")
     if txlog.current_version(mon_tbl) < 2:
         raise AssertionError("replay collapsed to a single monitor epoch")
-    # replay tooth (r15, with the overlapped per-epoch writers): a
-    # RE-FIRED completed epoch must no-op BOTH writers — the codes
-    # append at its watermark fast path, and the monitor append
-    # before its row (now computed against the pre-append snapshot ∪
-    # batch) is ever evaluated. Versions unchanged = exactly-once
-    # held under the at-least-once contract.
-    last_epoch_id = txlog.last_txn_version(mon_tbl, "bq-monitor25")
-    vc, vm = txlog.current_version(codes_tbl), txlog.current_version(mon_tbl)
-    process(e.limit(5), last_epoch_id)
-    if (txlog.current_version(codes_tbl), txlog.current_version(mon_tbl)) != (
-        vc,
-        vm,
-    ):
-        raise AssertionError("re-fired epoch advanced a state table")
+    # replay tooth: a RE-FIRED completed epoch must no-op BOTH writers
+    # before the codes are packed or the monitor row is computed
+    # against a pre-append snapshot that would already hold them.
+    refire_last_epoch(process, e.limit(5), writes)
     mon = txlog.read(spark, mon_tbl).localCheckpoint(eager=True)
     # final-epoch agreement with the ORACLE-checked batch evaluation:
     # once everything is ingested the online monitor IS the batch
@@ -2421,64 +2290,51 @@ def i30_streaming_glove_continuation(
     one vocab-sized parquet snapshot per epoch (time-travel to any
     training checkpoint), and the idempotence watermark is what lets
     the scheduler retry epochs blindly."""
-    import os
-    import shutil
-    import tempfile
-
     from spark_glove_spark.glove import Glove
-    from spark_glove_spark.sources import txlog
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="i30_glove_")
-    defer_cleanup(lambda: shutil.rmtree(base, ignore_errors=True))
+    base = deferred_tempdir("i30_glove_")
     sdf = stage_ranged_stream(
         docs, "doc_id", base, "doc_id long, text string", n_files=3
     )
     corpus_tbl = os.path.join(base, "corpus")
     state_tbl = os.path.join(base, "state")
     txlog.create_empty(docs.limit(0), corpus_tbl)
+    txlog.create_empty(
+        spark.createDataFrame(
+            [],
+            "epoch int, word string, w array<double>, wc array<double>, "
+            "b double, bc double, gw array<double>, gwc array<double>, "
+            "gb double, gbc double",
+        ),
+        state_tbl,
+    )
+    corpus_w, state_w = (corpus_tbl, "i30-corpus"), (state_tbl, "i30-state")
     cfg = dict(dim=2, window=2, min_count=5, eta=0.2, init="grid", iterations=1)
     epoch_losses: dict[int, float] = {}
 
     _STATE_COLS = ["word", "w", "wc", "b", "bc", "gw", "gwc", "gb", "gbc"]
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        e = int(epoch_id)
-        # pre-fit watermark guard: a replayed epoch skips the TRAINING
-        # WORK, not just the commit (the state append below would
-        # no-op anyway — this makes replay cheap as well as safe)
-        try:
-            if txlog.last_txn_version(state_tbl, "i30-state") >= e:
-                return
-        except FileNotFoundError:
-            pass
-        txlog.append_idempotent(
-            batch_df.coalesce(1), corpus_tbl, "i30-corpus", e
-        )
+    def fit(e: int) -> list[DataFrame]:
         acc = txlog.read(spark, corpus_tbl)
         prev = None
-        try:
-            if txlog.last_txn_version(state_tbl, "i30-state") == e - 1:
-                st = txlog.read(spark, state_tbl)
-                prev = st.where(st["epoch"] == e - 1).select(*_STATE_COLS)
-        except FileNotFoundError:
-            prev = None
+        if e > 0 and txlog.last_txn_version(state_tbl, "i30-state") == e - 1:
+            st = txlog.read(spark, state_tbl)
+            prev = st.where(st["epoch"] == e - 1).select(*_STATE_COLS)
         model = Glove(**cfg).fit(acc, initial_state=prev)
         epoch_losses[e] = model.losses[-1]
         stamped = model.state.select(
             F.lit(e).cast("int").alias("epoch"), *_STATE_COLS
         )
-        if e == 0:
-            txlog.create(stamped.coalesce(1), state_tbl)
-            # retro-stamp the creating writer's watermark via a no-op
-            # idempotent append so the guard above sees epoch 0
-            txlog.append_idempotent(
-                stamped.limit(0).coalesce(1), state_tbl, "i30-state", 0
-            )
-        else:
-            txlog.append_idempotent(
-                stamped.coalesce(1), state_tbl, "i30-state", e
-            )
+        return [stamped.coalesce(1)]
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        # two dependent steps: the fit reads the corpus slice the first
+        # lands. Each checks its watermark before building, so a
+        # replayed epoch skips the TRAINING WORK, not just the commit.
+        e = int(epoch_id)
+        txlog.commit_epoch(e, [corpus_w], lambda: [batch_df.coalesce(1)])
+        txlog.commit_epoch(e, [state_w], lambda: fit(e))
 
     run_stream_foreach_batch(sdf, process, "append")
 
@@ -2490,12 +2346,11 @@ def i30_streaming_glove_continuation(
         )
     last_epoch = max(epoch_losses)
 
-    # tooth 2: a re-fired epoch is a no-op — version unchanged, no fit
-    v_before = txlog.current_version(state_tbl)
+    # tooth 2: a re-fired epoch is a no-op — versions unchanged, no fit
     losses_before = dict(epoch_losses)
-    process(txlog.read(spark, corpus_tbl).limit(5), last_epoch)
-    if txlog.current_version(state_tbl) != v_before:
-        raise AssertionError("replayed epoch advanced the state table")
+    refire_last_epoch(
+        process, txlog.read(spark, corpus_tbl).limit(5), [corpus_w, state_w]
+    )
     if epoch_losses != losses_before:
         raise AssertionError("replayed epoch re-ran the fit")
 

@@ -89,46 +89,76 @@ def test_timestamp_queries_survive_non_utc_session(spark, oracle_con, name):
 SLOW_PREFIXES = ("h5_", "h13_", "h16_", "i1", "i2", "i3", "i4", "i5", "i6", "i7", "i8", "h6_", "mm_feature")
 
 
-def test_no_oracle_query_emits_complex_columns(spark):
+def _complex_columns(name, df):
+    from pyspark.sql import types as T
+
+    return [
+        f"{name}.{f.name}: {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+    ]
+
+
+@pytest.fixture(scope="module")
+def registry_sweep(spark):
+    """ONE pass over the registry at sf0.001 that builds each query once
+    and feeds the three registry-wide tests below (building every query
+    once per test cost three full sweeps). Every query that any of them
+    covers is built; the fast ones (not SLOW_PREFIXES) also execute.
+    Per query it records build/execute errors and complex top-level
+    columns, for each test to assert over exactly its own query set."""
+    sweep = {}
+    for name, q in api.REGISTRY.items():
+        slow = name.startswith(SLOW_PREFIXES)
+        if slow and q.oracle is not None:
+            continue  # in none of the three query sets
+        rec = sweep[name] = {"built": None, "ran": None, "complex": []}
+        try:
+            df = q.fn(spark, SF_DIR)
+        except Exception as e:  # noqa: BLE001
+            rec["built"] = rec["ran"] = f"{name}: {e}"
+            continue
+        rec["complex"] = _complex_columns(name, df)
+        if not slow:
+            try:
+                df.count()
+            except Exception as e:  # noqa: BLE001
+                rec["ran"] = f"{name}: {e}"
+    return sweep
+
+
+def test_no_oracle_query_emits_complex_columns(registry_sweep):
     """Driver-comparator guard (VERDICT r1 item 3): the driver's pandas
     canonicalization crashes on array/map/struct cells, so every
     oracle-checked query must emit flat scalar top-level columns.
-    Plan construction only — no execution — so the eager streaming/fit
-    queries are skipped (their outputs are re-checked by the always-on
-    strict mode in tools/paritycheck.py)."""
-    from pyspark.sql import types as T
-
-    offenders = []
-    for name, q in api.REGISTRY.items():
-        if q.oracle is None or name.startswith(SLOW_PREFIXES):
-            continue
-        for f in q.fn(spark, SF_DIR).schema.fields:
-            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-                offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
+    The eager streaming/fit queries are skipped (their outputs are
+    re-checked by the always-on strict mode in tools/paritycheck.py)."""
+    names = [
+        n for n, q in api.REGISTRY.items()
+        if q.oracle is not None and not n.startswith(SLOW_PREFIXES)
+    ]
+    errors = [registry_sweep[n]["built"] for n in names if registry_sweep[n]["built"]]
+    assert not errors, "\n".join(errors)
+    offenders = [c for n in names for c in registry_sweep[n]["complex"]]
     assert not offenders, (
         "oracle-checked queries with complex top-level columns "
         "(driver comparator cannot hash these):\n" + "\n".join(offenders)
     )
 
 
-def test_rows_only_queries_emit_flat_columns_too(spark):
+def test_rows_only_queries_emit_flat_columns_too(registry_sweep):
     """VERDICT r6 item 1: the driver canonicalizes rows-only results
     with the same pandas sort_values/factorize pass, so the flat-column
     contract applies to EVERY registered query — the r6 red row
     (ml_pca_project's top-level array<double>) slipped through because
     the r2 guard above only swept oracle-checked queries. This sweep
-    costs real time (~100 s at sf0.001: the sketch/fit queries execute
-    during plan construction) but is the only session-local proof that
-    no registered query can crash the driver comparator."""
-    from pyspark.sql import types as T
-
-    offenders = []
-    for name, q in api.REGISTRY.items():
-        if q.oracle is not None:
-            continue
-        for f in q.fn(spark, SF_DIR).schema.fields:
-            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-                offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
+    costs real time (the sketch/fit queries execute during plan
+    construction) but is the only session-local proof that no
+    registered query can crash the driver comparator."""
+    names = [n for n, q in api.REGISTRY.items() if q.oracle is None]
+    errors = [registry_sweep[n]["built"] for n in names if registry_sweep[n]["built"]]
+    assert not errors, "\n".join(errors)
+    offenders = [c for n in names for c in registry_sweep[n]["complex"]]
     assert not offenders, (
         "rows-only queries with complex top-level columns "
         "(driver comparator crashes on these even without an oracle):\n"
@@ -136,16 +166,13 @@ def test_rows_only_queries_emit_flat_columns_too(spark):
     )
 
 
-def test_every_registered_query_executes(spark):
+def test_every_registered_query_executes(registry_sweep):
     """Registry-wide smoke at sf0.001: every declared query must build
     and execute (the expensive sketch/training/streaming ones are
     exercised by their own dedicated tests and skipped here)."""
-    failures = []
-    for name, q in api.REGISTRY.items():
-        if name.startswith(SLOW_PREFIXES):
-            continue
-        try:
-            q.fn(spark, SF_DIR).count()
-        except Exception as e:  # noqa: BLE001
-            failures.append(f"{name}: {e}")
+    failures = [
+        registry_sweep[n]["ran"]
+        for n in api.REGISTRY
+        if not n.startswith(SLOW_PREFIXES) and registry_sweep[n]["ran"]
+    ]
     assert not failures, "\n".join(failures)

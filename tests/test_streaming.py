@@ -289,6 +289,28 @@ def test_streaming_curate_invariants(spark):
     assert len(out) > 0
 
 
+def test_streaming_curate_releases_its_replay_dir(spark, tmp_path, monkeypatch):
+    """pipeline_streaming_curate's state dir is released at the next
+    declared query (registry.defer_cleanup): two runs leave at most
+    one psc_replay_* dir behind, and none once the deferred cleanups
+    drain."""
+    import glob
+    import tempfile
+
+    from conftest import SF_SMOKE
+
+    from spark_glove_spark import api
+    from spark_glove_spark.registry import drain_deferred_unpersist
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    curate = api.REGISTRY["pipeline_streaming_curate"].fn
+    for _ in range(2):
+        assert curate(spark, SF_SMOKE).collect()
+        assert len(glob.glob(str(tmp_path / "psc_replay_*"))) <= 1
+    drain_deferred_unpersist()
+    assert glob.glob(str(tmp_path / "psc_replay_*")) == []
+
+
 def test_streaming_ann_ingest_equals_batch_index(spark):
     """Pytest guard for the planlint-skipped i23: the probe results
     served from the STREAMED accumulation must equal the in-memory
@@ -317,60 +339,40 @@ def test_streaming_ann_ingest_equals_batch_index(spark):
     assert got == want
 
 
-def test_rag_chunk_code_ingest_streaming_twin(spark, tmp_path):
-    """pipeline_rag_serving's streaming twin tooth: documents replayed
-    as a file stream, each micro-batch chunked + BQ-coded and appended
-    to a txlog code table with IDEMPOTENT epoch commits, must
-    accumulate EXACTLY the batch lane's (cid, code) multiset — the
-    chunking windows are per-doc and the code planes are stateless, so
-    streamed index ingest is an equality, not an approximation (the
-    i24 discipline applied to the RAG chunk space). A re-delivered
-    final epoch must no-op."""
+def test_rag_chunk_code_ingest_streaming_twin(spark, tmp_path, monkeypatch):
+    """pipeline_rag_serving's streaming twin tooth, on the registered
+    i27 lane: documents replayed as a file stream, each micro-batch
+    chunked + BQ-coded and appended to a txlog code table with
+    IDEMPOTENT epoch commits, must accumulate EXACTLY the batch lane's
+    (cid, code) multiset — the chunking windows are per-doc and the
+    code planes are stateless, so streamed index ingest is an equality,
+    not an approximation (the i24 discipline applied to the RAG chunk
+    space). A re-delivered final epoch must no-op."""
+    import glob
+    import tempfile
+
+    from conftest import SF_SMOKE as sf
+
+    from spark_glove_spark import api
     from spark_glove_spark.operators.pipeline import (
         _rag_chunk_frame,
         _rag_code_col,
+        _rag_ingest_epoch,
         _rag_segch,
     )
     from spark_glove_spark.sources import txlog
-    from spark_glove_spark.streaming.jobs import (
-        run_stream_foreach_batch,
-        stage_ranged_stream,
-    )
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    sdf = stage_ranged_stream(
-        d, "doc_id", str(tmp_path / "docs"), schema, n_files=3
-    )
-    codes_path = str(tmp_path / "codes")
-    seen = []
-
-    def apply_epoch(batch_df, epoch_id):
-        codes = _rag_chunk_frame(_rag_segch(batch_df)).select(
-            "cid", _rag_code_col().alias("code")
-        )
-        if not os.path.exists(os.path.join(codes_path, "_txlog")):
-            txlog.create(codes, codes_path)
-            # seed the txn watermark so epoch 0 replays no-op too
-            txlog.append_idempotent(
-                spark.createDataFrame([], "cid long, code long"),
-                codes_path,
-                "rag-codes",
-                int(epoch_id),
-            )
-        else:
-            txlog.append_idempotent(
-                codes, codes_path, "rag-codes", int(epoch_id)
-            )
-        seen.append(int(epoch_id))
-
-    run_stream_foreach_batch(sdf, apply_epoch, output_mode="append")
-    assert len(seen) >= 2, f"expected multiple micro-batches, saw {seen}"
-
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     streamed = sorted(
         (r["cid"], r["code"])
-        for r in txlog.read(spark, codes_path).collect()
+        for r in api.REGISTRY["i27_streaming_rag_ingest"].fn(spark, sf).collect()
     )
+    (codes_path,) = glob.glob(str(tmp_path / "sgs_rag_ingest_*" / "codes"))
+    # epoch commits on top of the pre-created empty version 0
+    vers = txlog.current_version(codes_path)
+    assert vers >= 2, f"expected multiple micro-batches, saw {vers}"
+
+    d = spark.read.parquet(sf + "/documents.parquet")
     batch = sorted(
         (r["cid"], r["code"])
         for r in _rag_chunk_frame(_rag_segch(d))
@@ -380,16 +382,6 @@ def test_rag_chunk_code_ingest_streaming_twin(spark, tmp_path):
     assert streamed == batch, "streamed code table diverged from batch lane"
 
     # re-delivery of the last epoch must no-op (exactly-once contract)
-    vers = txlog.current_version(codes_path)
-    last = max(seen)
-    replay = d.where(F.col("doc_id") >= 0).limit(0)  # content irrelevant
-    _, applied = txlog.append_idempotent(
-        _rag_chunk_frame(_rag_segch(replay)).select(
-            "cid", _rag_code_col().alias("code")
-        ),
-        codes_path,
-        "rag-codes",
-        last,
-    )
-    assert applied is False
+    last = txlog.last_txn_version(codes_path, "rag-codes")
+    _rag_ingest_epoch(codes_path, d, last)
     assert txlog.current_version(codes_path) == vers

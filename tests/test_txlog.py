@@ -2240,6 +2240,125 @@ def test_empty_merge_with_txn_publishes_watermark_only_commit(spark, tmp_path):
     assert txlog.last_txn_version(path, "cdc") == 1
 
 
+# --- commit_epoch: the one exactly-once epoch commit ------------------------
+
+
+def _epoch_tables(spark, tmp_path):
+    """Three empty tables and the writes an epoch lands on them: two
+    idempotent appends and one idempotent merge."""
+    paths = [str(tmp_path / n) for n in ("a", "b", "m")]
+    for p in paths:
+        txlog.create_empty(_df(spark, []), p)
+    writes = [(paths[0], "ea"), (paths[1], "eb"), (paths[2], "em", ["k"])]
+    return paths, writes
+
+
+def _epoch_build(spark, calls, epoch):
+    def build():
+        calls.append(epoch)
+        return [_df(spark, [(epoch, "x")]).coalesce(1)] * 3
+
+    return build
+
+
+def _wait_for_listener(spark):
+    # the status tracker is fed by the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_commit_epoch_applies_every_write_once(spark, tmp_path):
+    paths, writes = _epoch_tables(spark, tmp_path)
+    calls = []
+    for e in (0, 1):
+        landed = txlog.commit_epoch(e, writes, _epoch_build(spark, calls, e))
+        assert landed == [True, True, True]
+    assert calls == [0, 1]
+    assert [txlog.current_version(p) for p in paths] == [2, 2, 2]
+    for (p, app, *_) in writes:
+        assert txlog.last_txn_version(p, app) == 1
+        ks = sorted(r["k"] for r in txlog.read(spark, p).collect())
+        assert ks == [0, 1]
+
+
+def test_commit_epoch_refire_skips_the_build(spark, tmp_path):
+    """An in-order re-fire of the last epoch AND a stale out-of-order
+    re-fire of an earlier one never call the build and bump no
+    version; a partly landed epoch (a crash between its writes) lands
+    only the missing write."""
+    paths, writes = _epoch_tables(spark, tmp_path)
+    calls = []
+    for e in (0, 1):
+        txlog.commit_epoch(e, writes, _epoch_build(spark, calls, e))
+    vers = [txlog.current_version(p) for p in paths]
+    for e in (1, 0):
+        landed = txlog.commit_epoch(e, writes, _epoch_build(spark, calls, e))
+        assert landed == [False, False, False]
+    assert calls == [0, 1]
+    assert [txlog.current_version(p) for p in paths] == vers
+    txlog.append_idempotent(_df(spark, [(2, "x")]).coalesce(1), paths[0], "ea", 2)
+    landed = txlog.commit_epoch(2, writes, _epoch_build(spark, calls, 2))
+    assert landed == [False, True, True]
+    assert [txlog.current_version(p) for p in paths] == [v + 1 for v in vers]
+
+
+def test_commit_epoch_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Under the caller's job group, a re-fired epoch runs no Spark job
+    at all, and a fresh epoch's writes — the ones on pool threads
+    included — run every job inside that group: none lands in the
+    ungrouped set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    paths, writes = _epoch_tables(spark, tmp_path)
+    calls = []
+    group = f"commit-epoch-{os.path.basename(str(tmp_path))}"
+    txlog.commit_epoch(0, writes, _epoch_build(spark, calls, 0))
+    sc.setJobGroup(group, "commit_epoch test")
+    try:
+        _wait_for_listener(spark)
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        txlog.commit_epoch(0, writes, _epoch_build(spark, calls, 0))
+        _wait_for_listener(spark)
+        assert tracker.getJobIdsForGroup(group) == []
+        txlog.commit_epoch(1, writes, _epoch_build(spark, calls, 1))
+        _wait_for_listener(spark)
+        assert len(tracker.getJobIdsForGroup(group)) >= 3
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert calls == [0, 1]
+
+
+def test_commit_epoch_owns_the_only_thread_pool():
+    """Overlapped writes go through commit_epoch's pool, whose threads
+    keep the caller's Spark job group; a plain pool elsewhere would
+    drop it. So no module of the package but sources/txlog.py imports
+    concurrent.futures."""
+    import ast
+
+    import spark_glove_spark
+
+    root = os.path.dirname(spark_glove_spark.__file__)
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("sources", "txlog.py"):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            if any(n.split(".")[0] == "concurrent" for n in names):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_bq_persisted_serving_equals_in_memory(spark, tmp_path):
     """h16_bq_persisted's contract: the Hamming search served from a
     txlog code-table snapshot must be BYTE-IDENTICAL to the fully
