@@ -14,29 +14,35 @@ pass of X, then one AdaGrad step is applied per iteration (synchronous
 batch AdaGrad) — the standard data-parallel form of the reference's
 per-sample loop; same fixed point, deterministic given a seed.
 
-Execution shape per iteration (designed for |X| ≈ 10⁹ rows at 100 TB
-corpus scale):
+Once per fit, X is built with ONE pair explode, partial aggregate and
+(wi, wj) shuffle: each canonical cell is mirrored by a single explode
+into (i,j,x) + (j,i,x), or (i,i,2x) on the diagonal. Execution shape per
+iteration (designed for |X| ≈ 10⁹ rows at 100 TB corpus scale):
 
   X ⋈ params(center i) ⋈ params(context j)      two key shuffles; X is
                                                 pre-partitioned by i and
                                                 persisted so one side
                                                 never re-shuffles
-  → mapInPandas gradient kernel                 Arrow batches; numpy;
-                                                partial per-id aggregation
-                                                INSIDE each batch so the
-                                                emitted stream is ~unique
-                                                ids per batch, not |X|
+  → mapInArrow gradient kernel                  vectors read as flat Arrow
+                                                value buffers reshaped to
+                                                (rows, dim); numpy; partial
+                                                per-id aggregation INSIDE
+                                                each batch so the emitted
+                                                stream is ~unique ids per
+                                                batch, not |X|
   → cogroup(grads, params) by id % blocks       ONE fused kernel merges
-    .applyInPandas fused merge+AdaGrad step     partials and steps params
+    .applyInArrow fused merge+AdaGrad step      partials and steps params
                                                 (few LARGE groups, never
                                                 per-word — SURVEY §4.3.4);
                                                 replaces the former merge →
                                                 pivot → join → update tail:
                                                 one shuffle and one Arrow
                                                 round-trip less per iter
-  → params.localCheckpoint(eager)               lineage truncation —
+  → params.localCheckpoint + persist            lineage truncation —
                                                 MANDATORY for iterative
-                                                plans (SURVEY §4.3.2)
+                                                plans (SURVEY §4.3.2); the
+                                                previous iteration's
+                                                checkpoint is released
 
 Everything driver-side is orchestration only; no .collect() of
 parameter data (only the scalar loss).
@@ -48,7 +54,8 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -63,6 +70,14 @@ _GRADS_SCHEMA = (
 _PARAMS_SCHEMA = (
     "id long, w array<double>, wc array<double>, b double, bc double, "
     "gw array<double>, gwc array<double>, gb double, gbc double"
+)
+_VEC = pa.list_(pa.float64())
+_PARAMS_ARROW = pa.schema(
+    [
+        ("id", pa.int64()), ("w", _VEC), ("wc", _VEC),
+        ("b", pa.float64()), ("bc", pa.float64()),
+        ("gw", _VEC), ("gwc", _VEC), ("gb", pa.float64()), ("gbc", pa.float64()),
+    ]
 )
 
 
@@ -263,22 +278,38 @@ def build_cooccurrence(
         .join(F.broadcast(vj), "wj")
         .select("i", "j", "x")
     )
-    off_diag = x_ids.where(F.col("i") != F.col("j"))
-    sym = (
-        off_diag.select("i", "j", "x")
-        .unionByName(
-            off_diag.select(
-                F.col("j").alias("i"), F.col("i").alias("j"), F.col("x")
-            )
-        )
-        .unionByName(
-            x_ids.where(F.col("i") == F.col("j")).select(
-                "i", "j", (F.col("x") * 2).alias("x")
+    # One explode mirrors each canonical cell into (i,j,x) and (j,i,x),
+    # or (i,i,2x) on the diagonal, so the pair explode, partial
+    # aggregate and pair shuffle above run once per fit (a union of
+    # mirrored branches re-runs them once per branch).
+    i, j, x = F.col("i"), F.col("j"), F.col("x")
+    sym = x_ids.select(
+        F.inline(
+            F.when(i == j, F.array(F.struct(i, j, (x * 2).alias("x")))).otherwise(
+                F.array(F.struct(i, j, x), F.struct(j.alias("i"), i.alias("j"), x))
             )
         )
     )
     fx = F.pow(F.least(F.col("x") / cfg.x_max, F.lit(1.0)), F.lit(cfg.alpha))
     return sym.select("i", "j", "x", F.log("x").alias("logx"), fx.alias("fx"))
+
+
+def _matrix(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """A non-empty list<double> column with no nulls and every row of
+    one length, as a (rows, dim) float64 array over its flat values."""
+    return pc.list_flatten(col).to_numpy().reshape(len(col), -1)
+
+
+def _lists(m: np.ndarray, loss_row: bool = False) -> pa.Array:
+    """The rows of an (n, dim) array as a list<double> column, followed
+    by one null row when ``loss_row`` is set."""
+    n, dim = m.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * dim
+    if not loss_row:
+        return pa.ListArray.from_arrays(offsets, m.ravel())
+    return pa.ListArray.from_arrays(
+        np.append(offsets, offsets[-1]), m.ravel(), mask=pa.array(np.arange(n + 1) == n)
+    )
 
 
 def _init_params(vocab: DataFrame, cfg: GloveConfig) -> DataFrame:
@@ -290,86 +321,75 @@ def _init_params(vocab: DataFrame, cfg: GloveConfig) -> DataFrame:
     reproduce term-for-term."""
     dim, seed, mode = cfg.dim, cfg.seed, cfg.init
 
-    def init(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for word_id in pdf["id"]:
-                if mode == "grid":
-                    k = np.arange(dim, dtype=np.int64) + int(word_id) * dim
-                    vecs = np.stack(
-                        [
-                            (k * 37 % 21 - 10) / 100.0,
-                            (k * 53 % 21 - 10) / 100.0,
-                        ]
-                    )
-                else:
-                    rng = np.random.default_rng([seed, int(word_id)])
-                    vecs = (rng.random((2, dim)) - 0.5) / dim
-                rows.append(
-                    {
-                        "id": int(word_id),
-                        "w": vecs[0],
-                        "wc": vecs[1],
-                        "b": 0.0,
-                        "bc": 0.0,
-                        "gw": np.ones(dim),
-                        "gwc": np.ones(dim),
-                        "gb": 1.0,
-                        "gbc": 1.0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def init(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            ids = rb.column("id").to_numpy()
+            n = len(ids)
+            if n == 0:
+                continue
+            if mode == "grid":
+                k = np.arange(dim, dtype=np.int64) + ids[:, None] * dim
+                w = (k * 37 % 21 - 10) / 100.0
+                wc = (k * 53 % 21 - 10) / 100.0
+            else:
+                rngs = (np.random.default_rng([seed, int(i)]) for i in ids)
+                vecs = (np.stack([r.random((2, dim)) for r in rngs]) - 0.5) / dim
+                w, wc = vecs[:, 0], vecs[:, 1]
+            zeros, ones, acc = np.zeros(n), np.ones(n), _lists(np.ones((n, dim)))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("id"), _lists(w), _lists(wc), zeros, zeros, acc, acc, ones, ones],
+                schema=_PARAMS_ARROW,
+            )
 
-    return vocab.select("id").mapInPandas(init, schema=_PARAMS_SCHEMA)
+    return vocab.select("id").mapInArrow(init, schema=_PARAMS_SCHEMA)
 
 
-def _grad_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _grad_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Per-pair gradients, partially aggregated per id within each
     Arrow batch. Emits (id, side 0=center/1=context, Σdvec, Σdbias)
     plus one loss row (id=-1) per batch carrying Σ ½·f(x)·diff²."""
-    for pdf in batches:
-        if pdf.empty:
+    for rb in batches:
+        if rb.num_rows == 0:
             continue
-        w = np.stack(pdf["w"].to_numpy())
-        wc = np.stack(pdf["wc"].to_numpy())
+        w = _matrix(rb.column("w"))
+        wc = _matrix(rb.column("wc"))
         diff = (
             (w * wc).sum(axis=1)
-            + pdf["b"].to_numpy()
-            + pdf["bc"].to_numpy()
-            - pdf["logx"].to_numpy()
+            + rb.column("b").to_numpy()
+            + rb.column("bc").to_numpy()
+            - rb.column("logx").to_numpy()
         )
-        fd = pdf["fx"].to_numpy() * diff
+        fd = rb.column("fx").to_numpy() * diff
         loss = 0.5 * float((fd * diff).sum())
-        out: dict[str, list] = {
-            "id": [], "side": [], "dvec": [], "dbias": [], "dn": []
-        }
-        for side, ids, grads in (
-            (0, pdf["i"].to_numpy(), fd[:, None] * wc),
-            (1, pdf["j"].to_numpy(), fd[:, None] * w),
-        ):
-            uniq, inv = np.unique(ids, return_inverse=True)
+        ids, sides, dvecs, dbias, dn = [], [], [], [], []
+        for side, col, grads in ((0, "i", fd[:, None] * wc), (1, "j", fd[:, None] * w)):
+            uniq, inv = np.unique(rb.column(col).to_numpy(), return_inverse=True)
             acc = np.zeros((len(uniq), grads.shape[1]))
             np.add.at(acc, inv, grads)
             bacc = np.zeros(len(uniq))
             np.add.at(bacc, inv, fd)
             nacc = np.zeros(len(uniq), dtype=np.int64)
             np.add.at(nacc, inv, 1)
-            out["id"].extend(int(u) for u in uniq)
-            out["side"].extend([side] * len(uniq))
-            out["dvec"].extend(list(acc))
-            out["dbias"].extend(bacc.tolist())
-            out["dn"].extend(nacc.tolist())
-        out["id"].append(-1)
-        out["side"].append(-1)
-        out["dvec"].append(None)
-        out["dbias"].append(loss)
-        out["dn"].append(0)
-        yield pd.DataFrame(out)
+            ids.append(uniq)
+            sides.append(np.full(len(uniq), side, dtype=np.int32))
+            dvecs.append(acc)
+            dbias.append(bacc)
+            dn.append(nacc)
+        yield pa.RecordBatch.from_arrays(
+            [
+                np.concatenate([*ids, [-1]]),
+                np.concatenate([*sides, np.array([-1], dtype=np.int32)]),
+                _lists(np.concatenate(dvecs), loss_row=True),
+                np.concatenate([*dbias, [loss]]),
+                np.concatenate([*dn, [0]]),
+            ],
+            names=["id", "side", "dvec", "dbias", "dn"],
+        )
 
 
 def _make_step_kernel(eta: float):
     """Fused merge + AdaGrad step for one id-block (cogrouped
-    applyInPandas: partial gradients on the left, current params on the
+    applyInArrow: partial gradients on the left, current params on the
     right, both grouped by pmod(id, blocks)).
 
     One Python pass replaces the former three-stage tail (merge kernel →
@@ -388,44 +408,45 @@ def _make_step_kernel(eta: float):
     result instead of running a second aggregation job over gradients.
     """
 
-    def step(
-        _key: tuple, grads: pd.DataFrame, params: pd.DataFrame
-    ) -> pd.DataFrame:
-        frames = []
-        loss_rows = grads[grads["side"] == -1] if len(grads) else grads
-        if len(loss_rows):
-            frames.append(
-                pd.DataFrame(
+    def step(grads: pa.Table, params: pa.Table) -> pa.Table:
+        side = grads.column("side").to_numpy()
+        dbias = grads.column("dbias").to_numpy()
+        out = []
+        if (side == -1).any():
+            out.append(
+                pa.table(
                     {
                         "id": [-1], "w": [None], "wc": [None],
-                        "b": [float(loss_rows["dbias"].sum())], "bc": [0.0],
+                        "b": [float(dbias[side == -1].sum())], "bc": [0.0],
                         "gw": [None], "gwc": [None], "gb": [0.0], "gbc": [0.0],
-                    }
+                    },
+                    schema=_PARAMS_ARROW,
                 )
             )
-        if len(params):
-            params = params.reset_index(drop=True)
-            n = len(params)
-            W = np.stack(params["w"].to_numpy()).astype(np.float64)
-            WC = np.stack(params["wc"].to_numpy()).astype(np.float64)
-            GW = np.stack(params["gw"].to_numpy()).astype(np.float64)
-            GWC = np.stack(params["gwc"].to_numpy()).astype(np.float64)
-            b = params["b"].to_numpy(dtype=np.float64).copy()
-            bc = params["bc"].to_numpy(dtype=np.float64).copy()
-            gb = params["gb"].to_numpy(dtype=np.float64).copy()
-            gbc = params["gbc"].to_numpy(dtype=np.float64).copy()
+        if params.num_rows:
+            pid = params.column("id").to_numpy()
+            W = _matrix(params.column("w")).copy()
+            WC = _matrix(params.column("wc")).copy()
+            GW = _matrix(params.column("gw")).copy()
+            GWC = _matrix(params.column("gwc")).copy()
+            b = params.column("b").to_numpy().copy()
+            bc = params.column("bc").to_numpy().copy()
+            gb = params.column("gb").to_numpy().copy()
+            gbc = params.column("gbc").to_numpy().copy()
 
-            real = grads[grads["side"] >= 0] if len(grads) else grads
-            if len(real):
-                dim = W.shape[1]
+            real = side >= 0
+            if real.any():
+                n, dim = W.shape
                 # position of each partial-gradient row in the params
-                # block (vectorized; every grad id is in this block by
-                # construction — same pmod key on both cogroup sides)
-                pos = pd.Index(params["id"]).get_indexer(real["id"])
-                side = real["side"].to_numpy()
-                dvec = np.stack(real["dvec"].to_numpy()).astype(np.float64)
-                dbias = real["dbias"].to_numpy(dtype=np.float64)
-                dn = real["dn"].to_numpy(dtype=np.float64)
+                # block (every grad id is in this block by construction
+                # — same pmod key on both cogroup sides)
+                order = np.argsort(pid)
+                gid = grads.column("id").to_numpy()[real]
+                pos = order[np.searchsorted(pid, gid, sorter=order)]
+                side = side[real]
+                dvec = _matrix(grads.column("dvec").filter(pa.array(real)))
+                dbias = dbias[real]
+                dn = grads.column("dn").to_numpy()[real].astype(np.float64)
                 for s, V, GV, bias, gbias in (
                     (0, W, GW, b, gb),
                     (1, WC, GWC, bc, gbc),
@@ -446,22 +467,28 @@ def _make_step_kernel(eta: float):
                         GV[m] = GV[m] + dv * dv
                         bias[m] = bias[m] - eta * db / np.sqrt(gbias[m])
                         gbias[m] = gbias[m] + db * db
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "id": params["id"].to_numpy(),
-                        "w": list(W), "wc": list(WC), "b": b, "bc": bc,
-                        "gw": list(GW), "gwc": list(GWC), "gb": gb, "gbc": gbc,
-                    }
+            out.append(
+                pa.Table.from_arrays(
+                    [
+                        pid, _lists(W), _lists(WC), b, bc,
+                        _lists(GW), _lists(GWC), gb, gbc,
+                    ],
+                    schema=_PARAMS_ARROW,
                 )
             )
-        if not frames:
-            return pd.DataFrame(
-                columns=["id", "w", "wc", "b", "bc", "gw", "gwc", "gb", "gbc"]
-            )
-        return pd.concat(frames, ignore_index=True)
+        return pa.concat_tables(out) if out else _PARAMS_ARROW.empty_table()
 
     return step
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop a ``localCheckpoint`` frame's cache AND its checkpointed
+    RDD; ``DataFrame.unpersist`` alone leaves the RDD's blocks
+    persisted for the life of the session."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 class Glove:
@@ -535,7 +562,7 @@ class Glove:
         losses: list[float] = []
         step_kernel = _make_step_kernel(cfg.eta)
         blk = F.pmod(F.col("id"), F.lit(blocks)).alias("blk")
-        prev_cached: DataFrame | None = None
+        held = params  # the checkpointed frame ``params`` reads
 
         for _ in range(cfg.iterations):
             center = params.select(
@@ -549,7 +576,7 @@ class Glove:
             if broadcast_params:
                 context = F.broadcast(context)
             joined = x.join(center, "i").join(context, "j")
-            grads = joined.mapInPandas(_grad_kernel, schema=_GRADS_SCHEMA)
+            grads = joined.mapInArrow(_grad_kernel, schema=_GRADS_SCHEMA)
             # One job per iteration: partial gradients cogroup with the
             # current params by id-block, and the fused kernel merges +
             # steps in a single Python pass. The id = −1 rows carry the
@@ -568,7 +595,7 @@ class Glove:
             stepped = (
                 grads.groupBy(blk)
                 .cogroup(params.groupBy(blk))
-                .applyInPandas(step_kernel, schema=_PARAMS_SCHEMA)
+                .applyInArrow(step_kernel, schema=_PARAMS_SCHEMA)
                 # lazy checkpoint: the loss collect below is this
                 # iteration's first action and materializes the
                 # checkpoint AND the persist in ONE job — the former
@@ -587,9 +614,10 @@ class Glove:
             )
             losses.append(float(loss))
             params = stepped.where(F.col("id") >= 0)
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = stepped
+            # stepped is materialized and cut from its lineage, so the
+            # previous iteration's checkpoint is no longer read
+            _release_checkpoint(held)
+            held = stepped
 
         vectors = params.join(vocab, "id").select(
             "word",

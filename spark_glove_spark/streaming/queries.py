@@ -240,10 +240,9 @@ def i5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean batch aggregate — which is the oracle. (countDistinct is
     unsupported on streams — the dedup itself plays that role.)"""
     import os
-    import tempfile
 
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="i5_replay_")
+    base = deferred_tempdir("i5_replay_")
     e.coalesce(1).write.mode("overwrite").parquet(os.path.join(base, "f1"))
     e.orderBy("event_id").limit(50).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base, "f2")
@@ -304,10 +303,9 @@ def i6_stateful_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries across batches. Each batch emits the running state; the
     final emission per user equals the batch aggregate (the oracle)."""
     import os
-    import tempfile
 
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="i6_replay_")
+    base = deferred_tempdir("i6_replay_")
     # one write job producing 4 part-files; maxFilesPerTrigger=1 then
     # replays them as 4 micro-batches (batch order is irrelevant: the
     # running state is a commutative fold — counts, sums, max).
@@ -644,11 +642,10 @@ def i13_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-counts nothing, regardless of where the cut landed.
     """
     import os
-    import tempfile
     import time
     import uuid
 
-    tmp = tempfile.mkdtemp(prefix="sgs_i13_")
+    tmp = deferred_tempdir("sgs_i13_")
     data = os.path.join(tmp, "data")
     ckpt = os.path.join(tmp, "ckpt")
     ev = table(spark, sf_dir, "events").select(
@@ -756,10 +753,9 @@ def i14_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked, not rows-only.
     """
     import os
-    import tempfile
 
     d = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="i14_replay_")
+    base = deferred_tempdir("i14_replay_")
     d.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "f1"))
@@ -886,11 +882,10 @@ def stateful_ttl_stream(
     ``n_batches`` micro-batches through the TTL state kernel; returns
     every per-batch emission (callers pick the final row per user)."""
     import os
-    import tempfile
 
     if src_dir is None:
         e = table(spark, sf_dir, "events")
-        base = tempfile.mkdtemp(prefix="i15_replay_")
+        base = deferred_tempdir("i15_replay_")
         src_dir = os.path.join(base, "f")
         e.repartition(n_batches).write.mode("overwrite").parquet(src_dir)
     sdf = (
@@ -1029,10 +1024,9 @@ def i16_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     within minutes, never days, so a horizon-bounded state store
     handles unbounded keyspaces in O(horizon-rate) memory."""
     import os
-    import tempfile
 
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="i16_replay_")
+    base = deferred_tempdir("i16_replay_")
     e.coalesce(1).write.mode("overwrite").parquet(os.path.join(base, "f1"))
     e.orderBy("event_id").limit(50).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(base, "f2")

@@ -8,6 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spark_glove_spark.glove.trainer import (
+    GloveConfig,
+    build_cooccurrence,
+    build_vocabulary,
+)
 from spark_glove_spark.operators.cooccurrence import (
     cooccurrence_counts_by_distance,
     cooccurrence_matrix,
@@ -114,3 +119,16 @@ def test_degenerate_documents_are_clean(spark):
     assert all(w != "" for pair in rows for w in pair), f"empty tokens: {rows}"
     # doc 5 collapses to [a, b] -> one d=1 pair on top of doc 1's pairs
     assert rows[("a", "b")] == 2.0
+
+
+def test_symmetric_x_generates_pairs_once(spark, tiny_docs):
+    """GloVe's symmetric X mirrors each aggregated cell in one explode,
+    so its plan tokenizes, generates forward pairs and shuffles them
+    by pair key once, not once per mirrored branch."""
+    cfg = GloveConfig(window=2, min_count=1)
+    x = build_cooccurrence(tiny_docs, build_vocabulary(tiny_docs, cfg), cfg)
+    plan = x._jdf.queryExecution().executedPlan().toString().splitlines()
+    generates = [line for line in plan if "Generate " in line]
+    assert sum("posexplode(" in line for line in generates) == 1, plan
+    assert sum("element_at(tokens" in line for line in generates) == 1, plan
+    assert sum("Exchange hashpartitioning(wi" in line for line in plan) == 1, plan

@@ -311,3 +311,19 @@ def test_warmstart_continuation_equals_uninterrupted(spark, docs):
         .collect()[0]["g"]
     )
     assert some > 1.0, "carried words lost their AdaGrad accumulators"
+
+
+def test_fit_releases_superseded_checkpoints(spark, docs):
+    """Each iteration checkpoints its parameters; once the next one is
+    materialized the old checkpoint must be released, so what a fit
+    leaves persisted (only what the returned model reads) does not grow
+    with ``iterations``. Counted by RDD id, so RDDs freed meanwhile from
+    earlier tests cannot mask a leak."""
+    jsc = spark.sparkContext._jsc
+
+    def held_after(iterations: int) -> int:
+        before = set(jsc.getPersistentRDDs().keySet())
+        Glove(iterations=iterations, **CFG).fit(docs)
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    assert held_after(2) == held_after(5) <= 2

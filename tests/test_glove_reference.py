@@ -13,6 +13,9 @@ around 1e-12 over 8 iterations — asserted at 1e-9.
 
 from __future__ import annotations
 
+import math
+from collections import Counter, defaultdict
+
 import numpy as np
 import pytest
 
@@ -118,3 +121,42 @@ def test_distributed_fit_matches_numpy_reference(spark, corpus):
             got[wid], ref_vectors[wid], atol=1e-9,
             err_msg=f"vector mismatch for word id {wid}",
         )
+
+
+def test_cooccurrence_matches_python_bruteforce(spark, corpus):
+    """X from ``build_cooccurrence`` against a pure-Python build over
+    the same corpus (vocabulary, windowed 1/d counts, mirroring, ln x
+    and f(x) all recomputed here, none of it read back from Spark):
+    both directions off the diagonal, 2x on it."""
+    cfg = GloveConfig(**CFG)
+    texts = [r.text for r in corpus.orderBy("doc_id").collect()]
+    freq = Counter(t for text in texts for t in text.split())
+    kept = sorted(
+        (w for w, c in freq.items() if c >= cfg.min_count),
+        key=lambda w: (-freq[w], w),
+    )
+    ids = {w: k for k, w in enumerate(kept)}
+    canon: dict = defaultdict(float)
+    for text in texts:
+        toks = text.split()
+        for p in range(len(toks)):
+            for q in range(p + 1, min(p + cfg.window, len(toks) - 1) + 1):
+                if toks[p] in ids and toks[q] in ids:
+                    canon[tuple(sorted((ids[toks[p]], ids[toks[q]])))] += 1.0 / (q - p)
+    expected = {}
+    for (i, j), x in canon.items():
+        if i == j:
+            expected[(i, i)] = 2 * x
+        else:
+            expected[(i, j)] = expected[(j, i)] = x
+
+    got = build_cooccurrence(corpus, build_vocabulary(corpus, cfg), cfg).collect()
+    assert len(got) == len({(r.i, r.j) for r in got}), "duplicate X cells"
+    assert {(r.i, r.j) for r in got} == set(expected)
+    assert any(i == j for i, j in expected), "fixture has no diagonal cell"
+    for r in got:
+        x = expected[(r.i, r.j)]
+        fx = min(x / cfg.x_max, 1.0) ** cfg.alpha
+        assert abs(r.x - x) < 1e-12, (r.i, r.j, r.x, x)
+        assert abs(r.logx - math.log(x)) < 1e-12, (r.i, r.j, r.logx)
+        assert abs(r.fx - fx) < 1e-12, (r.i, r.j, r.fx, fx)

@@ -11,6 +11,14 @@ giving the r15 A/Bs a rung where strategy and core count move the
 needle. Probe-only artifact under /tmp — never read by bench.py or any
 declared query.
 
+Document text is salted per copy: copy 0 keeps each text verbatim and
+copy r > 0 reorders its tokens by a hash of (token, position, r). A
+verbatim copy would give every document 9 exact clones, and the dedup
+stages of the curate lanes would drop ~90% of the rung. Reordering
+keeps each document's tokens, length and stopword ratio (so quality
+filters pass the same documents), keeps exact and near duplicates
+inside a copy, and shares almost no shingles across copies.
+
 Usage: python tools/mk10x_r15.py [sf_dir] [out_dir]
 """
 
@@ -40,6 +48,19 @@ OFFSETS = {
     "customer": ["c_custkey"],
 }
 STRIDE = 1_000_000_000
+# table -> text columns salted per copy (see module docstring)
+SALTED = {"documents": ["text"]}
+
+
+def salted(text, rep):
+    """``text`` with its space-separated tokens reordered by
+    xxhash64(token, position, rep); copy 0 verbatim."""
+    keyed = F.transform(
+        F.split(text, " "),
+        lambda t, i: F.struct(F.xxhash64(t, i, rep).alias("k"), t.alias("t")),
+    )
+    shuffled = F.array_join(F.transform(F.array_sort(keyed), lambda s: s["t"]), " ")
+    return F.when(rep == 0, text).otherwise(shuffled)
 
 
 def main() -> None:
@@ -59,12 +80,16 @@ def main() -> None:
             print(f"copied {name}")
             continue
         reps = df.crossJoin(spark.range(10).select(F.col("id").alias("rep")))
-        cols = [
-            (F.col(c) + F.col("rep") * STRIDE).alias(c)
-            if c in keys
-            else F.col(c)
-            for c in df.columns
-        ]
+        rep = F.col("rep")
+
+        def copy(c: str):
+            if c in keys:
+                return (F.col(c) + rep * STRIDE).alias(c)
+            if c in SALTED.get(name, ()):
+                return salted(F.col(c), rep).alias(c)
+            return F.col(c)
+
+        cols = [copy(c) for c in df.columns]
         reps.select(*cols).repartition(32).write.mode("overwrite").parquet(dst)
         print(f"replicated {name} 10x")
     spark.stop()

@@ -3,13 +3,13 @@
 The trainer's fused merge+AdaGrad step cogroups partial gradients with
 params by ``pmod(id, blocks)`` — a FEW LARGE groups — instead of the
 naive per-word grouping. SURVEY §4.3.4 claims that is what keeps
-applyInPandas viable at a 400k-word vocab; this probe MEASURES the
+applyInArrow viable at a 400k-word vocab; this probe MEASURES the
 claim instead of asserting it: one fused step over a synthetic
 gradient/param set at vocab V and 10·V, per-word groups vs 32 hash
 blocks, warm min-of-2 wall-clock plus the max params-group size.
 
 Why the two strategies diverge: per-word grouping pays the fixed
-Python/Arrow per-group cost (serialize key, build two pandas frames,
+Python/Arrow per-group cost (serialize key, build two Arrow tables,
 call the kernel) VOCAB times per iteration — the numerator scales with
 V while every group stays 1-param-row tiny. Hash blocks hold the group
 count at ``blocks`` regardless of V; each kernel call is one
@@ -95,7 +95,7 @@ def _run(params, grads, key_expr) -> tuple[float, int]:
         out = (
             grads.groupBy(key_expr.alias("blk"))
             .cogroup(params.groupBy(key_expr.alias("blk")))
-            .applyInPandas(kernel, schema=_PARAMS_SCHEMA)
+            .applyInArrow(kernel, schema=_PARAMS_SCHEMA)
         )
         n = out.count()
         best = min(best, time.time() - t0)
