@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spark_glove_spark.registry import query
+from spark_glove_spark.registry import deferred_tempdir, query
 from spark_glove_spark.sources import scalar_bounds, table
 
 # SCD2 open-row convention: the current row's validity ends at a
@@ -1237,12 +1237,11 @@ def a18_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the log entries are KB-sized JSON regardless of data
     volume; commits move metadata, not data — the property that makes
     lakehouse mutation O(changed files)."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="sgs_txlog_")
+    path = deferred_tempdir("sgs_txlog_")
     base = o.select(
         "o_orderkey",
         F.col("o_totalprice").alias("price"),
@@ -1340,14 +1339,13 @@ def a19_txlog_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tests/test_txlog.py pins the mechanism on crafted disjoint
     ranges; this query proves it on fixture data end to end."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a19_") + "/t"
+    path = deferred_tempdir("sgs_a19_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     # band = the bottom eighth of the key space, derived from the data
     # so the prune ratio holds at every SF (a fixed band emptied out at
@@ -1392,12 +1390,11 @@ def a20_txlog_string_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual filter makes the cut exact — the oracle compares against
     a plain full-scan filter. Temporal keys ride the same path as
     ISO-8601 strings (tests/test_txlog.py pins both)."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     p = table(spark, sf_dir, "part").select("p_name", "p_retailprice")
-    path = tempfile.mkdtemp(prefix="sgs_a20_") + "/t"
+    path = deferred_tempdir("sgs_a20_") + "/t"
     txlog.create(p.repartitionByRange(8, "p_name"), path)
     kept, total = txlog.prune_files(path, "p_name", "a", "g")
     # load-bearing invariant — explicit raise so it survives python -O
@@ -1444,14 +1441,13 @@ def a21_txlog_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: delete cost is O(matching files), not O(table) — the
     stats tier drops non-intersecting files for free, and untouched
     files carry over by log reference."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a21_") + "/t"
+    path = deferred_tempdir("sgs_a21_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     n_before = txlog.read(spark, path).count()
     hi = int(o.agg(F.floor(F.max("o_orderkey") / 8.0)).collect()[0][0])
@@ -1510,7 +1506,6 @@ def a22_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     change sets are small and key-local, so merge cost is O(touched
     files) + one broadcast of the change keys, while f8's plain
     full-outer join would rewrite the world every batch."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -1520,7 +1515,7 @@ def a22_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("price"),
         F.lit("base").alias("src"),
     )
-    path = tempfile.mkdtemp(prefix="sgs_a22_") + "/t"
+    path = deferred_tempdir("sgs_a22_") + "/t"
     txlog.create(base.repartitionByRange(8, "o_orderkey"), path)
     n_before = txlog.read(spark, path).count()
     hi = int(o.agg(F.floor(F.max("o_orderkey") / 4.0)).collect()[0][0])
@@ -1593,7 +1588,6 @@ def a23_txlog_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: Z-order is the data-layout lever for multi-dimension
     workloads — one clustering pass makes every future selective read
     skip on any clustered column, paid once at OPTIMIZE time."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -1605,7 +1599,7 @@ def a23_txlog_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("days"),
     )
-    path = tempfile.mkdtemp(prefix="sgs_a23_") + "/t"
+    path = deferred_tempdir("sgs_a23_") + "/t"
     txlog.create(o.repartition(8), path)
     # quarter bands anchored at each dimension's MIN (a zero-anchored
     # band can miss the data range entirely — the fixture's dates
@@ -1672,13 +1666,12 @@ def a24_txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: schema changes are one log entry — no data rewrite; old
     files are never touched and read as null in the new column, which
     is exactly Delta/Iceberg's additive-evolution contract."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    path = tempfile.mkdtemp(prefix="sgs_a24_") + "/t"
+    path = deferred_tempdir("sgs_a24_") + "/t"
     txlog.create(
         o.where(k % 2 == 0).select("o_orderkey", "o_totalprice"), path
     )
@@ -1751,14 +1744,13 @@ def a25_txlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: this is the generic CDC recovery path when only the table
     history exists — cost bounded by touched files per commit; live
     pipelines should prefer the version-offset stream (i18)."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     base = o.select(k.alias("k"), F.col("o_totalprice").alias("price"))
-    path = tempfile.mkdtemp(prefix="sgs_a25_") + "/t"
+    path = deferred_tempdir("sgs_a25_") + "/t"
     txlog.create(base.repartitionByRange(8, "k"), path)  # v0
     h8, h4 = scalar_bounds(base, "k", 8, 4)  # one agg job for both
     adj = base.where(F.col("k") % 7 == 3).select(
@@ -1832,14 +1824,13 @@ def a26_txlog_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer bands, blooms answer equality on high-cardinality keys
     (user_id, order_id, URL hash), the dominant lookup shape for
     serving and debugging jobs over a lake table."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a26_") + "/t"
+    path = deferred_tempdir("sgs_a26_") + "/t"
     txlog.create(
         o.repartition(8, "o_orderkey"), path, bloom_columns=("o_orderkey",)
     )
@@ -1911,14 +1902,13 @@ def a27_txlog_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: UPDATE cost is O(matching files); the SET expression runs
     inside codegen during the rewrite — no row-at-a-time path."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a27_") + "/t"
+    path = deferred_tempdir("sgs_a27_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     n_before = txlog.read(spark, path).count()
     h8 = int(o.agg(F.floor(F.max("o_orderkey") / 8.0)).collect()[0][0])
@@ -1973,14 +1963,13 @@ def a28_txlog_deletion_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(touched file bytes) — the point-delete/GDPR shape; bulk deletes
     stay on the COW path (a21), and purge/OPTIMIZE re-materializes
     when the read-side anti-join has paid for itself."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a28_") + "/t"
+    path = deferred_tempdir("sgs_a28_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     n_before = txlog.read(spark, path).count()
     files_before = txlog.snapshot_files(path)
@@ -2034,14 +2023,13 @@ def a29_txlog_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     write amplification; purge flips the trade once the table is
     read-hot — the standard lakehouse maintenance rhythm (delete
     cheap now, localize on schedule)."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a29_") + "/t"
+    path = deferred_tempdir("sgs_a29_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     res = txlog.delete_mor(spark, path, "o_orderkey % 61 = 7")
     agg = lambda df, stage: df.agg(  # noqa: E731
@@ -2091,14 +2079,13 @@ def a30_txlog_concurrent_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
     concurrently; aborting every delete because an append won the
     version race serializes the whole write path — reconciliation is
     what makes optimistic concurrency usable under load."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    path = tempfile.mkdtemp(prefix="sgs_a30_") + "/t"
+    path = deferred_tempdir("sgs_a30_") + "/t"
     txlog.create(o.repartitionByRange(8, "o_orderkey"), path)
     hi = int(o.agg(F.floor(F.max("o_orderkey") / 8.0)).collect()[0][0])
     appended = o.where(F.col("o_orderkey") % 13 == 5).select(
@@ -2194,7 +2181,6 @@ def a31_txlog_cas_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: this is the seam that makes the format real off a POSIX
     disk — commit safety reduces to ONE conditional put per version,
     and ambiguity resolution is a read-back compare, never a lock."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -2205,7 +2191,7 @@ def a31_txlog_cas_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = lambda m, src: o.where(k % 11 == m).select(  # noqa: E731
         "o_orderkey", "o_totalprice", F.lit(src).alias("src")
     ).coalesce(1)
-    path = tempfile.mkdtemp(prefix="sgs_a31_") + "/t"
+    path = deferred_tempdir("sgs_a31_") + "/t"
     b = txlog.CASCommitBackend()
     with txlog.use_backend(b):
         txlog.create(
@@ -2268,12 +2254,11 @@ def a32_txlog_dv_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     change cost bounded by each commit's touched files + vector
     sizes, so a downstream replica follows a point-delete stream
     without ever diffing the full table."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="sgs_a32_") + "/t"
+    path = deferred_tempdir("sgs_a32_") + "/t"
     txlog.create(o.repartitionByRange(4, "o_orderkey"), path)      # v0
     txlog.delete_mor(spark, path, "o_orderkey % 7 = 0")            # v1
     appended = o.where(F.col("o_orderkey") % 13 == 5).select(
@@ -2333,13 +2318,12 @@ def a33_txlog_pinned_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a table under continuous OPTIMIZE — the pin is one tiny
     durable marker, never a copy of the data."""
     import os as _os
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     k = F.col("o_orderkey")
-    path = tempfile.mkdtemp(prefix="sgs_a33_") + "/t"
+    path = deferred_tempdir("sgs_a33_") + "/t"
     txlog.create(
         o.where(k % 5 == 0).repartitionByRange(4, "o_orderkey"), path
     )                                                               # v0
@@ -2400,12 +2384,11 @@ def a34_txlog_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (i17 gives atomic per-epoch commits; this gives replay safety) —
     a restarted 1000-executor streaming job re-running its last epoch
     costs one watermark read, not a dedup pass over the table."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    path = tempfile.mkdtemp(prefix="sgs_a34_") + "/t"
+    path = deferred_tempdir("sgs_a34_") + "/t"
     epochs = [
         e.where(F.col("event_id") % 3 == m).coalesce(2) for m in range(3)
     ]
@@ -2483,14 +2466,13 @@ def pipeline_mor_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle point is that they compose without rewriting the world
     — total write amplification here is touched-files + one
     compaction, never n_stages × table."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sgs_mor_") + "/t"
+    path = deferred_tempdir("sgs_mor_") + "/t"
     txlog.create(o.repartitionByRange(4, "o_orderkey"), path)
     appended = o.where(F.col("o_orderkey") % 13 == 5).select(
         (F.col("o_orderkey") + 500000000).alias("o_orderkey"),

@@ -18,7 +18,6 @@ tradeoff is the point of ANN, not exactness.
 from __future__ import annotations
 
 import math
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,12 +28,7 @@ from spark_glove_spark.functions.vector import (
     lit_double_array,
     lit_long_array,
 )
-from spark_glove_spark.registry import (
-    defer_cleanup,
-    defer_unpersist,
-    deferred_tempdir,
-    query,
-)
+from spark_glove_spark.registry import defer_unpersist, deferred_tempdir, query
 from spark_glove_spark.sources import parallelized, table
 
 DIM = 64
@@ -346,8 +340,9 @@ def _centroid_literals(centers) -> Column:
 _IVF_LITERAL_MAX = 64  # widest centroid set the literal/codegen paths
 # carry well: the assign argmin inlines n_lists × dim float literals
 # into ONE expression, and past ~64 lists codegen cost grows faster
-# than the work it fuses (measured, tools/scaleprobe_ivflaw_r14.py:
-# a 447-list assign over 200k rows read 127 s as a literal expression
+# than the work it fuses (measured, PLANS.md "Round-14: IVF list/probe
+# schedule + the wide-index build path", script at `1354c56`: a
+# 447-list assign over 200k rows read 127 s as a literal expression
 # vs seconds as the Arrow-batched numpy kernel below)
 
 
@@ -620,18 +615,14 @@ def h16_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the corpus. Rows-only to the driver (k-means cells are
     model-specific); tests pin result EQUALITY with the in-memory
     ivf_knn at the same seed plus the partition-pruned plan shape."""
-    import shutil
-    import tempfile
-
     e = table(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    path = tempfile.mkdtemp(prefix="ivf_index_")
-    # reclaim the on-disk index at the next declared query (the
+    # the on-disk index is reclaimed at the next declared query (the
     # defer_unpersist safe point) instead of leaking a corpus-sized
     # directory per invocation (r10 review finding)
-    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    path = deferred_tempdir("ivf_index_")
     ivf_build_index(e, path, n_lists=10, seed=42)
     res = ivf_probe_index(spark, path, probes, k=10, n_probe=3)
     # materialize the ≤ k×probes result rows NOW so the returned
@@ -2964,16 +2955,12 @@ def _bq_pack(base: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def _bq_scored(
-    spark: SparkSession, sf_dir: str, probe_pred: Column | None = None
-) -> DataFrame:
+def _bq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BQ search up to the ranked rerank: (probe_id, vec_id,
     hamming, num, cos_raw, rn). Shared by h16_bq_portable and
-    h15_retrieval_metrics; ``probe_pred`` overrides the declared
-    probe predicate so the scale probe can PIN the probe set while
-    the corpus grows (tools/scaleprobe_vec_r11.py)."""
+    h15_retrieval_metrics."""
     packed, vecs = _bq_packed(spark, sf_dir)
-    return _bq_search(packed, vecs, probe_pred)
+    return _bq_search(packed, vecs)
 
 
 def _bq_search(
@@ -3219,7 +3206,8 @@ _NB_CHUNK = 128  # per-bucket candidate bound: buckets split into
 # the bound that keeps edge-build ~ n*chunk on SKEWED (clustered)
 # data, where planes ~ log n alone cannot thin hot buckets
 # (measured: sum occ^2 grew 134x on a 30x realistic-growth corpus,
-# max occupancy 20x the mean; see tools/scaleprobe_vec_r11.py)
+# max occupancy 20x the mean; see PLANS.md "Round-11 tail: 10x/30x
+# probe for BQ + NSW", script at `1354c56`)
 _NB_BEAM = 12  # beam width
 _NB_HOPS = 5  # expansion rounds
 _NB_TOPK = 3
@@ -3246,8 +3234,9 @@ def _nb_oracle(deleted: str | None = None) -> str:
     predicate template over a vec_id column (``"{col} % 10 = 3"``)
     marking tombstoned nodes: excluded from the probe set and the
     final ranked results but NOT from the graph or the beam — the
-    exact routing-node semantics _nsw_search(tombstones=...)
-    implements, expressed over the FULL corpus's edges."""
+    exact routing-node semantics h16_nsw_deletes serves from
+    _nsw_search's ``captured`` frontier, expressed over the FULL
+    corpus's edges."""
     probe_excl = (
         f" AND NOT ({deleted.format(col='vec_id')})" if deleted else ""
     )
@@ -3484,27 +3473,15 @@ def _nsw_search(
     spark: SparkSession,
     sf_dir: str,
     *,
-    n_planes: int | None = None,
-    deg: int = _NB_DEG,
-    beam: int | None = None,
-    hops: int | None = None,
     topk: int = _NB_TOPK,
-    chunk: int = _NB_CHUNK,
-    probe_pred: Column | None = None,
-    timings: dict | None = None,
     edges_in: DataFrame | None = None,
     graph_pred: Column | None = None,
-    tombstones: DataFrame | None = None,
     captured: dict | None = None,
     base_in: DataFrame | None = None,
 ) -> DataFrame:
-    """The NSW build+search pipeline behind h16_nsw_portable, with the
-    graph/beam knobs exposed so the scale probe can PIN the probe set
-    and grow n_planes ~ log2(n) as the corpus grows (bucket occupancy
-    constant -> edge-build pairs per node constant), the same knob
-    discipline as IVF's n_lists ~ sqrt(n). ``timings`` (optional)
-    receives build_s — the eager graph-build wall — so the probe can
-    split build from search.
+    """The NSW build+search pipeline behind h16_nsw_portable. The hash
+    width, beam and hops derive from corpus size
+    (:func:`hnsw_plane_schedule`, :func:`nsw_search_schedule`).
 
     ``edges_in`` (h16_nsw_persisted) serves the SAME beam search from
     a pre-built adjacency table — a txlog snapshot — instead of
@@ -3513,12 +3490,9 @@ def _nsw_search(
     (its corpus watermark), since an entry node absent from the edge
     table would strand the beam.
 
-    ``tombstones`` (h16_nsw_deletes) is a (vec_id) frame of logically
-    DELETED nodes: excluded from the probe set and from the final
-    ranked results, but still present as ROUTING nodes in the beam
-    (the Lucene/Vespa deleted-doc semantics — edges through a
-    tombstone stay navigable until a rebuild/compaction physically
-    drops it, so deletes never disconnect the graph).
+    ``captured`` receives the last hop's scored frontier, the rank
+    window and the probe-norm frame, from which h16_nsw_deletes
+    derives its tombstone-filtered serving view.
 
     ``base_in`` (r14 optimization round): a caller-owned persisted
     (vec_id, qv, nn) frame — lanes that run several searches share
@@ -3526,9 +3500,7 @@ def _nsw_search(
     per call (the caller keeps unpersist responsibility). The frame
     is the exact expression this function would build, so results
     are bit-identical."""
-    if probe_pred is None:
-        probe_pred = F.col("vec_id") % 100 == 0
-    t0 = time.time()
+    probe_pred = F.col("vec_id") % 100 == 0
     zero = F.lit(0).cast("long")
     if base_in is None:
         e = parallelized(table(spark, sf_dir, "embeddings"))
@@ -3546,17 +3518,13 @@ def _nsw_search(
         )
     else:
         base = base_in
-    # knobs not pinned by the caller derive from corpus size (the r13
+    # plane width, beam and hops derive from corpus size (the r13
     # build-side plane law + the r14 search-side beam law; one count
     # on the persisted base frame) — the fixture SFs all land on the
     # authored constants, so oracle hashes are untouched
-    if n_planes is None or beam is None or hops is None:
-        n_rows = base.count()
-        if n_planes is None:
-            n_planes = hnsw_plane_schedule(n_rows)[0]
-        sched_beam, sched_hops = nsw_search_schedule(n_rows)
-        beam = sched_beam if beam is None else beam
-        hops = sched_hops if hops is None else hops
+    n_rows = base.count()
+    n_planes = hnsw_plane_schedule(n_rows)[0]
+    beam, hops = nsw_search_schedule(n_rows)
 
     # eager localCheckpoint, not persist: the edge lineage embeds
     # 2 x 4 x 64 hyperplane literals and the bucket self-joins, and the
@@ -3566,13 +3534,9 @@ def _nsw_search(
     # a0754c7 discipline; same non-replicated-blocks caveat, documented
     # there, acceptable for a bounded exhibit build)
     if edges_in is None:
-        edges = _nsw_edges(
-            base, n_planes=n_planes, deg=deg, chunk=chunk
-        ).localCheckpoint(eager=True)
+        edges = _nsw_edges(base, n_planes=n_planes).localCheckpoint(eager=True)
     else:
         edges = edges_in
-    if timings is not None:
-        timings["build_s"] = time.time() - t0
 
     # --- beam search: LSH-seeded warm start (each probe enters the
     # graph at the smallest vec_id sharing its table-0 bucket — the
@@ -3581,16 +3545,6 @@ def _nsw_search(
     probes = base.where(probe_pred).select(
         F.col("vec_id").alias("probe_id"), F.col("qv").alias("qp")
     )
-    ts = None
-    if tombstones is not None:
-        ts = F.broadcast(
-            tombstones.select(F.col("vec_id").alias("_ts_id")).distinct()
-        )
-        # a deleted user neither queries nor appears — drop doomed
-        # probes here; result exclusion happens at the final rank
-        probes = probes.join(
-            ts, probes["probe_id"] == ts["_ts_id"], "left_anti"
-        )
     tagged0 = base.select("vec_id", _nsw_bucket_col(0, n_planes).alias("bkt"))
     pb = tagged0.where(probe_pred).select(
         F.col("vec_id").alias("probe_id"), "bkt"
@@ -3650,13 +3604,9 @@ def _nsw_search(
         captured["scored"] = scored
         captured["np"] = np_
         captured["wb"] = wb
-    last = scored.where(F.col("node") != F.col("probe_id"))
-    if ts is not None:
-        # tombstoned nodes routed the beam but must never be RETURNED;
-        # excluding BEFORE the rank keeps k live results per probe
-        last = last.join(ts, last["node"] == ts["_ts_id"], "left_anti")
     final = (
-        last.withColumn("rn", F.row_number().over(wb))
+        scored.where(F.col("node") != F.col("probe_id"))
+        .withColumn("rn", F.row_number().over(wb))
         .where(F.col("rn") <= topk)
         .join(F.broadcast(np_), "probe_id")
     )
@@ -3777,7 +3727,8 @@ def _sched_decades(n_rows: int) -> int:
 def nsw_search_schedule(n_rows: int) -> tuple[int, int]:
     """(beam, hops) for the NSW beam search derived from corpus size —
     the r14 SEARCH-side law completing r13's build-side plane law.
-    Measured basis (tools/scaleprobe_beam_r14.py, PLANS.md r14): at
+    Measured basis (PLANS.md "Round-14: search-side beam law for graph
+    ANN", script at `1354c56`): at
     FIXED (beam 12, hops 5) recall falls 0.37 -> 0.27 -> 0.12 across
     the 1x/10x/100x ladder while the search wall FALLS — the graph's
     diameter grows ~log n, so the frontier needs one extra HOP per
@@ -3802,7 +3753,8 @@ def hnsw_search_schedule(
     one extra doubling): the descent's single global entry lands
     farther from the probe than NSW's per-probe LSH warm start once
     the upper layers sparsify, and base hops carry the recovery —
-    measured (tools/scaleprobe_hnswhops_r14.py): base beam 48 / hops
+    measured (PLANS.md "Round-14: search-side beam law for graph ANN",
+    script at `1354c56`): base beam 48 / hops
     7 reads 0.22 at 100x while beam 96 / hops 8 restores 0.37, the
     1x fixture's recall, at a FALLING wall (11.4 s vs 14.9 s at 1x).
     Grid-validated: (4,8,12) @1x = 0.38 (probe ran base hops 5; the
@@ -3844,7 +3796,8 @@ def ivf_list_schedule(n_rows: int) -> tuple[int, int]:
     _IVF_TRAIN_MAX_LISTS); n_probe ~ sqrt(n_lists), so the SCANNED
     FRACTION n_probe/n_lists falls toward ~4% at the width cap
     where the authored (8, 2) scans 25-30% of ANY corpus forever.
-    Measured basis: tools/scaleprobe_ivflaw_r14.py (PLANS.md r14).
+    Measured basis: PLANS.md "Round-14: IVF list/probe schedule + the
+    wide-index build path" (script at `1354c56`).
     Floors keep every test SF on the authored constants (all lanes
     additionally PIN their knobs explicitly, so oracle hashes
     cannot move)."""
@@ -4075,22 +4028,17 @@ def _hnsw_search(
     *,
     probe_pred: Column | None = None,
     hops: tuple[int, int, int] | None = None,
-    beams: tuple[int, int, int] | None = None,
     topk: int = _NB_TOPK,
-    chunk: int = _NB_CHUNK,
-    base_planes: int | None = None,
-    l1_planes: int | None = None,
-    l2_planes: int | None = None,
     edges_in: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     graph_pred: Column | None = None,
-    timings: dict | None = None,
     base_in: DataFrame | None = None,
 ) -> DataFrame:
-    """The layered build+descent pipeline behind h16_hnsw_portable,
-    with the hop/beam knobs exposed so the scale probe can PIN the
-    probe set and hold the DESCENT DEPTH constant while the corpus
-    grows — the property a layer hierarchy buys (log-depth entry)
-    measured directly. ``timings`` (optional) receives build_s.
+    """The layered build+descent pipeline behind h16_hnsw_portable.
+    Layer hash widths and beams derive from corpus size
+    (:func:`hnsw_plane_schedule`, :func:`hnsw_search_schedule`);
+    ``hops`` overrides the scheduled per-layer hops (the insert lane
+    connects new nodes with a shallower descent) and ``probe_pred``
+    the declared probe set.
 
     ``edges_in`` (h16_hnsw_persisted) serves the SAME descent from
     pre-built (edges0, edges1, edges2) adjacency frames — a txlog
@@ -4108,7 +4056,6 @@ def _hnsw_search(
     bit-identical."""
     if probe_pred is None:
         probe_pred = F.col("vec_id") % 100 == 0
-    t0 = time.time()
     zero = F.lit(0).cast("long")
     if base_in is None:
         e = parallelized(table(spark, sf_dir, "embeddings"))
@@ -4132,40 +4079,29 @@ def _hnsw_search(
     # the hyperplane-literal lineage exactly as in _nsw_search.
     l1 = F.col("vec_id") % _HN_L1_MOD == 0
     l2 = F.col("vec_id") % _HN_L2_MOD == 0
-    # knobs not pinned by the caller derive from corpus size (the r12
+    # beams, hops and plane widths derive from corpus size (the r12
     # descent/plane law for the build, the r14 search law for the
     # descent's beams/hops; one count on the persisted base frame) —
     # the fixture SFs all land on the authored constants
-    n_rows: int | None = None
-    if beams is None or hops is None:
-        n_rows = base.count()
-        sched_beams, sched_hops = hnsw_search_schedule(n_rows)
-        beams = sched_beams if beams is None else beams
-        hops = sched_hops if hops is None else hops
+    n_rows = base.count()
+    beams, sched_hops = hnsw_search_schedule(n_rows)
+    hops = sched_hops if hops is None else hops
     if edges_in is None:
-        if base_planes is None or l1_planes is None or l2_planes is None:
-            sb, s1, s2 = hnsw_plane_schedule(
-                base.count() if n_rows is None else n_rows
-            )
-            base_planes = sb if base_planes is None else base_planes
-            l1_planes = s1 if l1_planes is None else l1_planes
-            l2_planes = s2 if l2_planes is None else l2_planes
+        base_planes, l1_planes, l2_planes = hnsw_plane_schedule(n_rows)
         edges0 = (
-            _hn_edge_table(base, 0, base_planes, _NB_DEG, None, chunk)
-            .union(_hn_edge_table(base, 1, base_planes, _NB_DEG, None, chunk))
+            _hn_edge_table(base, 0, base_planes, _NB_DEG)
+            .union(_hn_edge_table(base, 1, base_planes, _NB_DEG))
             .distinct()
             .localCheckpoint(eager=True)
         )
         edges1 = _hn_edge_table(
-            base, _HN_T1, l1_planes, _HN_DEG_UP, l1, chunk
+            base, _HN_T1, l1_planes, _HN_DEG_UP, l1
         ).localCheckpoint(eager=True)
         edges2 = _hn_edge_table(
-            base, _HN_T2, l2_planes, _HN_DEG_UP, l2, chunk
+            base, _HN_T2, l2_planes, _HN_DEG_UP, l2
         ).localCheckpoint(eager=True)
     else:
         edges0, edges1, edges2 = edges_in
-    if timings is not None:
-        timings["build_s"] = time.time() - t0
 
     # --- descent: ONE global entry point (min vec_id of the top
     # layer — a bounded scalar agg, the HNSW top-of-hierarchy entry),
@@ -4675,10 +4611,10 @@ def h16_nsw_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the catalog — rewriting only the files that hold matches —
     making v1. Serving derives its tombstone set as *catalog v0
     EXCEPT catalog v1* (the log is the source of truth, not the
-    delete predicate) and runs :func:`_nsw_search` with
-    ``tombstones=``: doomed probes never enter, doomed nodes still
-    route the beam, and the final rank excludes them BEFORE top-k so
-    every surviving probe keeps k live results.
+    delete predicate) and filters the frontier :func:`_nsw_search`
+    returns through ``captured``: doomed probes are dropped, doomed
+    nodes still routed the beam, and the final rank excludes them
+    BEFORE top-k so every surviving probe keeps k live results.
 
     In-body teeth (explicit raises, survive -O): (1) the tombstone
     set is non-empty and exactly the committed delete's row count;

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_glove_spark.glove import Glove
-from spark_glove_spark.registry import query
+from spark_glove_spark.registry import deferred_tempdir, query
 from spark_glove_spark.sources import table
 
 _FIT_KW = dict(dim=8, window=5, min_count=5, iterations=3, seed=42, blocks=8)
@@ -225,7 +225,7 @@ def h6_export_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = Glove(
         dim=2, window=2, min_count=5, iterations=3, eta=0.2, init="grid"
     ).fit(table(spark, sf_dir, "documents"))
-    out = tempfile.mkdtemp(prefix="sgs_h6p_") + "/model"
+    out = deferred_tempdir("sgs_h6p_") + "/model"
     model.vectors.write.parquet(out)
     back = spark.read.parquet(out)
     return back.select(
@@ -395,37 +395,32 @@ def h5_glove_warmstart(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectories of both runs, equality visible in the rows. 100 TB:
     the state is one parquet table of vocab rows — resuming costs a
     read + one anti-join instead of re-training from scratch."""
-    import shutil
-
     docs = table(spark, sf_dir, "documents")
     cfg = dict(dim=2, window=2, min_count=5, eta=0.2, init="grid")
     full = Glove(iterations=4, **cfg).fit(docs)
     half = Glove(iterations=2, **cfg).fit(docs)
-    path = tempfile.mkdtemp(prefix="glove_warm_")
-    try:
-        half.state.write.mode("overwrite").parquet(os.path.join(path, "s"))
-        resumed = Glove(iterations=2, **cfg).fit(
-            docs, initial_state=spark.read.parquet(os.path.join(path, "s"))
+    path = deferred_tempdir("glove_warm_")
+    half.state.write.mode("overwrite").parquet(os.path.join(path, "s"))
+    resumed = Glove(iterations=2, **cfg).fit(
+        docs, initial_state=spark.read.parquet(os.path.join(path, "s"))
+    )
+    if [round(x, 9) for x in resumed.losses] != [
+        round(x, 9) for x in full.losses[2:]
+    ]:
+        raise AssertionError(
+            f"continuation diverged: {resumed.losses} vs "
+            f"{full.losses[2:]}"
         )
-        if [round(x, 9) for x in resumed.losses] != [
-            round(x, 9) for x in full.losses[2:]
-        ]:
-            raise AssertionError(
-                f"continuation diverged: {resumed.losses} vs "
-                f"{full.losses[2:]}"
-            )
-        fv = {
-            r["word"]: tuple(round(v, 9) for v in r["vector"])
-            for r in full.vectors.collect()
-        }
-        rv = {
-            r["word"]: tuple(round(v, 9) for v in r["vector"])
-            for r in resumed.vectors.collect()
-        }
-        if fv != rv:
-            raise AssertionError("warm-started vectors diverged from full run")
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    fv = {
+        r["word"]: tuple(round(v, 9) for v in r["vector"])
+        for r in full.vectors.collect()
+    }
+    rv = {
+        r["word"]: tuple(round(v, 9) for v in r["vector"])
+        for r in resumed.vectors.collect()
+    }
+    if fv != rv:
+        raise AssertionError("warm-started vectors diverged from full run")
     rows = [
         ("uninterrupted", i + 1, round(loss, 6))
         for i, loss in enumerate(full.losses)

@@ -18,15 +18,13 @@ must see few large groups, not many tiny ones (§4.3.4).
 
 from __future__ import annotations
 
-import tempfile
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_glove_spark.registry import defer_unpersist, query
+from spark_glove_spark.registry import defer_unpersist, deferred_tempdir, query
 from spark_glove_spark.sources import table, write_parquet
 
 
@@ -103,7 +101,7 @@ def a3_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("s_acctbal"), 2).alias("total_bal"),
         )
     )
-    out = tempfile.mkdtemp(prefix="sgs_a3_")
+    out = deferred_tempdir("sgs_a3_")
     write_parquet(agg, out)
     return spark.read.parquet(out)
 
@@ -369,7 +367,7 @@ def a5_multi_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read (schema inference is a full extra scan at 100 TB — never rely
     on it). Values must survive all four round-trips bit-for-bit."""
     r = table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    base = tempfile.mkdtemp(prefix="sgs_a5_")
+    base = deferred_tempdir("sgs_a5_")
     schema = "r_regionkey int, r_name string"
     r.write.mode("overwrite").option("header", True).csv(f"{base}/csv")
     r.write.mode("overwrite").json(f"{base}/json")
@@ -419,7 +417,7 @@ def a7_partitioned_sink_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus to a handful of directories, before row-group stats
     even apply."""
     e = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sgs_a7_")
+    out = deferred_tempdir("sgs_a7_")
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
     clicks = spark.read.parquet(out).where(F.col("event_type") == "click")
     return clicks.groupBy("user_id").agg(
@@ -455,7 +453,7 @@ def a11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data files are never touched.
     """
     e = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sgs_a11_")
+    out = deferred_tempdir("sgs_a11_")
     old = e.where(F.col("event_id") % 2 == 0).select(
         "event_id", "user_id", "value"
     )
@@ -502,7 +500,7 @@ def a12_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     pruned by a filter that only exists after the dim is evaluated.
     """
     e = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sgs_a12_")
+    out = deferred_tempdir("sgs_a12_")
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
     fact = spark.read.parquet(out)
     dim = spark.createDataFrame(
@@ -551,10 +549,9 @@ def a13_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, not exceptions — they land in a quarantine band with their
     raw bytes for replay, and the pipeline's totals stay auditable.
     """
-    import tempfile
 
     e = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sgs_a13_")
+    out = deferred_tempdir("sgs_a13_")
     lines = e.select(
         F.when(
             F.col("event_id") % 100 == 7,
@@ -626,12 +623,11 @@ def a14_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxRecordsPerFile or coalesce against a measured row width) is
     what keeps a streaming-fed lake scannable.
     """
-    import tempfile
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
-    tmp = tempfile.mkdtemp(prefix="sgs_a14_")
+    tmp = deferred_tempdir("sgs_a14_")
     frag = f"{tmp}/fragmented"
     compact = f"{tmp}/compacted"
     li.repartition(64).write.parquet(frag)
@@ -825,7 +821,7 @@ def a15_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression locality; this query is the documented on/off-ramp,
     with parquet (a1/a3) as the resident layout."""
     o = table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="sgs_a15_")
+    out = deferred_tempdir("sgs_a15_")
     cols = [
         "o_orderkey",
         "o_custkey",
@@ -888,7 +884,7 @@ def a16_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-flexible); explicit read schemas keep it one-pass, and the
     first hop into the lake converts to parquet (a3) for pruning."""
     e = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sgs_a16_")
+    out = deferred_tempdir("sgs_a16_")
     (
         e.select(
             "event_id",
@@ -938,7 +934,7 @@ def a17_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters, ReadSchema pruning) holds for the ORC scan too;
     this query keeps the claim tested rather than assumed."""
     li = table(spark, sf_dir, "lineitem")
-    out = tempfile.mkdtemp(prefix="sgs_a17_")
+    out = deferred_tempdir("sgs_a17_")
     li.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy(

@@ -591,7 +591,6 @@ def pipeline_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan per refresh; this is the lakehouse form of incremental view
     maintenance (Delta MVs / Materialize-style delta queries), built
     from exactly the changes() primitive."""
-    import tempfile
 
     from spark_glove_spark.sources import txlog
 
@@ -602,7 +601,7 @@ def pipeline_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("price"),
         F.col("o_orderpriority").alias("grp"),
     )
-    path = tempfile.mkdtemp(prefix="sgs_iagg_") + "/t"
+    path = deferred_tempdir("sgs_iagg_") + "/t"
     txlog.create(base.repartitionByRange(8, "k"), path)  # v0
     h8, h4 = scalar_bounds(base, "k", 8, 4)  # one agg job for both
     adj = base.where(F.col("k") % 7 == 3).select(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_glove_spark.registry import query
+from spark_glove_spark.registry import deferred_tempdir, query
 from spark_glove_spark.sources import scalar_bounds, table
 
 _N = 50_000
@@ -335,13 +335,12 @@ def i18_txlog_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundaries. Together i17+i18 close the loop: stream
     in -> versioned table -> stream out, all on the engine's own
     log-structured format."""
-    import tempfile
     import uuid
 
     from spark_glove_spark.sources import txlog
 
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    path = tempfile.mkdtemp(prefix="sgs_i18_") + "/t"
+    path = deferred_tempdir("sgs_i18_") + "/t"
     txlog.create(e.where(F.col("event_id") % 4 == 0), path)
     for m in (1, 2, 3):
         txlog.append(e.where(F.col("event_id") % 4 == m), path)
@@ -500,7 +499,6 @@ def i19_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame
     the relational reconstruction of the table's end state (the
     oracle), proving exactly-once delivery of every add AND remove
     across micro-batch boundaries."""
-    import tempfile
     import uuid
 
     from spark_glove_spark.sources import txlog
@@ -512,7 +510,7 @@ def i19_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("o_totalprice").alias("price"),
         F.col("o_orderpriority").alias("grp"),
     )
-    path = tempfile.mkdtemp(prefix="sgs_i19_") + "/t"
+    path = deferred_tempdir("sgs_i19_") + "/t"
     txlog.create(base.repartitionByRange(8, "k"), path)  # v0
     h8, h4 = scalar_bounds(base, "k", 8, 4)  # one agg job for both
     adj = base.where(F.col("k") % 7 == 3).select(

@@ -32,8 +32,12 @@ def get_spark(
         # fits (guide §3.1/§9): sort-merge pays two sorts that a hash
         # build skips. Scale-safe — the planner picks SHJ only under
         # its size conditions, and the AQE rewrite is bounded by the
-        # 64 MB per-partition threshold (r14 optimization round; A/B
-        # at sf0.1 read SHJ ≤ SMJ on every join-heavy entry).
+        # 64 MB per-partition threshold. Interleaved A/B against the
+        # Spark defaults (tools/probe.py ab, sf0.1, 4 cores, 8 rounds;
+        # CHANGES.md), median wall SHJ vs defaults: glove_fit 8.76 vs
+        # 10.31 s (SHJ IQR 1.43 s), pipeline_curate_corpus 6.34 vs
+        # 7.35 s, c2_shuffle_join 0.92 vs 0.95 s, c8_asof_join 0.69 vs
+        # 0.72 s.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB"

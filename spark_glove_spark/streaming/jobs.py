@@ -19,12 +19,13 @@ production.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from spark_glove_spark.registry import deferred_tempdir
 
 # events schema as the file stream must declare it. The ts column's
 # parquet resolution is generator-dependent (sources/tables.py): int64
@@ -95,7 +96,7 @@ def stream_events(
     and exactly how a real deployment points at a landing directory.
     """
     if os.path.isfile(path):
-        d = tempfile.mkdtemp(prefix="stream_src_")
+        d = deferred_tempdir("stream_src_")
         os.symlink(path, os.path.join(d, os.path.basename(path)))
         path = d
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -468,14 +468,13 @@ def i9_streaming_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode + per-epoch txlog MERGE, O(touched keys) per trigger); this
     query remains the minimal batch-equivalence exhibit."""
     import os
-    import tempfile
 
     from spark_glove_spark.functions.text import tokenize
     from spark_glove_spark.operators.cooccurrence import _forward_pairs
 
     path = os.path.join(sf_dir, "documents.parquet")
     if os.path.isfile(path):
-        d = tempfile.mkdtemp(prefix="stream_docs_")
+        d = deferred_tempdir("stream_docs_")
         os.symlink(path, os.path.join(d, "documents.parquet"))
         path = d
     sdf = spark.readStream.schema(
@@ -585,7 +584,6 @@ def i11_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys touch).
     """
     import os
-    import tempfile
 
     from spark_glove_spark.operators.analytics import (
         apply_merge,
@@ -593,7 +591,7 @@ def i11_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_")
+    tmp = deferred_tempdir("cdc_stream_")
     chdir = os.path.join(tmp, "changes")
     cdc_change_set(o).repartition(3).write.parquet(chdir)
     state0 = os.path.join(tmp, "state_0")

@@ -902,7 +902,8 @@ def test_hnsw_plane_schedule_law():
 
 def test_graph_search_schedule_laws():
     """The r14 SEARCH-side laws (VERDICT r13 item 3), grid-calibrated
-    by tools/scaleprobe_beam_r14.py + scaleprobe_hnswhops_r14.py:
+    in PLANS.md "Round-14: search-side beam law for graph ANN" (scripts
+    at `1354c56`):
     NSW beam doubles and hops gain one per decade of corpus growth
     past the 2,000-row reference rung (measured recall 0.37/0.52/0.35
     at 1x/10x/100x vs 0.37/0.27/0.12 at fixed constants); HNSW's base

@@ -480,6 +480,35 @@ def test_a9_restores_conf_and_drops_tables(spark):
     ]
 
 
+def test_registry_owns_the_only_mkdtemp():
+    """A query's temp dir comes from registry.deferred_tempdir, which
+    removes it when the next declared query starts; a bare mkdtemp is
+    never removed. So no module of the package but registry.py calls
+    tempfile.mkdtemp."""
+    import ast
+    import glob
+    import os
+
+    import spark_glove_spark
+
+    root = os.path.dirname(spark_glove_spark.__file__)
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == "registry.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "mkdtemp":
+                offenders.append(f"{rel}:{node.lineno}")
+            elif isinstance(node, ast.ImportFrom) and any(
+                a.name == "mkdtemp" for a in node.names
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_global_rank_and_prefix_sum_survive_reexecution(spark):
     """ADVICE r9 (low): the two-pass scale_ops bake partition offsets
     collected from the range-partitioned intermediate into LITERALS —
