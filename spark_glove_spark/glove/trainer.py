@@ -17,35 +17,42 @@ per-sample loop; same fixed point, deterministic given a seed.
 Once per fit, X is built with ONE pair explode, partial aggregate and
 (wi, wj) shuffle: each canonical cell is mirrored by a single explode
 into (i,j,x) + (j,i,x), or (i,i,2x) on the diagonal. Execution shape per
-iteration (designed for |X| ≈ 10⁹ rows at 100 TB corpus scale):
+iteration (designed for |X| ≈ 10⁹ rows at 100 TB corpus scale), when
+the parameter table fits the broadcast cap (V·d ≤ broadcast_max_weights):
 
-  X ⋈ params(center i) ⋈ params(context j)      two key shuffles; X is
-                                                pre-partitioned by i and
-                                                persisted so one side
-                                                never re-shuffles
-  → mapInArrow gradient kernel                  vectors read as flat Arrow
-                                                value buffers reshaped to
-                                                (rows, dim); numpy; partial
-                                                per-id aggregation INSIDE
-                                                each batch so the emitted
+  mapInArrow gradient kernel over X's           X is pre-partitioned by i
+  own (i, j, logx, fx) rows                     and persisted; the kernel
+                                                reads dense (W, W̃, b, b̃)
+                                                numpy arrays from ONE
+                                                Spark broadcast, indexed
+                                                by id; partial per-id
+                                                aggregation INSIDE each
+                                                batch so the emitted
                                                 stream is ~unique ids per
                                                 batch, not |X|
   → cogroup(grads, params) by id % blocks       ONE fused kernel merges
     .applyInArrow fused merge+AdaGrad step      partials and steps params
                                                 (few LARGE groups, never
                                                 per-word — SURVEY §4.3.4);
-                                                replaces the former merge →
-                                                pivot → join → update tail:
-                                                one shuffle and one Arrow
-                                                round-trip less per iter
+                                                the loss partials all land
+                                                in block pmod(−1, blocks),
+                                                re-emitted as one id = −1
+                                                row carrying the loss
   → params.localCheckpoint + persist            lineage truncation —
                                                 MANDATORY for iterative
-                                                plans (SURVEY §4.3.2); the
-                                                previous iteration's
-                                                checkpoint is released
+                                                plans (SURVEY §4.3.2)
+  → ONE toArrow() collect of                    materializes the checkpoint
+    (id, w, wc, b, bc)                          and gives the loss (the
+                                                id = −1 row) plus the next
+                                                iteration's broadcast; the
+                                                superseded broadcast and
+                                                checkpoint are released
 
-Everything driver-side is orchestration only; no .collect() of
-parameter data (only the scalar loss).
+Three Spark jobs per iteration: the two map stages feeding the cogroup
+and the collect. Above the cap the params are never collected: the
+kernel reads them from X ⋈ params(center i) ⋈ params(context j), joins
+whose X side never re-shuffles, and the loss is a Σb over the id = −1
+row of the checkpoint.
 """
 
 from __future__ import annotations
@@ -56,6 +63,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -105,10 +113,12 @@ class GloveConfig:
     # h5_glove_fit_micro driver gate). Same training math either way.
     init: str = "uniform"
     blocks: int = 32  # merge-block count; ≈ cluster cores at scale
-    # Max parameter-table size (words × dim) that still broadcasts in
-    # the per-iteration X ⋈ params join; above it the join falls back
-    # to the pre-partitioned shuffle path (SURVEY §4.3.3). Results are
-    # identical either way (tested); only the physical plan changes.
+    # Max parameter-table size (words × dim) that the fit collects
+    # each iteration and broadcasts to the gradient kernel as dense
+    # arrays (no join); above it the kernel reads params through
+    # X ⋈ params joins on X's pre-partitioned side (SURVEY §4.3.3).
+    # Results are identical either way (tested); only the physical
+    # plan changes.
     broadcast_max_weights: int = 2_000_000
 
 
@@ -344,47 +354,90 @@ def _init_params(vocab: DataFrame, cfg: GloveConfig) -> DataFrame:
     return vocab.select("id").mapInArrow(init, schema=_PARAMS_SCHEMA)
 
 
+def _grad_batch(
+    i: np.ndarray, j: np.ndarray, w: np.ndarray, wc: np.ndarray,
+    b: np.ndarray, bc: np.ndarray, logx: np.ndarray, fx: np.ndarray,
+) -> pa.RecordBatch:
+    """Per-pair gradients of one batch of X cells, whose row k pairs
+    center i[k] (vector w[k], bias b[k]) with context j[k] (wc[k],
+    bc[k]), partially aggregated per id within the batch. Emits (id,
+    side 0=center/1=context, Σdvec, Σdbias) plus one loss row (id=-1)
+    carrying Σ ½·f(x)·diff²."""
+    diff = (w * wc).sum(axis=1) + b + bc - logx
+    fd = fx * diff
+    loss = 0.5 * float((fd * diff).sum())
+    ids, sides, dvecs, dbias, dn = [], [], [], [], []
+    for side, key, grads in ((0, i, fd[:, None] * wc), (1, j, fd[:, None] * w)):
+        uniq, inv = np.unique(key, return_inverse=True)
+        acc = np.zeros((len(uniq), grads.shape[1]))
+        np.add.at(acc, inv, grads)
+        bacc = np.zeros(len(uniq))
+        np.add.at(bacc, inv, fd)
+        nacc = np.zeros(len(uniq), dtype=np.int64)
+        np.add.at(nacc, inv, 1)
+        ids.append(uniq)
+        sides.append(np.full(len(uniq), side, dtype=np.int32))
+        dvecs.append(acc)
+        dbias.append(bacc)
+        dn.append(nacc)
+    return pa.RecordBatch.from_arrays(
+        [
+            np.concatenate([*ids, [-1]]),
+            np.concatenate([*sides, np.array([-1], dtype=np.int32)]),
+            _lists(np.concatenate(dvecs), loss_row=True),
+            np.concatenate([*dbias, [loss]]),
+            np.concatenate([*dn, [0]]),
+        ],
+        names=["id", "side", "dvec", "dbias", "dn"],
+    )
+
+
 def _grad_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per-pair gradients, partially aggregated per id within each
-    Arrow batch. Emits (id, side 0=center/1=context, Σdvec, Σdbias)
-    plus one loss row (id=-1) per batch carrying Σ ½·f(x)·diff²."""
+    """Gradient kernel over X ⋈ params rows (i, j, logx, fx, w, b, wc,
+    bc): the shuffle-join layout, used above the broadcast cap."""
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        w = _matrix(rb.column("w"))
-        wc = _matrix(rb.column("wc"))
-        diff = (
-            (w * wc).sum(axis=1)
-            + rb.column("b").to_numpy()
-            + rb.column("bc").to_numpy()
-            - rb.column("logx").to_numpy()
+        col = lambda c: rb.column(c).to_numpy()  # noqa: E731
+        yield _grad_batch(
+            col("i"), col("j"), _matrix(rb.column("w")), _matrix(rb.column("wc")),
+            col("b"), col("bc"), col("logx"), col("fx"),
         )
-        fd = rb.column("fx").to_numpy() * diff
-        loss = 0.5 * float((fd * diff).sum())
-        ids, sides, dvecs, dbias, dn = [], [], [], [], []
-        for side, col, grads in ((0, "i", fd[:, None] * wc), (1, "j", fd[:, None] * w)):
-            uniq, inv = np.unique(rb.column(col).to_numpy(), return_inverse=True)
-            acc = np.zeros((len(uniq), grads.shape[1]))
-            np.add.at(acc, inv, grads)
-            bacc = np.zeros(len(uniq))
-            np.add.at(bacc, inv, fd)
-            nacc = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(nacc, inv, 1)
-            ids.append(uniq)
-            sides.append(np.full(len(uniq), side, dtype=np.int32))
-            dvecs.append(acc)
-            dbias.append(bacc)
-            dn.append(nacc)
-        yield pa.RecordBatch.from_arrays(
-            [
-                np.concatenate([*ids, [-1]]),
-                np.concatenate([*sides, np.array([-1], dtype=np.int32)]),
-                _lists(np.concatenate(dvecs), loss_row=True),
-                np.concatenate([*dbias, [loss]]),
-                np.concatenate([*dn, [0]]),
-            ],
-            names=["id", "side", "dvec", "dbias", "dn"],
+
+
+def _make_broadcast_grad_kernel(params: Broadcast):
+    """Gradient kernel over X's own (i, j, logx, fx) rows: the vectors
+    and biases come from ``params``, a broadcast of dense (W, WC, b,
+    bc) arrays indexed by word id."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        W, WC, b, bc = params.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            i = rb.column("i").to_numpy()
+            j = rb.column("j").to_numpy()
+            yield _grad_batch(
+                i, j, W[i], WC[j], b[i], bc[j],
+                rb.column("logx").to_numpy(), rb.column("fx").to_numpy(),
+            )
+
+    return kernel
+
+
+def _broadcast_params(sc: SparkContext, rows: pa.Table) -> Broadcast:
+    """One broadcast of the dense (W, WC, b, bc) arrays held by the
+    collected params rows (id, w, wc, b, bc); the id = −1 loss row is
+    skipped. Vocabulary ids are dense 0..V−1 (also after ``max_vocab``
+    truncation and for a warm start, whose params are keyed by the new
+    vocabulary), so row k of the id-sorted rows is word k."""
+    rows = rows.filter(pc.greater_equal(rows.column("id"), 0)).sort_by("id")
+    return sc.broadcast(
+        (
+            _matrix(rows.column("w")), _matrix(rows.column("wc")),
+            rows.column("b").to_numpy(), rows.column("bc").to_numpy(),
         )
+    )
 
 
 def _make_step_kernel(eta: float):
@@ -522,13 +575,14 @@ class Glove:
             raise ValueError(
                 f"empty vocabulary: no word reaches min_count={cfg.min_count}"
             )
-        # Params side of the per-iteration join: broadcast when the
-        # whole parameter table fits comfortably in an executor
-        # (≤ ~16 MB of vector doubles per side) — then the X ⋈ params
-        # join is shuffle-FREE and the gradient pass runs in place over
-        # X's cached partitions. A 400k-word × 300-d vocab exceeds the
-        # cap and falls back to the pre-partitioned shuffle join
-        # (SURVEY.md §4.3.3).
+        # Where the gradient kernel reads params from. When the whole
+        # parameter table fits comfortably in an executor (≤ ~16 MB of
+        # vector doubles per side), the fit collects it once per
+        # iteration anyway (that collect also reads the loss) and
+        # broadcasts it as dense arrays, so the kernel runs over X's
+        # cached (i, j, logx, fx) partitions with no join at all. A
+        # 400k-word × 300-d vocab exceeds the cap; then X ⋈ params is a
+        # join whose X side is pre-partitioned by i (SURVEY.md §4.3.3).
         broadcast_params = vocab_n * cfg.dim <= cfg.broadcast_max_weights
         # Effective parallelism scales with the co-occurrence matrix:
         # |X| ≤ vocab², and each block is a Python-worker round-trip per
@@ -542,7 +596,13 @@ class Glove:
             .repartition(blocks, "i")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        x.count()  # materialize once; reused every iteration
+        if x.count() == 0:  # materializes X once; reused every iteration
+            x.unpersist()
+            vocab.unpersist()
+            raise ValueError(
+                "empty co-occurrence matrix: no two vocabulary words "
+                f"co-occur within window={cfg.window}"
+            )
 
         if initial_state is None:
             params = _init_params(vocab, cfg).localCheckpoint(eager=True)
@@ -563,61 +623,78 @@ class Glove:
         step_kernel = _make_step_kernel(cfg.eta)
         blk = F.pmod(F.col("id"), F.lit(blocks)).alias("blk")
         held = params  # the checkpointed frame ``params`` reads
+        sc = docs.sparkSession.sparkContext
+        collected = ("id", "w", "wc", "b", "bc")
+        bcast = (
+            _broadcast_params(sc, params.select(*collected).toArrow())
+            if broadcast_params and cfg.iterations
+            else None
+        )
 
-        for _ in range(cfg.iterations):
-            center = params.select(
-                F.col("id").alias("i"), "w", "b"
-            )
-            if broadcast_params:
-                center = F.broadcast(center)
-            context = params.select(
-                F.col("id").alias("j"), "wc", "bc"
-            )
-            if broadcast_params:
-                context = F.broadcast(context)
-            joined = x.join(center, "i").join(context, "j")
-            grads = joined.mapInArrow(_grad_kernel, schema=_GRADS_SCHEMA)
-            # One job per iteration: partial gradients cogroup with the
-            # current params by id-block, and the fused kernel merges +
-            # steps in a single Python pass. The id = −1 rows carry the
-            # per-block loss partials; reading them is a trivial scan of
-            # the checkpointed result, not a second gradient pass.
-            # localCheckpoint truncates LINEAGE but INHERITS the source
-            # plan's Catalyst size estimate — and the default stats
-            # visitor multiplies child sizes, so a plan referencing
-            # params three times (center, context, cogroup) would triple
-            # the estimate's BigInt *bit length* every iteration until
-            # the driver spends whole seconds multiplying million-digit
-            # integers (measured: 4× slowdown per iteration from ~it 12).
-            # The persist + the loss collect below materialize the
-            # iteration's result as an InMemoryRelation whose stats are
-            # the ACTUAL cached bytes, resetting the estimate chain.
-            stepped = (
-                grads.groupBy(blk)
-                .cogroup(params.groupBy(blk))
-                .applyInArrow(step_kernel, schema=_PARAMS_SCHEMA)
-                # lazy checkpoint: the loss collect below is this
-                # iteration's first action and materializes the
-                # checkpoint AND the persist in ONE job — the former
-                # eager=True ran the kernel as its own job and then
-                # paid a second scheduling round for the collect
-                # (r14 optimization round, guide §1.2). Lineage is
-                # still cut and the stats chain still resets at the
-                # same point.
-                .localCheckpoint(eager=False)  # cut lineage — O(3^T) plan growth otherwise
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            loss = (
-                stepped.where(F.col("id") == -1)
-                .agg(F.sum("b").alias("loss"))
-                .collect()[0]["loss"]
-            )
-            losses.append(float(loss))
-            params = stepped.where(F.col("id") >= 0)
-            # stepped is materialized and cut from its lineage, so the
-            # previous iteration's checkpoint is no longer read
-            _release_checkpoint(held)
-            held = stepped
+        try:
+            for it in range(cfg.iterations):
+                if broadcast_params:
+                    grads = x.select("i", "j", "logx", "fx").mapInArrow(
+                        _make_broadcast_grad_kernel(bcast), schema=_GRADS_SCHEMA
+                    )
+                else:
+                    center = params.select(F.col("id").alias("i"), "w", "b")
+                    context = params.select(F.col("id").alias("j"), "wc", "bc")
+                    joined = x.join(center, "i").join(context, "j")
+                    grads = joined.mapInArrow(_grad_kernel, schema=_GRADS_SCHEMA)
+                # Partial gradients cogroup with the current params by
+                # id-block, and the fused kernel merges + steps in a single
+                # Python pass. Every id = −1 loss row lands in block
+                # pmod(−1, blocks), whose kernel call re-emits their sum as
+                # stepped's one id = −1 row.
+                # localCheckpoint truncates LINEAGE but INHERITS the source
+                # plan's Catalyst size estimate — and the default stats
+                # visitor multiplies child sizes, so a plan referencing
+                # params several times (center, context, cogroup) would
+                # multiply the estimate's BigInt *bit length* every
+                # iteration until query planning spends whole seconds
+                # multiplying million-digit integers (measured: 4× slowdown
+                # per iteration from ~it 12). The persist + the collect
+                # below materialize the iteration's result as an
+                # InMemoryRelation whose stats are the ACTUAL cached bytes,
+                # resetting the estimate chain.
+                stepped = (
+                    grads.groupBy(blk)
+                    .cogroup(params.groupBy(blk))
+                    .applyInArrow(step_kernel, schema=_PARAMS_SCHEMA)
+                    # lazy checkpoint: the collect below is this
+                    # iteration's first action and materializes the
+                    # checkpoint AND the persist in ONE job (eager=True
+                    # would run the kernel as a job of its own before
+                    # the collect). Lineage is still cut and the stats
+                    # chain still resets at the same point.
+                    .localCheckpoint(eager=False)  # cut lineage — O(3^T) plan growth otherwise
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                if broadcast_params:
+                    # one collect gives the loss and the next broadcast; the
+                    # kernel that read the old one has run for the last time
+                    rows = stepped.select(*collected).toArrow()
+                    ids = rows.column("id").to_numpy()
+                    (loss,) = rows.column("b").to_numpy()[ids == -1]
+                    more = it + 1 < cfg.iterations
+                    old, bcast = bcast, _broadcast_params(sc, rows) if more else None
+                    old.destroy()
+                else:
+                    loss = (
+                        stepped.where(F.col("id") == -1)
+                        .agg(F.sum("b").alias("loss"))
+                        .collect()[0]["loss"]
+                    )
+                losses.append(float(loss))
+                params = stepped.where(F.col("id") >= 0)
+                # stepped is materialized and cut from its lineage, so the
+                # previous iteration's checkpoint is no longer read
+                _release_checkpoint(held)
+                held = stepped
+        finally:
+            if bcast is not None:  # a fit that raised mid-loop
+                bcast.destroy()
 
         vectors = params.join(vocab, "id").select(
             "word",

@@ -327,3 +327,37 @@ def test_fit_releases_superseded_checkpoints(spark, docs):
         return len(set(jsc.getPersistentRDDs().keySet()) - before)
 
     assert held_after(2) == held_after(5) <= 2
+
+
+def test_fit_rejects_empty_cooccurrence(spark):
+    """A corpus whose vocabulary never co-occurs (six one-word docs)
+    has no X cell to train on: the fit raises a ValueError, as for an
+    empty vocabulary, and leaves nothing persisted behind."""
+    one_word = spark.createDataFrame(
+        [(d, "alpha") for d in range(6)], "doc_id long, text string"
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="empty co-occurrence matrix"):
+        Glove(iterations=2, **CFG).fit(one_word)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_broadcast_regime_iteration_jobs(spark, docs):
+    """Under the broadcast cap an iteration is three Spark jobs: the
+    two map stages feeding the cogroup (gradients from X, current
+    params) and the one collect that materializes the stepped params
+    and yields both the loss and the next broadcast. Counted as
+    (jobs(fit(5)) - jobs(fit(2))) / 3, so per-fit setup cancels."""
+    sc = spark.sparkContext
+
+    def jobs(iterations: int) -> int:
+        group = f"glove_iteration_jobs_{iterations}"
+        sc.setJobGroup(group, group)
+        try:
+            Glove(iterations=iterations, **CFG).fit(docs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert (jobs(5) - jobs(2)) / 3 == 3

@@ -15,13 +15,17 @@ from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
+from types import SimpleNamespace
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from spark_glove_spark.glove import Glove
 from spark_glove_spark.glove.trainer import (
     GloveConfig,
+    _grad_kernel,
+    _make_broadcast_grad_kernel,
     build_cooccurrence,
     build_vocabulary,
 )
@@ -160,3 +164,32 @@ def test_cooccurrence_matches_python_bruteforce(spark, corpus):
         assert abs(r.x - x) < 1e-12, (r.i, r.j, r.x, x)
         assert abs(r.logx - math.log(x)) < 1e-12, (r.i, r.j, r.logx)
         assert abs(r.fx - fx) < 1e-12, (r.i, r.j, r.fx, fx)
+
+
+def test_broadcast_kernel_matches_join_layout_kernel():
+    """The two gradient kernels on the same X cells, without Spark: the
+    join layout reads (i, j, logx, fx, w, b, wc, bc) rows, the
+    broadcast one reads (i, j, logx, fx) and indexes dense param
+    arrays by id. Their output batches must be equal bit for bit
+    (repeated ids make the in-batch np.add.at order matter)."""
+    rng = np.random.default_rng(5)
+    n_words, dim, n = 13, 5, 400
+    W, WC = rng.normal(size=(n_words, dim)), rng.normal(size=(n_words, dim))
+    b, bc = rng.normal(size=n_words), rng.normal(size=n_words)
+    i, j = rng.integers(0, n_words, n), rng.integers(0, n_words, n)
+    logx, fx = rng.random(n), rng.random(n)
+
+    def vecs(m):
+        return pa.array(list(m), type=pa.list_(pa.float64()))
+
+    joined = pa.RecordBatch.from_arrays(
+        [i, j, logx, fx, vecs(W[i]), b[i], vecs(WC[j]), bc[j]],
+        names=["i", "j", "logx", "fx", "w", "b", "wc", "bc"],
+    )
+    own = pa.RecordBatch.from_arrays([i, j, logx, fx], names=["i", "j", "logx", "fx"])
+    params = SimpleNamespace(value=(W, WC, b, bc))  # a Broadcast's read side
+
+    (want,) = _grad_kernel(iter([joined]))
+    (got,) = _make_broadcast_grad_kernel(params)(iter([own]))
+    assert got.num_rows > 2 * n_words  # partials per side plus the loss row
+    assert got.serialize().to_pybytes() == want.serialize().to_pybytes()
