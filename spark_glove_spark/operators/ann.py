@@ -322,17 +322,21 @@ def _ivf_centroids(vectors: DataFrame, n_lists: int, seed: int, max_iter: int):
     return _lloyd(sample, n_lists, max_iter, seed)
 
 
-def _centroid_literals(centers) -> Column:
+def _centroid_literals(centers, cnorms=None) -> Column:
     """The centroid table as ONE array-of-structs literal (n_lists ×
-    (list_id, cv, cnorm)) — stays codegen, no join, no MLlib."""
+    (list_id, cv, cnorm)) — stays codegen, no join, no MLlib.
+    ``cnorms`` defaults to ‖c‖² of each center; a persisted index
+    passes the column it stored (:func:`_read_centroids`)."""
+    if cnorms is None:
+        cnorms = [(c * c).sum() for c in centers]
     return F.array(
         *[
             F.struct(
                 F.lit(i).alias("list_id"),
                 lit_double_array(c).alias("cv"),
-                F.lit(float((c * c).sum())).alias("cnorm"),
+                F.lit(float(n)).alias("cnorm"),
             )
-            for i, c in enumerate(centers)
+            for i, (c, n) in enumerate(zip(centers, cnorms))
         ]
     )
 
@@ -399,33 +403,6 @@ def _nearest_list_expr(cents: Column) -> Column:
     )[0]["list_id"]
 
 
-def _probe_lists_df(
-    probes: DataFrame, cent_df: DataFrame, n_probe: int
-) -> DataFrame:
-    """Wide-index probe→lists: the same (cnorm − 2q·c) ranking as
-    :func:`_probe_lists`, but against the centroid TABLE broadcast as
-    a DataFrame instead of re-inlined literals — a 512-list centroid
-    literal would put tens of thousands of float constants into one
-    expression tree. Probes × n_lists rows through one broadcast
-    join + window: bounded (probes are a pinned set)."""
-    pc = probes.crossJoin(
-        F.broadcast(cent_df.select("list_id", "cv", "cnorm"))
-    ).select(
-        "probe_id",
-        F.col("embedding").alias("q"),
-        "list_id",
-        (F.col("cnorm") - 2 * dot(F.col("embedding"), F.col("cv"))).alias(
-            "cdist"
-        ),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cdist").asc(), "list_id")
-    return (
-        pc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_probe)
-        .select("probe_id", "q", "list_id")
-    )
-
-
 def _probe_lists(probes: DataFrame, cents: Column, n_probe: int) -> DataFrame:
     """Probe → its n_probe nearest lists, SAME metric as assignment
     (euclidean argmin) so a probe's own cell is always searched."""
@@ -443,6 +420,58 @@ def _probe_lists(probes: DataFrame, cents: Column, n_probe: int) -> DataFrame:
         .where(F.col("rn") <= n_probe)
         .select("probe_id", "q", "list_id")
     )
+
+
+def _nearest_lists_np(Q, cv, cnorm, n_probe: int):
+    """Row indices into ``cv`` of each probe's ``n_probe`` nearest
+    centroids: the ranking :func:`_probe_lists` computes in Spark,
+    reproduced bit for bit on the driver. ``q·c`` is the same
+    left-to-right double fold as ``functions.vector.dot`` (a BLAS
+    ``Q @ cv.T`` sums in another order and can flip a near-tie),
+    ``cdist = cnorm − 2·q·c``, and the stable sort over rows kept in
+    list_id order breaks an exact tie to the lower list_id."""
+    import numpy as np
+
+    acc = np.zeros((len(Q), len(cv)))
+    for j in range(cv.shape[1]):
+        acc = acc + Q[:, j, None] * cv[None, :, j]
+    cdist = cnorm[None, :] - 2.0 * acc
+    return np.argsort(cdist, axis=1, kind="stable")[:, :n_probe]
+
+
+def _probe_lists_np(
+    probes: DataFrame, list_ids, cv, cnorm, n_probe: int
+) -> tuple[DataFrame, list[int]]:
+    """Driver-side :func:`_probe_lists` for a persisted index: ONE
+    collect of the probes (bounded — the scoring join broadcasts them
+    n_probe times over anyway), the ranking in
+    :func:`_nearest_lists_np`, and the (probe_id, q, list_id) rows
+    handed back to Spark as one Arrow table, ``q`` being the probe's
+    own embedding column with its type unchanged. Also returns the
+    sorted union of picked lists, the literal partition predicate."""
+    import numpy as np
+    import pyarrow as pa
+
+    pt = probes.select("probe_id", "embedding").toArrow()
+    emb = pt.column("embedding")
+    Q = (  # explicit width: zero probes make a (0, dim) matrix
+        emb.combine_chunks()
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(pt.num_rows, cv.shape[1])
+    )
+    picked = list_ids[_nearest_lists_np(Q, cv, cnorm, n_probe)]
+    rows = np.repeat(np.arange(pt.num_rows), picked.shape[1])
+    plists = pa.table(
+        {
+            "probe_id": pt.column("probe_id").take(rows),
+            "q": emb.take(rows),
+            "list_id": pa.array(picked.ravel(), pa.int32()),
+        }
+    )
+    wanted = sorted({int(i) for i in picked.ravel()})
+    return probes.sparkSession.createDataFrame(plists), wanted
 
 
 def _score_lists(assigned: DataFrame, plists: DataFrame, k: int) -> DataFrame:
@@ -533,26 +562,22 @@ def _index_rows(path: str) -> int:
     )
 
 
-def _read_centroid_literals(spark: SparkSession, path: str) -> Column:
-    """Re-inline a persisted index's ≤ n_lists centroid rows as the
-    same array-of-structs literal :func:`_centroid_literals` builds at
-    training time (bounded collect: n_lists rows). Shared by the IVF
-    and IVF-PQ probe paths and the drift monitor's re-assignment."""
+def _read_centroids(path: str):
+    """A persisted index's centroid table read through pyarrow — no
+    Spark job, the same direct file access as :func:`_index_rows`:
+    ``(list_id, cv, cnorm)`` as numpy arrays in list_id order, with
+    ``cnorm`` as STORED at build time. Shared by the IVF and IVF-PQ
+    probe paths and the drift monitor's frozen quantizer."""
     import os
 
-    cent_rows = sorted(
-        spark.read.parquet(os.path.join(path, "centroids")).collect(),
-        key=lambda r: r["list_id"],
-    )
-    return F.array(
-        *[
-            F.struct(
-                F.lit(r["list_id"]).alias("list_id"),
-                lit_double_array(r["cv"]).alias("cv"),
-                F.lit(float(r["cnorm"])).alias("cnorm"),
-            )
-            for r in cent_rows
-        ]
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(path, "centroids")).sort_by("list_id")
+    cv = t.column("cv").combine_chunks().flatten().to_numpy()
+    return (
+        t.column("list_id").to_numpy(),
+        cv.reshape(t.num_rows, -1),
+        t.column("cnorm").to_numpy(),
     )
 
 
@@ -564,42 +589,25 @@ def ivf_probe_index(
     n_probe: int | None = None,
 ) -> DataFrame:
     """Probe a PERSISTED IVF index (:func:`ivf_build_index`) without
-    ever scanning the full corpus: the ≤ n_lists centroid rows are
-    collected and re-inlined as literals, each probe picks its n_probe
-    nearest lists, and the corpus scan carries
-    ``list_id IN (<union of wanted lists>)`` — a predicate on the
-    PARTITION column, so Spark prunes to those directories at planning
-    time (the probe plan's PartitionFilters; asserted in
-    tests/test_dedup.py together with result equality vs the in-memory
-    :func:`ivf_knn` at the same seed). At 100 TB with hundreds of
-    lists, a 10-probe batch reads tens of partitions instead of the
-    corpus — the difference between an index and a scan. With
-    ``n_probe`` unpinned it derives as ~sqrt(n_lists) from the
-    stored centroid table (the :func:`ivf_list_schedule` probe rule),
-    so the scanned fraction falls as the index widens."""
-    import math
+    ever scanning the full corpus. Every step before scoring runs on
+    the driver (:func:`_probe_lists_np`: centroids through pyarrow,
+    one collect of the probes, the list ranking in numpy), and the
+    union of picked lists lands on the corpus scan as
+    ``list_id IN (...)`` — a predicate on the PARTITION column, so
+    Spark prunes to those directories at planning time (the probe
+    plan's PartitionFilters; asserted in tests/test_dedup.py together
+    with result equality vs the in-memory :func:`ivf_knn` at the same
+    seed). At 100 TB with hundreds of lists, a 10-probe batch reads
+    tens of partitions instead of the corpus — the difference between
+    an index and a scan. With ``n_probe`` unpinned it derives from the
+    stored centroid count by :func:`_ivf_n_probe`, so the scanned
+    fraction falls as the index widens."""
     import os
 
-    cent_df = spark.read.parquet(os.path.join(path, "centroids"))
-    n_lists = cent_df.count()  # ≤ n_lists rows — a metadata-cheap job
+    list_ids, cv, cnorm = _read_centroids(path)
     if n_probe is None:
-        n_probe = max(_IVF_SCHED_DEF[1], round(math.sqrt(n_lists)))
-    if n_lists <= _IVF_LITERAL_MAX:
-        plists_raw = _probe_lists(
-            probes, _read_centroid_literals(spark, path), n_probe
-        )
-    else:  # wide index: broadcast the centroid TABLE, not a literal
-        plists_raw = _probe_lists_df(probes, cent_df, n_probe)
-    # pin the probe-assignment job's result: BOTH consumers below (the
-    # wanted-list collect and the broadcast into _score_lists) read the
-    # checkpointed rows instead of re-running the window job (r10
-    # review finding: un-pinned, the probe side executed twice)
-    plists = plists_raw.localCheckpoint(eager=True)
-    # bounded collect (≤ n_lists values): the wanted-list union becomes
-    # a LITERAL partition predicate, which is what makes pruning static
-    wanted = sorted(
-        {r["list_id"] for r in plists.select("list_id").distinct().collect()}
-    )
+        n_probe = _ivf_n_probe(len(list_ids))
+    plists, wanted = _probe_lists_np(probes, list_ids, cv, cnorm, n_probe)
     assigned = spark.read.parquet(os.path.join(path, "lists")).where(
         F.col("list_id").isin(wanted)
     )
@@ -842,7 +850,8 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     path0 = build(0, corpus0, "initial")
-    cents0 = _read_centroid_literals(spark, path0)
+    _, cv0, cnorm0 = _read_centroids(path0)
+    cents0 = _centroid_literals(cv0, cnorm0)
     serving_occ = _cell_occupancy(corpus0, cents0)
 
     arrived = corpus0
@@ -1136,13 +1145,14 @@ def ivfpq_probe_index(
     shortlist: int = 50,
     corpus_filter: Column | None = None,
 ) -> DataFrame:
-    """Probe a PERSISTED IVF-PQ index: centroids and codebooks are
-    re-inlined as literals (bounded collects: n_lists and m×ksub rows),
-    the code scan prunes to the wanted lists via PartitionFilters, ADC
-    ranks candidates from codes alone, and only the survivor set joins
-    back to ``corpus`` for exact re-rank. Result equality with the
-    in-memory :func:`ivfpq_knn` at the same seed plus the pruned plan
-    shape are pinned in tests/test_quant.py.
+    """Probe a PERSISTED IVF-PQ index: centroids and codebooks come
+    from their files through pyarrow, each probe's lists are picked on
+    the driver as in :func:`ivf_probe_index`, the code scan prunes to
+    the wanted lists via PartitionFilters, ADC ranks candidates from
+    codes alone, and only the survivor set joins back to ``corpus``
+    for exact re-rank. Result equality with the in-memory
+    :func:`ivfpq_knn` at the same seed plus the pruned plan shape are
+    pinned in tests/test_quant.py.
 
     ``corpus_filter``: optional metadata predicate over the columns
     the index carries (ivfpq_build_index stores every non-vector
@@ -1153,34 +1163,17 @@ def ivfpq_probe_index(
     filtering (thinner cells spread the true neighbors)."""
     import os
 
-    cent_rows = sorted(
-        spark.read.parquet(os.path.join(path, "centroids")).collect(),
-        key=lambda r: r["list_id"],
+    import pyarrow.parquet as pq
+
+    list_ids, cv, cnorm = _read_centroids(path)
+    books = pq.read_table(os.path.join(path, "codebooks")).sort_by(
+        [("s", "ascending"), ("code", "ascending")]
     )
-    cents = F.array(
-        *[
-            F.struct(
-                F.lit(r["list_id"]).alias("list_id"),
-                lit_double_array(r["cv"]).alias("cv"),
-                F.lit(float(r["cnorm"])).alias("cnorm"),
-            )
-            for r in cent_rows
-        ]
-    )
-    coarse_cv = _coarse_cv_lit([r["cv"] for r in cent_rows])
-    book_rows = spark.read.parquet(os.path.join(path, "codebooks")).collect()
-    by_s: dict[int, dict[int, list[float]]] = {}
-    for r in book_rows:
-        by_s.setdefault(r["s"], {})[r["code"]] = [float(v) for v in r["cv"]]
-    cvs = [
-        [by_s[s][c] for c in sorted(by_s[s])] for s in sorted(by_s)
-    ]
-    # pin the probe-assignment job (both consumers below reuse it —
-    # same r10 review finding as ivf_probe_index)
-    plists = _probe_lists(probes, cents, n_probe).localCheckpoint(eager=True)
-    wanted = sorted(
-        {r["list_id"] for r in plists.select("list_id").distinct().collect()}
-    )
+    by_s: dict[int, list[list[float]]] = {}
+    for s, v in zip(books.column("s").to_pylist(), books.column("cv").to_pylist()):
+        by_s.setdefault(s, []).append(v)
+    cvs = [by_s[s] for s in sorted(by_s)]
+    plists, wanted = _probe_lists_np(probes, list_ids, cv, cnorm, n_probe)
     codes = spark.read.parquet(os.path.join(path, "lists")).where(
         F.col("list_id").isin(wanted)
     )
@@ -1191,7 +1184,7 @@ def ivfpq_probe_index(
         .where(F.col("vec_id") != F.col("probe_id"))
         .select("probe_id", "vec_id", "list_id", "codes", "q")
     )
-    return _ivfpq_score(cand, cvs, coarse_cv, corpus, k, shortlist)
+    return _ivfpq_score(cand, cvs, _coarse_cv_lit(cv), corpus, k, shortlist)
 
 
 def ivfpq_knn(
@@ -3810,8 +3803,13 @@ def ivf_list_schedule(n_rows: int) -> tuple[int, int]:
         round(math.sqrt(n_rows)),
         _IVF_TRAIN_MAX_LISTS,
     )
-    n_probe = max(_IVF_SCHED_DEF[1], round(math.sqrt(n_lists)))
-    return n_lists, n_probe
+    return n_lists, _ivf_n_probe(n_lists)
+
+
+def _ivf_n_probe(n_lists: int) -> int:
+    """The schedule's probe rule, ~sqrt(n_lists) with the authored
+    floor: 8 lists → 3, 10 → 3, 80 → 9, 512 → 23."""
+    return max(_IVF_SCHED_DEF[1], round(math.sqrt(n_lists)))
 
 
 def _hn_layer_tables() -> list[tuple[int, int, int, str]]:

@@ -1931,8 +1931,7 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    # single consumer (the broadcast in _score_lists): no pin needed —
-    # ivf_probe_index's eager checkpoint exists for its TWO consumers
+    # single consumer (the broadcast in _score_lists): no pin needed
     return _score_lists(acc, _probe_lists(probes, cents, 3), 10)
 
 

@@ -169,11 +169,13 @@ def test_model_save_load_roundtrip(spark, model, tmp_path):
     assert loaded.find_synonyms("spark", 3).count() == 3
 
 
-def test_shuffle_join_path_matches_broadcast_path(docs):
+def test_shuffle_join_path_matches_broadcast_path(spark, docs):
     """The 100 TB execution path (params too big to broadcast → the
     pre-partitioned shuffle join, SURVEY §4.3.3) must produce EXACTLY
     the same model as the broadcast path — physical strategy can never
-    change results. broadcast_max_weights=0 forces the fallback."""
+    change results. broadcast_max_weights=0 forces the join path, and
+    autoBroadcastJoinThreshold=-1 keeps Spark from planning this tiny
+    params table's X ⋈ params joins as broadcast joins after all."""
     def rounded(m):
         return {
             r.word: tuple(round(v, 9) for v in r.vector)
@@ -181,11 +183,19 @@ def test_shuffle_join_path_matches_broadcast_path(docs):
         }
 
     bcast = Glove(iterations=3, **CFG).fit(docs)
-    shuffled = Glove(iterations=3, broadcast_max_weights=0, **CFG).fit(docs)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = Glove(iterations=3, broadcast_max_weights=0, **CFG).fit(docs)
+        # the model's frames are lazy: collect them under the same conf
+        shuffled_vecs = rounded(shuffled)
+    finally:
+        spark.conf.set(key, prev)
     assert [round(x, 6) for x in bcast.losses] == [
         round(x, 6) for x in shuffled.losses
     ]
-    assert rounded(bcast) == rounded(shuffled)
+    assert rounded(bcast) == shuffled_vecs
 
 
 def test_max_vocab_truncates_to_top_frequency(spark, docs):
