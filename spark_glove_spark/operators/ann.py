@@ -305,21 +305,27 @@ def ivf_knn(
     return _score_lists(assigned, plists, k)
 
 
-def _ivf_centroids(vectors: DataFrame, n_lists: int, seed: int, max_iter: int):
-    """Driver-side coarse-quantizer fit over the bounded deterministic
-    sample (hash-ordered top-N — partitioning-independent)."""
+def _training_sample(vectors: DataFrame, seed: int):
+    """The quantizer training sample every IVF/IVF-PQ/PQ/OPQ fit uses:
+    the first ``_SAMPLE_CAP`` embeddings in ``xxhash64(vec_id, seed)``
+    order (partitioning-independent), collected as Arrow and widened
+    exactly to an (n, dim) float64 matrix."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    sample = np.stack(
-        [
-            r[0]
-            for r in vectors.select("embedding")
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)))
-            .limit(_SAMPLE_CAP)
-            .collect()
-        ]
-    ).astype(np.float64)
-    return _lloyd(sample, n_lists, max_iter, seed)
+    t = (
+        vectors.select("embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)))
+        .limit(_SAMPLE_CAP)
+        .toArrow()
+    )
+    flat = pc.list_flatten(t.column("embedding")).to_numpy()
+    return flat.reshape(t.num_rows, -1).astype(np.float64)
+
+
+def _ivf_centroids(vectors: DataFrame, n_lists: int, seed: int, max_iter: int):
+    """Driver-side coarse-quantizer fit over :func:`_training_sample`."""
+    return _lloyd(_training_sample(vectors, seed), n_lists, max_iter, seed)
 
 
 def _centroid_literals(centers, cnorms=None) -> Column:
@@ -510,15 +516,20 @@ def ivf_build_index(
     docstring claim "at 100 TB a probe's n_probe lists prune to
     n_probe partitions at scan time" into an actual on-disk layout:
     the index is built ONCE per corpus snapshot and every later query
-    pays only a pruned scan (see :func:`ivf_probe_index`). With
-    ``n_lists`` unpinned, the width derives from corpus size via
-    :func:`ivf_list_schedule` (one count against the source) — the
-    r14 no-fixture-constant-escapes default."""
+    pays only a pruned scan (see :func:`ivf_probe_index`).
+
+    Spark runs only the sample collect and the ``lists/`` write; the
+    driver writes the centroids table with pyarrow. With ``n_lists``
+    unpinned, the width comes from :func:`ivf_list_schedule` of the
+    row count, which is the sample's length below ``_SAMPLE_CAP`` (the
+    sample is then the whole corpus) and a ``count()`` otherwise."""
     import os
 
+    sample = _training_sample(vectors, seed)
     if n_lists is None:
-        n_lists = ivf_list_schedule(vectors.count())[0]
-    centers = _ivf_centroids(vectors, n_lists, seed, max_iter)
+        n_rows = len(sample) if len(sample) < _SAMPLE_CAP else vectors.count()
+        n_lists = ivf_list_schedule(n_rows)[0]
+    centers = _lloyd(sample, n_lists, max_iter, seed)
     if n_lists <= _IVF_LITERAL_MAX:
         cents = _centroid_literals(centers)
         assigned = vectors.withColumn("list_id", _nearest_list_expr(cents))
@@ -534,15 +545,60 @@ def ivf_build_index(
     assigned.write.partitionBy("list_id").mode("overwrite").parquet(
         os.path.join(path, "lists")
     )
-    spark = vectors.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], float((c * c).sum()))
-            for i, c in enumerate(centers)
-        ],
+    _write_centroids(path, centers)
+
+
+def _arrow_rows(rows, ddl: str):
+    """Driver-built ``rows`` (tuples) as a pyarrow Table of the Spark
+    schema ``ddl``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    return pa.Table.from_arrays([list(c) for c in zip(*rows)], schema=schema)
+
+
+def _arrow_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """``spark.createDataFrame(rows, ddl)`` through Arrow: a Python list
+    goes through ``sc.parallelize`` and starts a Python worker, an
+    Arrow table reaches the JVM directly."""
+    return spark.createDataFrame(_arrow_rows(rows, ddl), ddl)
+
+
+def _write_driver_table(path: str, name: str, rows, ddl: str) -> None:
+    """Write driver-built ``rows`` as ``<path>/<name>/part-00000.parquet``
+    with pyarrow (no Spark job). Replaces ``<name>`` as
+    ``mode("overwrite")`` does, but writes beside it and then swaps it
+    in, so a failed write leaves the previous table readable."""
+    import os
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    final = os.path.join(path, name)
+    tmp = os.path.join(path, f".{name}-{uuid.uuid4().hex}")
+    os.makedirs(tmp)
+    try:
+        pq.write_table(_arrow_rows(rows, ddl), os.path.join(tmp, "part-00000.parquet"))
+    except BaseException:
+        shutil.rmtree(tmp)
+        raise
+    if os.path.exists(final):
+        os.rename(final, f"{tmp}.old")
+    os.rename(tmp, final)
+    shutil.rmtree(f"{tmp}.old", ignore_errors=True)
+
+
+def _write_centroids(path: str, centers) -> None:
+    """A persisted IVF/IVF-PQ index's centroids, as
+    :func:`_read_centroids` reads them."""
+    _write_driver_table(
+        path,
+        "centroids",
+        [(i, c.tolist(), float((c * c).sum())) for i, c in enumerate(centers)],
         "list_id int, cv array<double>, cnorm double",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
     )
 
 
@@ -691,7 +747,8 @@ def pipeline_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row count for the catalog comes FREE from the just-written
         # index's parquet footers — a corpus.count() here would add a
         # third full pass per build (r10 review finding)
-        row = spark.createDataFrame(
+        row = _arrow_frame(
+            spark,
             [(version, path, 10, _index_rows(path))],
             "index_version int, path string, n_lists int, corpus_rows long",
         )
@@ -730,7 +787,8 @@ def pipeline_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if audit[1][3] == 0:
         raise AssertionError("rebuilt index surfaced no delta neighbors")
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         audit,
         "index_version int, corpus_rows long, n_results long,"
         " delta_results long, mean_cos double",
@@ -838,7 +896,8 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(version: int, corpus: DataFrame, trigger: str) -> str:
         path = os.path.join(base, f"index_v{version}")
         ivf_build_index(corpus, path, n_lists=10, seed=42)
-        row = spark.createDataFrame(
+        row = _arrow_frame(
+            spark,
             [(version, path, 10, _index_rows(path), trigger)],
             "index_version int, path string, n_lists int,"
             " corpus_rows long, trigger string",
@@ -905,7 +964,8 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             "rebuilt index surfaced no drifted neighbors for drifted probes"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         [
             row + (len(pinned) if row[0] == 1 else len(current),
                    pinned_drift if row[0] == 1 else current_drift)
@@ -952,17 +1012,7 @@ def _ivfpq_quantizers(
     sample's RESIDUALS from its coarse assignment (the FAISS
     ``train()`` split: quantizer quality degrades gracefully under
     sampling, so the 100 TB build never scans twice for training)."""
-    import numpy as np
-
-    sample = np.stack(
-        [
-            r[0]
-            for r in vectors.select("embedding")
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)))
-            .limit(_SAMPLE_CAP)
-            .collect()
-        ]
-    ).astype(np.float64)
+    sample = _training_sample(vectors, seed)
     coarse = _lloyd(sample, n_lists, max_iter, seed)
     d = (
         (sample * sample).sum(axis=1)[:, None]
@@ -1096,7 +1146,8 @@ def ivfpq_build_index(
     in the index: the probe re-fetches exact embeddings for its
     bounded survivor set from the corpus table (see
     :func:`ivfpq_probe_index`), so index bytes stay ∝ m per vector no
-    matter the dimension."""
+    matter the dimension. Spark runs only the sample collect and the
+    ``lists/`` write; the driver writes both small tables with pyarrow."""
     import os
 
     coarse, books = _ivfpq_quantizers(vectors, n_lists, m, ksub, seed, max_iter)
@@ -1121,18 +1172,13 @@ def ivfpq_build_index(
     coded.write.partitionBy("list_id").mode("overwrite").parquet(
         os.path.join(path, "lists")
     )
-    spark = vectors.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], float((c * c).sum()))
-            for i, c in enumerate(coarse)
-        ],
-        "list_id int, cv array<double>, cnorm double",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    spark.createDataFrame(
-        [(s, c, cvs[s][c]) for s in range(m) for c in range(len(cvs[s]))],
+    _write_centroids(path, coarse)
+    _write_driver_table(
+        path,
+        "codebooks",
+        [(s, c, cv) for s, book in enumerate(cvs) for c, cv in enumerate(book)],
         "s int, code int, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    )
 
 
 def ivfpq_probe_index(
@@ -1525,19 +1571,9 @@ def h16_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum of 8-d dot products in codegen. Rows-only to the driver
     (codebook cells are model-specific); the recall tooth vs exact
     h15 lives in tests/test_quant.py."""
-    import numpy as np
-
     m, ksub, subdim = 8, 16, DIM // 8
     e = table(spark, sf_dir, "embeddings")
-    sample = np.stack(
-        [
-            r[0]
-            for r in e.select("embedding")
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(7)))
-            .limit(_SAMPLE_CAP)
-            .collect()
-        ]
-    ).astype(np.float64)
+    sample = _training_sample(e, 7)
     books = _pq_codebooks(sample, m, ksub, max_iter=10, seed=7)
 
     # per-subspace literals: struct(code, centroid vector, ‖c‖²)
@@ -1663,8 +1699,6 @@ def h16_opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery (rotate -> allocate -> encode -> ADC in rotated space
     -> exact re-rank in original space) is what this query keeps
     tested. Rows-only; recall floor in tests/test_quant.py."""
-    import numpy as np
-
     from spark_glove_spark.operators.clustering import pca_components
 
     m, ksub, subdim = 8, 16, DIM // 8
@@ -1672,15 +1706,7 @@ def h16_opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     order = _eigenvalue_allocation(eigvals, m, subdim)
     comps = comps[order]
     e = table(spark, sf_dir, "embeddings")
-    sample = np.stack(
-        [
-            r[0]
-            for r in e.select("embedding")
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(7)))
-            .limit(_SAMPLE_CAP)
-            .collect()
-        ]
-    ).astype(np.float64)
+    sample = _training_sample(e, 7)
     books = _pq_codebooks(sample @ comps.T, m, ksub, max_iter=10, seed=7)
 
     cents = [
