@@ -16,43 +16,48 @@ per-sample loop; same fixed point, deterministic given a seed.
 
 Once per fit, X is built with ONE pair explode, partial aggregate and
 (wi, wj) shuffle: each canonical cell is mirrored by a single explode
-into (i,j,x) + (j,i,x), or (i,i,2x) on the diagonal. Execution shape per
-iteration (designed for |X| ≈ 10⁹ rows at 100 TB corpus scale), when
-the parameter table fits the broadcast cap (V·d ≤ broadcast_max_weights):
+into (i,j,x) + (j,i,x), or (i,i,2x) on the diagonal, then hash-
+partitioned by i and persisted. The vocabulary is one collect of the
+frequency-ranked words (ids = rank); the parameter init runs on the
+driver from per-id seeded RNGs.
 
-  mapInArrow gradient kernel over X's           X is pre-partitioned by i
-  own (i, j, logx, fx) rows                     and persisted; the kernel
-                                                reads dense (W, W̃, b, b̃)
-                                                numpy arrays from ONE
-                                                Spark broadcast, indexed
-                                                by id; partial per-id
-                                                aggregation INSIDE each
-                                                batch so the emitted
-                                                stream is ~unique ids per
-                                                batch, not |X|
-  → cogroup(grads, params) by id % blocks       ONE fused kernel merges
-    .applyInArrow fused merge+AdaGrad step      partials and steps params
-                                                (few LARGE groups, never
-                                                per-word — SURVEY §4.3.4);
-                                                the loss partials all land
-                                                in block pmod(−1, blocks),
-                                                re-emitted as one id = −1
-                                                row carrying the loss
-  → params.localCheckpoint + persist            lineage truncation —
-                                                MANDATORY for iterative
-                                                plans (SURVEY §4.3.2)
-  → ONE toArrow() collect of                    materializes the checkpoint
-    (id, w, wc, b, bc)                          and gives the loss (the
-                                                id = −1 row) plus the next
-                                                iteration's broadcast; the
-                                                superseded broadcast and
-                                                checkpoint are released
+Execution shape per iteration when the parameter table fits the
+broadcast cap (V·d ≤ broadcast_max_weights, every bench and test
+config):
 
-Three Spark jobs per iteration: the two map stages feeding the cogroup
-and the collect. Above the cap the params are never collected: the
+  mapInArrow symmetric gradient kernel over     X is symmetric and
+  X's own (i, j, logx, fx) rows                 partitioned by i, so for
+                                                each local cell (i, j, x)
+                                                the mirror (j, i, x) is
+                                                the same row read the
+                                                other way round: a task
+                                                sums the COMPLETE centre
+                                                (diff_ij) and context
+                                                (diff_ji) gradients and
+                                                the pair count of every
+                                                id it owns, reading dense
+                                                (W, W̃, b, b̃) from ONE
+                                                Spark broadcast; it emits
+                                                one row per owned id plus
+                                                one loss row
+  → ONE toArrow() collect                       the only Spark job of the
+                                                iteration
+  → mean-gradient AdaGrad step on the driver    params and accumulators
+                                                live there as dense numpy
+                                                arrays (2·V·d doubles,
+                                                bounded by the cap) and
+                                                feed the next broadcast
+
+The returned model's vectors and state are Arrow tables built on the
+driver, so a broadcast-regime fit leaves nothing persisted.
+
+Above the cap the params are a DataFrame and never collected: the
 kernel reads them from X ⋈ params(center i) ⋈ params(context j), joins
-whose X side never re-shuffles, and the loss is a Σb over the id = −1
-row of the checkpoint.
+whose X side never re-shuffles; the partial gradients cogroup with the
+params by id % blocks into one fused merge+AdaGrad applyInArrow
+kernel (few LARGE groups, never per-word — SURVEY §4.3.4), whose
+result is localCheckpointed and persisted (lineage truncation,
+SURVEY §4.3.2); the loss is a Σb over its id = −1 row.
 """
 
 from __future__ import annotations
@@ -63,8 +68,8 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import Broadcast, SparkContext
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -75,6 +80,10 @@ from spark_glove_spark.operators.cooccurrence import cooccurrence_matrix
 _GRADS_SCHEMA = (
     "id long, side int, dvec array<double>, dbias double, dn long"
 )
+_SYM_GRADS_SCHEMA = (
+    "id long, dw array<double>, dwc array<double>, db double, dbc double, dn long"
+)
+_STATE_COLS = ("w", "wc", "b", "bc", "gw", "gwc", "gb", "gbc")
 _PARAMS_SCHEMA = (
     "id long, w array<double>, wc array<double>, b double, bc double, "
     "gw array<double>, gwc array<double>, gb double, gbc double"
@@ -113,12 +122,13 @@ class GloveConfig:
     # h5_glove_fit_micro driver gate). Same training math either way.
     init: str = "uniform"
     blocks: int = 32  # merge-block count; ≈ cluster cores at scale
-    # Max parameter-table size (words × dim) that the fit collects
-    # each iteration and broadcasts to the gradient kernel as dense
-    # arrays (no join); above it the kernel reads params through
-    # X ⋈ params joins on X's pre-partitioned side (SURVEY §4.3.3).
-    # Results are identical either way (tested); only the physical
-    # plan changes.
+    # Max parameter-table size (words × dim) that the fit keeps on the
+    # driver as dense arrays: each iteration broadcasts them to the
+    # symmetric gradient kernel, collects one row per word and steps
+    # them there. Above it the params stay a DataFrame, read through
+    # X ⋈ params joins on X's pre-partitioned side (SURVEY §4.3.3) and
+    # stepped by a cogrouped kernel. Results are the same either way
+    # up to summation order (tested); only the physical plan changes.
     broadcast_max_weights: int = 2_000_000
 
 
@@ -252,24 +262,36 @@ class GloveModel:
         )
 
 
-def build_vocabulary(
+def _vocabulary_table(
     docs: DataFrame, cfg: GloveConfig, text_col: str = "text"
-) -> DataFrame:
-    """D8: word → (freq, 0-based id), frequency-ranked (paper §4.2),
-    truncated to max_vocab. Global row_number over a vocab-sized table
-    — single partition by design; the table is ≤ max_vocab rows."""
+) -> pa.Table:
+    """The vocabulary as one driver Arrow table (word, freq, id): the
+    top max_vocab words by (freq desc, word) collected in that order,
+    id = row position — the ids of a row_number over the same order."""
     counts = (
         docs.select(F.explode(tokens_expr(docs, text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .where(F.col("freq") >= cfg.min_count)
     )
-    w = Window.orderBy(F.col("freq").desc(), F.col("word"))
-    return counts.select(
-        "word",
-        "freq",
-        (F.row_number().over(w) - 1).cast("long").alias("id"),
-    ).where(F.col("id") < cfg.max_vocab)
+    ranked = (
+        counts.orderBy(F.col("freq").desc(), F.col("word"))
+        .limit(cfg.max_vocab)
+        .toArrow()
+    )
+    return ranked.append_column(
+        "id", pa.array(np.arange(ranked.num_rows), pa.int64())
+    )
+
+
+def build_vocabulary(
+    docs: DataFrame, cfg: GloveConfig, text_col: str = "text"
+) -> DataFrame:
+    """D8: word → (freq, 0-based id), frequency-ranked (paper §4.2),
+    truncated to max_vocab. Collected once (≤ max_vocab rows) and
+    handed back as an Arrow-backed frame, so reading it never re-runs
+    the corpus scan."""
+    return docs.sparkSession.createDataFrame(_vocabulary_table(docs, cfg, text_col))
 
 
 def build_cooccurrence(
@@ -322,29 +344,33 @@ def _lists(m: np.ndarray, loss_row: bool = False) -> pa.Array:
     )
 
 
+def _init_vectors(ids: np.ndarray, cfg: GloveConfig) -> tuple[np.ndarray, np.ndarray]:
+    """Initial (W, W̃) rows of word ``ids``: uniform in ±0.5/dim
+    (reference C init) from a per-id seeded RNG, so the values do not
+    depend on how ids are batched. ``cfg.init == "grid"`` swaps the RNG
+    for a closed-form integer-mod formula (values in ±0.10, exactly
+    representable) that a SQL oracle can reproduce term-for-term."""
+    dim = cfg.dim
+    if cfg.init == "grid":
+        k = np.arange(dim, dtype=np.int64) + ids[:, None] * dim
+        return (k * 37 % 21 - 10) / 100.0, (k * 53 % 21 - 10) / 100.0
+    rngs = (np.random.default_rng([cfg.seed, int(i)]) for i in ids)
+    vecs = (np.stack([r.random((2, dim)) for r in rngs]) - 0.5) / dim
+    return vecs[:, 0], vecs[:, 1]
+
+
 def _init_params(vocab: DataFrame, cfg: GloveConfig) -> DataFrame:
-    """Distributed parameter init: uniform in ±0.5/dim (reference C
-    init), per-id seeded RNG so results are independent of
-    partitioning; AdaGrad accumulators start at 1.0. ``cfg.init ==
-    "grid"`` swaps the RNG for a closed-form integer-mod formula
-    (values in ±0.10, exactly representable) that a SQL oracle can
-    reproduce term-for-term."""
-    dim, seed, mode = cfg.dim, cfg.seed, cfg.init
+    """Distributed parameter init (:func:`_init_vectors`, biases 0,
+    AdaGrad accumulators 1.0) for the params table above the
+    broadcast cap."""
+    dim = cfg.dim
 
     def init(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            ids = rb.column("id").to_numpy()
-            n = len(ids)
+            n = rb.num_rows
             if n == 0:
                 continue
-            if mode == "grid":
-                k = np.arange(dim, dtype=np.int64) + ids[:, None] * dim
-                w = (k * 37 % 21 - 10) / 100.0
-                wc = (k * 53 % 21 - 10) / 100.0
-            else:
-                rngs = (np.random.default_rng([seed, int(i)]) for i in ids)
-                vecs = (np.stack([r.random((2, dim)) for r in rngs]) - 0.5) / dim
-                w, wc = vecs[:, 0], vecs[:, 1]
+            w, wc = _init_vectors(rb.column("id").to_numpy(), cfg)
             zeros, ones, acc = np.zeros(n), np.ones(n), _lists(np.ones((n, dim)))
             yield pa.RecordBatch.from_arrays(
                 [rb.column("id"), _lists(w), _lists(wc), zeros, zeros, acc, acc, ones, ones],
@@ -405,39 +431,81 @@ def _grad_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         )
 
 
-def _make_broadcast_grad_kernel(params: Broadcast):
-    """Gradient kernel over X's own (i, j, logx, fx) rows: the vectors
-    and biases come from ``params``, a broadcast of dense (W, WC, b,
-    bc) arrays indexed by word id."""
+def _bincount_rows(inv: np.ndarray, m: np.ndarray, n: int) -> np.ndarray:
+    """Row sums of ``m`` grouped by ``inv`` into an (n, dim) array: one
+    ``np.bincount`` over flattened (group, column) bins, which adds each
+    bin's terms in row order, as ``np.add.at`` does."""
+    dim = m.shape[1]
+    bins = (inv[:, None] * dim + np.arange(dim)).ravel()
+    return np.bincount(bins, m.ravel(), n * dim).reshape(n, dim)
+
+
+def _make_symmetric_grad_kernel(params: Broadcast):
+    """Gradient kernel over X's own (i, j, logx, fx) rows for the
+    broadcast regime; ``params`` is a broadcast of dense (W, WC, b, bc)
+    arrays indexed by word id.
+
+    X is symmetric and partitioned by i, so each id's context cells
+    (k, i) are the mirrors of its own centre cells (i, k), with the
+    same logx and fx. One task therefore sums the COMPLETE gradients of
+    every id i it holds: the centre side over diff_ik (W_i·W̃_k + b_i +
+    b̃_k − ln x), the context side over diff_ki (W_k·W̃_i + b_k + b̃_i −
+    ln x), and the pair count, which is the same for both sides. It
+    emits (id, Σdw, Σdwc, Σdb, Σdbc, n) once per held id plus one loss
+    row (id = −1, Σ ½·f(x)·diff_ik² in ``db``). Sums accumulate in
+    dense (V, dim) arrays; each batch adds its per-id bincount."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         W, WC, b, bc = params.value
+        DW, DWC = np.zeros(W.shape), np.zeros(W.shape)
+        DB, DBC = np.zeros(len(b)), np.zeros(len(b))
+        DN = np.zeros(len(b), dtype=np.int64)
+        loss = 0.0
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             i = rb.column("i").to_numpy()
             j = rb.column("j").to_numpy()
-            yield _grad_batch(
-                i, j, W[i], WC[j], b[i], bc[j],
-                rb.column("logx").to_numpy(), rb.column("fx").to_numpy(),
-            )
+            logx, fx = rb.column("logx").to_numpy(), rb.column("fx").to_numpy()
+            diff = (W[i] * WC[j]).sum(axis=1) + b[i] + bc[j] - logx
+            fd = fx * diff
+            fdm = fx * ((W[j] * WC[i]).sum(axis=1) + b[j] + bc[i] - logx)
+            loss += 0.5 * float((fd * diff).sum())
+            uniq, inv = np.unique(i, return_inverse=True)
+            n = len(uniq)
+            DW[uniq] += _bincount_rows(inv, fd[:, None] * WC[j], n)
+            DWC[uniq] += _bincount_rows(inv, fdm[:, None] * W[j], n)
+            DB[uniq] += np.bincount(inv, fd, n)
+            DBC[uniq] += np.bincount(inv, fdm, n)
+            DN[uniq] += np.bincount(inv, minlength=n)
+        ids = np.flatnonzero(DN)
+        yield pa.RecordBatch.from_arrays(
+            [
+                np.append(ids, -1),
+                _lists(DW[ids], loss_row=True),
+                _lists(DWC[ids], loss_row=True),
+                np.append(DB[ids], loss),
+                np.append(DBC[ids], 0.0),
+                np.append(DN[ids], 0),
+            ],
+            names=["id", "dw", "dwc", "db", "dbc", "dn"],
+        )
 
     return kernel
 
 
-def _broadcast_params(sc: SparkContext, rows: pa.Table) -> Broadcast:
-    """One broadcast of the dense (W, WC, b, bc) arrays held by the
-    collected params rows (id, w, wc, b, bc); the id = −1 loss row is
-    skipped. Vocabulary ids are dense 0..V−1 (also after ``max_vocab``
-    truncation and for a warm start, whose params are keyed by the new
-    vocabulary), so row k of the id-sorted rows is word k."""
-    rows = rows.filter(pc.greater_equal(rows.column("id"), 0)).sort_by("id")
-    return sc.broadcast(
-        (
-            _matrix(rows.column("w")), _matrix(rows.column("wc")),
-            rows.column("b").to_numpy(), rows.column("bc").to_numpy(),
-        )
-    )
+def _adagrad(
+    V: np.ndarray, GV: np.ndarray, bias: np.ndarray, gbias: np.ndarray,
+    rows, dv: np.ndarray, db: np.ndarray, eta: float,
+) -> None:
+    """One AdaGrad step, in place, on ``rows`` of one side's vectors
+    ``V`` and biases ``bias`` with MEAN gradients (dv, db); the step
+    reads the pre-update accumulators (GV, gbias), which then grow by
+    the squared gradient."""
+    V[rows] = V[rows] - eta * dv / np.sqrt(GV[rows])
+    GV[rows] = GV[rows] + dv * dv
+    bias[rows] = bias[rows] - eta * db / np.sqrt(gbias[rows])
+    gbias[rows] = gbias[rows] + db * db
 
 
 def _make_step_kernel(eta: float):
@@ -514,12 +582,10 @@ def _make_step_kernel(eta: float):
                     m = DN > 0
                     if m.any():
                         dnm = DN[m]
-                        dv = DV[m] / dnm[:, None]
-                        db = DB[m] / dnm
-                        V[m] = V[m] - eta * dv / np.sqrt(GV[m])
-                        GV[m] = GV[m] + dv * dv
-                        bias[m] = bias[m] - eta * db / np.sqrt(gbias[m])
-                        gbias[m] = gbias[m] + db * db
+                        _adagrad(
+                            V, GV, bias, gbias, m,
+                            DV[m] / dnm[:, None], DB[m] / dnm, eta,
+                        )
             out.append(
                 pa.Table.from_arrays(
                     [
@@ -567,22 +633,20 @@ class Glove:
         the fresh init. On an unchanged corpus, continuation is
         exactly the uninterrupted run."""
         cfg = self.config
-        vocab = build_vocabulary(docs, cfg, text_col)
-        vocab.persist(StorageLevel.MEMORY_AND_DISK)
-        vocab_n = vocab.count()
+        vocab_t = _vocabulary_table(docs, cfg, text_col)
+        vocab_n = vocab_t.num_rows
         if vocab_n == 0:
-            vocab.unpersist()
             raise ValueError(
                 f"empty vocabulary: no word reaches min_count={cfg.min_count}"
             )
-        # Where the gradient kernel reads params from. When the whole
-        # parameter table fits comfortably in an executor (≤ ~16 MB of
-        # vector doubles per side), the fit collects it once per
-        # iteration anyway (that collect also reads the loss) and
-        # broadcasts it as dense arrays, so the kernel runs over X's
-        # cached (i, j, logx, fx) partitions with no join at all. A
-        # 400k-word × 300-d vocab exceeds the cap; then X ⋈ params is a
-        # join whose X side is pre-partitioned by i (SURVEY.md §4.3.3).
+        vocab = docs.sparkSession.createDataFrame(vocab_t)
+        # Where the params live. When the whole parameter table fits
+        # comfortably in an executor (≤ ~16 MB of vector doubles per
+        # side), the driver holds it as dense arrays and broadcasts it
+        # to a kernel over X's cached (i, j, logx, fx) partitions, with
+        # no join and no shuffle. A 400k-word × 300-d vocab exceeds the
+        # cap; then X ⋈ params is a join whose X side is pre-partitioned
+        # by i (SURVEY.md §4.3.3).
         broadcast_params = vocab_n * cfg.dim <= cfg.broadcast_max_weights
         # Effective parallelism scales with the co-occurrence matrix:
         # |X| ≤ vocab², and each block is a Python-worker round-trip per
@@ -596,114 +660,159 @@ class Glove:
             .repartition(blocks, "i")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if x.count() == 0:  # materializes X once; reused every iteration
-            x.unpersist()
-            vocab.unpersist()
-            raise ValueError(
-                "empty co-occurrence matrix: no two vocabulary words "
-                f"co-occur within window={cfg.window}"
-            )
-
-        if initial_state is None:
-            params = _init_params(vocab, cfg).localCheckpoint(eager=True)
-        else:
-            cols = ["w", "wc", "b", "bc", "gw", "gwc", "gb", "gbc"]
-            carried = vocab.join(initial_state, "word").select("id", *cols)
-            missing = vocab.join(
-                initial_state.select("word"), "word", "left_anti"
-            )
-            # fresh init ONLY for words the state lacks — the carried
-            # rows keep their embeddings AND accumulators verbatim
-            params = (
-                _init_params(missing, cfg)
-                .unionByName(carried)
-                .localCheckpoint(eager=True)
-            )
-        losses: list[float] = []
-        step_kernel = _make_step_kernel(cfg.eta)
-        blk = F.pmod(F.col("id"), F.lit(blocks)).alias("blk")
-        held = params  # the checkpointed frame ``params`` reads
-        sc = docs.sparkSession.sparkContext
-        collected = ("id", "w", "wc", "b", "bc")
-        bcast = (
-            _broadcast_params(sc, params.select(*collected).toArrow())
-            if broadcast_params and cfg.iterations
-            else None
-        )
-
         try:
-            for it in range(cfg.iterations):
-                if broadcast_params:
-                    grads = x.select("i", "j", "logx", "fx").mapInArrow(
-                        _make_broadcast_grad_kernel(bcast), schema=_GRADS_SCHEMA
-                    )
-                else:
-                    center = params.select(F.col("id").alias("i"), "w", "b")
-                    context = params.select(F.col("id").alias("j"), "wc", "bc")
-                    joined = x.join(center, "i").join(context, "j")
-                    grads = joined.mapInArrow(_grad_kernel, schema=_GRADS_SCHEMA)
-                # Partial gradients cogroup with the current params by
-                # id-block, and the fused kernel merges + steps in a single
-                # Python pass. Every id = −1 loss row lands in block
-                # pmod(−1, blocks), whose kernel call re-emits their sum as
-                # stepped's one id = −1 row.
-                # localCheckpoint truncates LINEAGE but INHERITS the source
-                # plan's Catalyst size estimate — and the default stats
-                # visitor multiplies child sizes, so a plan referencing
-                # params several times (center, context, cogroup) would
-                # multiply the estimate's BigInt *bit length* every
-                # iteration until query planning spends whole seconds
-                # multiplying million-digit integers (measured: 4× slowdown
-                # per iteration from ~it 12). The persist + the collect
-                # below materialize the iteration's result as an
-                # InMemoryRelation whose stats are the ACTUAL cached bytes,
-                # resetting the estimate chain.
-                stepped = (
-                    grads.groupBy(blk)
-                    .cogroup(params.groupBy(blk))
-                    .applyInArrow(step_kernel, schema=_PARAMS_SCHEMA)
-                    # lazy checkpoint: the collect below is this
-                    # iteration's first action and materializes the
-                    # checkpoint AND the persist in ONE job (eager=True
-                    # would run the kernel as a job of its own before
-                    # the collect). Lineage is still cut and the stats
-                    # chain still resets at the same point.
-                    .localCheckpoint(eager=False)  # cut lineage — O(3^T) plan growth otherwise
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+            if x.count() == 0:  # materializes X once; reused every iteration
+                raise ValueError(
+                    "empty co-occurrence matrix: no two vocabulary words "
+                    f"co-occur within window={cfg.window}"
                 )
-                if broadcast_params:
-                    # one collect gives the loss and the next broadcast; the
-                    # kernel that read the old one has run for the last time
-                    rows = stepped.select(*collected).toArrow()
-                    ids = rows.column("id").to_numpy()
-                    (loss,) = rows.column("b").to_numpy()[ids == -1]
-                    more = it + 1 < cfg.iterations
-                    old, bcast = bcast, _broadcast_params(sc, rows) if more else None
-                    old.destroy()
-                else:
-                    loss = (
-                        stepped.where(F.col("id") == -1)
-                        .agg(F.sum("b").alias("loss"))
-                        .collect()[0]["loss"]
-                    )
-                losses.append(float(loss))
-                params = stepped.where(F.col("id") >= 0)
-                # stepped is materialized and cut from its lineage, so the
-                # previous iteration's checkpoint is no longer read
-                _release_checkpoint(held)
-                held = stepped
+            if broadcast_params:
+                return _fit_dense(x, vocab, vocab_t, cfg, initial_state)
+            return _fit_joined(x, vocab, cfg, blocks, initial_state)
         finally:
-            if bcast is not None:  # a fit that raised mid-loop
-                bcast.destroy()
+            x.unpersist()
 
-        vectors = params.join(vocab, "id").select(
-            "word",
-            "id",
-            F.zip_with("w", "wc", lambda a, b: a + b).alias("vector"),
+
+def _fit_dense(
+    x: DataFrame, vocab: DataFrame, vocab_t: pa.Table, cfg: GloveConfig,
+    initial_state: DataFrame | None,
+) -> GloveModel:
+    """The fit under the broadcast cap: params and AdaGrad accumulators
+    are dense driver arrays indexed by word id, and an iteration is one
+    Spark job, the symmetric kernel's collect."""
+    spark = x.sparkSession
+    n = vocab_t.num_rows
+    W, WC = (np.ascontiguousarray(m) for m in _init_vectors(np.arange(n), cfg))
+    b, bc, gb, gbc = np.zeros(n), np.zeros(n), np.ones(n), np.ones(n)
+    GW, GWC = np.ones(W.shape), np.ones(W.shape)
+    params = dict(w=W, wc=WC, b=b, bc=bc, gw=GW, gwc=GWC, gb=gb, gbc=gbc)
+    if initial_state is not None:
+        # carried words keep their embeddings AND accumulators verbatim;
+        # the rest keep the fresh init (per-id seeded, so the same bits)
+        carried = vocab.join(initial_state, "word").select("id", *params).toArrow()
+        if carried.num_rows:
+            rows = carried.column("id").to_numpy()
+            for name, arr in params.items():
+                col = carried.column(name)
+                arr[rows] = _matrix(col) if arr.ndim == 2 else col.to_numpy()
+
+    own = x.select("i", "j", "logx", "fx")
+    sc = spark.sparkContext
+    losses: list[float] = []
+    for _ in range(cfg.iterations):
+        bcast = sc.broadcast((W, WC, b, bc))
+        try:
+            grads = own.mapInArrow(
+                _make_symmetric_grad_kernel(bcast), schema=_SYM_GRADS_SCHEMA
+            ).toArrow()
+        finally:
+            bcast.destroy()
+        ids = grads.column("id").to_numpy()
+        real = ids >= 0
+        losses.append(float(grads.column("db").to_numpy()[~real].sum()))
+        # X is partitioned by i, so each id arrives in exactly one row
+        grads = grads.filter(pa.array(real))
+        ids = ids[real]
+        dn = grads.column("dn").to_numpy().astype(np.float64)
+        for V, GV, bias, gbias, dv, db in (
+            (W, GW, b, gb, "dw", "db"),
+            (WC, GWC, bc, gbc, "dwc", "dbc"),
+        ):
+            _adagrad(
+                V, GV, bias, gbias, ids,
+                _matrix(grads.column(dv)) / dn[:, None],
+                grads.column(db).to_numpy() / dn, cfg.eta,
+            )
+
+    words = vocab_t.column("word")
+    vectors = pa.table(
+        {"word": words, "id": vocab_t.column("id"), "vector": _lists(W + WC)}
+    )
+    state = pa.table(
+        {
+            "word": words,
+            **{k: _lists(v) if v.ndim == 2 else v for k, v in params.items()},
+        }
+    )
+    return GloveModel(
+        vectors=spark.createDataFrame(vectors),
+        losses=losses,
+        state=spark.createDataFrame(state),
+    )
+
+
+def _fit_joined(
+    x: DataFrame, vocab: DataFrame, cfg: GloveConfig, blocks: int,
+    initial_state: DataFrame | None,
+) -> GloveModel:
+    """The fit above the broadcast cap: params are a checkpointed
+    DataFrame joined onto X and stepped by the cogrouped kernel."""
+    if initial_state is None:
+        params = _init_params(vocab, cfg).localCheckpoint(eager=True)
+    else:
+        carried = vocab.join(initial_state, "word").select("id", *_STATE_COLS)
+        missing = vocab.join(initial_state.select("word"), "word", "left_anti")
+        # fresh init ONLY for words the state lacks — the carried
+        # rows keep their embeddings AND accumulators verbatim
+        params = (
+            _init_params(missing, cfg)
+            .unionByName(carried)
+            .localCheckpoint(eager=True)
         )
-        state = params.join(vocab, "id").select(
-            "word", "w", "wc", "b", "bc", "gw", "gwc", "gb", "gbc"
+    losses: list[float] = []
+    step_kernel = _make_step_kernel(cfg.eta)
+    blk = F.pmod(F.col("id"), F.lit(blocks)).alias("blk")
+    held = params  # the checkpointed frame ``params`` reads
+
+    for _ in range(cfg.iterations):
+        center = params.select(F.col("id").alias("i"), "w", "b")
+        context = params.select(F.col("id").alias("j"), "wc", "bc")
+        joined = x.join(center, "i").join(context, "j")
+        grads = joined.mapInArrow(_grad_kernel, schema=_GRADS_SCHEMA)
+        # Partial gradients cogroup with the current params by
+        # id-block, and the fused kernel merges + steps in a single
+        # Python pass. Every id = −1 loss row lands in block
+        # pmod(−1, blocks), whose kernel call re-emits their sum as
+        # stepped's one id = −1 row.
+        # localCheckpoint truncates LINEAGE but INHERITS the source
+        # plan's Catalyst size estimate — and the default stats
+        # visitor multiplies child sizes, so a plan referencing
+        # params several times (center, context, cogroup) would
+        # multiply the estimate's BigInt *bit length* every
+        # iteration until query planning spends whole seconds
+        # multiplying million-digit integers (measured: 4× slowdown
+        # per iteration from ~it 12). The persist + the loss job
+        # below materialize the iteration's result as an
+        # InMemoryRelation whose stats are the ACTUAL cached bytes,
+        # resetting the estimate chain.
+        stepped = (
+            grads.groupBy(blk)
+            .cogroup(params.groupBy(blk))
+            .applyInArrow(step_kernel, schema=_PARAMS_SCHEMA)
+            # lazy checkpoint: the loss job below is this iteration's
+            # first action and materializes the checkpoint AND the
+            # persist (eager=True would run the kernel as a job of its
+            # own first). Lineage is still cut and the stats chain
+            # still resets at the same point.
+            .localCheckpoint(eager=False)  # cut lineage — O(3^T) plan growth otherwise
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        x.unpersist()
-        vocab.unpersist()
-        return GloveModel(vectors=vectors, losses=losses, state=state)
+        loss = (
+            stepped.where(F.col("id") == -1)
+            .agg(F.sum("b").alias("loss"))
+            .collect()[0]["loss"]
+        )
+        losses.append(float(loss))
+        params = stepped.where(F.col("id") >= 0)
+        # stepped is materialized and cut from its lineage, so the
+        # previous iteration's checkpoint is no longer read
+        _release_checkpoint(held)
+        held = stepped
+
+    vectors = params.join(vocab, "id").select(
+        "word",
+        "id",
+        F.zip_with("w", "wc", lambda a, b: a + b).alias("vector"),
+    )
+    state = params.join(vocab, "id").select("word", *_STATE_COLS)
+    return GloveModel(vectors=vectors, losses=losses, state=state)

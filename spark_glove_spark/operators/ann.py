@@ -522,7 +522,9 @@ def ivf_build_index(
     driver writes the centroids table with pyarrow. With ``n_lists``
     unpinned, the width comes from :func:`ivf_list_schedule` of the
     row count, which is the sample's length below ``_SAMPLE_CAP`` (the
-    sample is then the whole corpus) and a ``count()`` otherwise."""
+    sample is then the whole corpus) and a ``count()`` otherwise. A
+    rebuild at an existing path swaps the whole index in only after
+    every table is written (:func:`_publish_index`)."""
     import os
 
     sample = _training_sample(vectors, seed)
@@ -542,10 +544,12 @@ def ivf_build_index(
         assigned = _assign_lists_np(vectors, centers).repartition(
             F.col("list_id")
         )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        os.path.join(path, "lists")
-    )
-    _write_centroids(path, centers)
+
+    def write(tmp: str) -> None:
+        assigned.write.partitionBy("list_id").parquet(os.path.join(tmp, "lists"))
+        _write_centroids(tmp, centers)
+
+    _publish_index(path, write)
 
 
 def _arrow_rows(rows, ddl: str):
@@ -568,26 +572,39 @@ def _arrow_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
 
 def _write_driver_table(path: str, name: str, rows, ddl: str) -> None:
     """Write driver-built ``rows`` as ``<path>/<name>/part-00000.parquet``
-    with pyarrow (no Spark job). Replaces ``<name>`` as
-    ``mode("overwrite")`` does, but writes beside it and then swaps it
-    in, so a failed write leaves the previous table readable."""
+    with pyarrow (no Spark job), the layout a Spark write of one
+    partition leaves."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(path, name))
+    pq.write_table(
+        _arrow_rows(rows, ddl), os.path.join(path, name, "part-00000.parquet")
+    )
+
+
+def _publish_index(path: str, write) -> None:
+    """Build a persisted index as a whole: ``write(tmp)`` writes every
+    table (``lists/``, centroids, codebooks) into a hidden sibling
+    directory of ``path``, which then replaces ``path``. A build that
+    fails in any write removes its sibling and leaves the previous
+    index, lists and centroids together, as it was. Nothing else lives
+    under an index path, so the whole directory is the unit."""
     import os
     import shutil
     import uuid
 
-    import pyarrow.parquet as pq
-
-    final = os.path.join(path, name)
-    tmp = os.path.join(path, f".{name}-{uuid.uuid4().hex}")
-    os.makedirs(tmp)
+    parent, name = os.path.split(os.path.abspath(path))
+    tmp = os.path.join(parent, f".{name}-{uuid.uuid4().hex}")
     try:
-        pq.write_table(_arrow_rows(rows, ddl), os.path.join(tmp, "part-00000.parquet"))
+        write(tmp)
     except BaseException:
-        shutil.rmtree(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
         raise
-    if os.path.exists(final):
-        os.rename(final, f"{tmp}.old")
-    os.rename(tmp, final)
+    if os.path.exists(path):
+        os.rename(path, f"{tmp}.old")
+    os.rename(tmp, path)
     shutil.rmtree(f"{tmp}.old", ignore_errors=True)
 
 
@@ -1147,7 +1164,9 @@ def ivfpq_build_index(
     bounded survivor set from the corpus table (see
     :func:`ivfpq_probe_index`), so index bytes stay ∝ m per vector no
     matter the dimension. Spark runs only the sample collect and the
-    ``lists/`` write; the driver writes both small tables with pyarrow."""
+    ``lists/`` write; the driver writes both small tables with pyarrow.
+    The three tables replace an index at ``path`` together
+    (:func:`_publish_index`)."""
     import os
 
     coarse, books = _ivfpq_quantizers(vectors, n_lists, m, ksub, seed, max_iter)
@@ -1169,16 +1188,18 @@ def ivfpq_build_index(
     coded = assigned.select(
         *meta, "list_id", _pq_encode_expr(cvs, residual).alias("codes")
     )
-    coded.write.partitionBy("list_id").mode("overwrite").parquet(
-        os.path.join(path, "lists")
-    )
-    _write_centroids(path, coarse)
-    _write_driver_table(
-        path,
-        "codebooks",
-        [(s, c, cv) for s, book in enumerate(cvs) for c, cv in enumerate(book)],
-        "s int, code int, cv array<double>",
-    )
+
+    def write(tmp: str) -> None:
+        coded.write.partitionBy("list_id").parquet(os.path.join(tmp, "lists"))
+        _write_centroids(tmp, coarse)
+        _write_driver_table(
+            tmp,
+            "codebooks",
+            [(s, c, cv) for s, book in enumerate(cvs) for c, cv in enumerate(book)],
+            "s int, code int, cv array<double>",
+        )
+
+    _publish_index(path, write)
 
 
 def ivfpq_probe_index(

@@ -354,11 +354,10 @@ def test_fit_rejects_empty_cooccurrence(spark):
 
 
 def test_broadcast_regime_iteration_jobs(spark, docs):
-    """Under the broadcast cap an iteration is three Spark jobs: the
-    two map stages feeding the cogroup (gradients from X, current
-    params) and the one collect that materializes the stepped params
-    and yields both the loss and the next broadcast. Counted as
-    (jobs(fit(5)) - jobs(fit(2))) / 3, so per-fit setup cancels."""
+    """Under the broadcast cap an iteration is one Spark job: the
+    collect of the symmetric gradient kernel over X; the AdaGrad step
+    runs on the driver. Counted as (jobs(fit(5)) - jobs(fit(2))) / 3,
+    so per-fit setup cancels."""
     sc = spark.sparkContext
 
     def jobs(iterations: int) -> int:
@@ -370,4 +369,60 @@ def test_broadcast_regime_iteration_jobs(spark, docs):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert (jobs(5) - jobs(2)) / 3 == 3
+    assert (jobs(5) - jobs(2)) / 3 == 1
+
+
+def test_broadcast_fit_leaves_nothing_persisted(spark, docs):
+    """Under the broadcast cap the model is built from driver arrays, so
+    a fit (warm start included) unpersists X and holds no RDD after it
+    returns, while the model stays readable."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    m = Glove(iterations=2, **CFG).fit(docs)
+    Glove(iterations=1, **CFG).fit(docs, initial_state=m.state)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert m.vectors.count() == m.state.count() > 0
+
+
+def test_fit_rejects_empty_vocabulary(spark, docs):
+    """No word reaching min_count is a ValueError raised before any
+    Spark state is made: nothing is left persisted."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="empty vocabulary"):
+        Glove(iterations=2, **{**CFG, "min_count": 10**9}).fit(docs)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_vocabulary_ids_match_row_number_under_ties(spark):
+    """Ids are ranks in (freq desc, word) order: on a corpus where many
+    words share a frequency they equal the global row_number over that
+    order, the definition the DuckDB oracles use, also after max_vocab
+    cuts through a tie."""
+    from pyspark.sql import Window
+
+    from spark_glove_spark.glove.trainer import GloveConfig, build_vocabulary
+
+    words = [f"w{k:02d}" for k in range(24)]
+    # frequencies 3..6: six words per frequency, in a scrambled order
+    text = " ".join(w for k, w in enumerate(words) for _ in range(3 + (k * 7) % 4))
+    df = spark.createDataFrame([(0, text), (1, "zz " * 2)], "doc_id long, text string")
+    for max_vocab in (400_000, 9):
+        cfg = GloveConfig(min_count=3, max_vocab=max_vocab)
+        got = [tuple(r) for r in build_vocabulary(df, cfg).orderBy("id").collect()]
+        counts = (
+            df.select(F.explode(F.split("text", " ")).alias("word"))
+            .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+            .where(F.col("freq") >= 3)
+        )
+        w = Window.orderBy(F.col("freq").desc(), F.col("word"))
+        want = [
+            tuple(r)
+            for r in counts.select(
+                "word", "freq", (F.row_number().over(w) - 1).cast("long").alias("id")
+            )
+            .where(F.col("id") < max_vocab)
+            .orderBy("id")
+            .collect()
+        ]
+        assert got == want and len(got) == min(24, max_vocab)

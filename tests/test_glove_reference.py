@@ -25,7 +25,7 @@ from spark_glove_spark.glove import Glove
 from spark_glove_spark.glove.trainer import (
     GloveConfig,
     _grad_kernel,
-    _make_broadcast_grad_kernel,
+    _make_symmetric_grad_kernel,
     build_cooccurrence,
     build_vocabulary,
 )
@@ -166,30 +166,119 @@ def test_cooccurrence_matches_python_bruteforce(spark, corpus):
         assert abs(r.fx - fx) < 1e-12, (r.i, r.j, r.fx, fx)
 
 
-def test_broadcast_kernel_matches_join_layout_kernel():
-    """The two gradient kernels on the same X cells, without Spark: the
-    join layout reads (i, j, logx, fx, w, b, wc, bc) rows, the
-    broadcast one reads (i, j, logx, fx) and indexes dense param
-    arrays by id. Their output batches must be equal bit for bit
-    (repeated ids make the in-batch np.add.at order matter)."""
-    rng = np.random.default_rng(5)
-    n_words, dim, n = 13, 5, 400
+def _symmetric_cells(rng, n_words: int, n_canon: int):
+    """A random symmetric X over ``n_words`` ids: distinct canonical
+    cells (a ≤ c) mirrored into (a, c) and (c, a), a diagonal cell kept
+    once, each mirror with the same logx and fx. Rows come shuffled."""
+    a, c = rng.integers(0, n_words, (2, n_canon))
+    canon = np.unique(np.stack([np.minimum(a, c), np.maximum(a, c)], axis=1), axis=0)
+    logx, fx = rng.normal(size=len(canon)), rng.random(len(canon))
+    off = canon[:, 0] != canon[:, 1]
+    i = np.concatenate([canon[:, 0], canon[off, 1]])
+    j = np.concatenate([canon[:, 1], canon[off, 0]])
+    logx, fx = np.concatenate([logx, logx[off]]), np.concatenate([fx, fx[off]])
+    order = rng.permutation(len(i))
+    assert (~off).any() and off.any(), "want diagonal and off-diagonal cells"
+    return i[order], j[order], logx[order], fx[order]
+
+
+def _params(rng, n_words: int, dim: int):
     W, WC = rng.normal(size=(n_words, dim)), rng.normal(size=(n_words, dim))
-    b, bc = rng.normal(size=n_words), rng.normal(size=n_words)
-    i, j = rng.integers(0, n_words, n), rng.integers(0, n_words, n)
-    logx, fx = rng.random(n), rng.random(n)
+    return W, WC, rng.normal(size=n_words), rng.normal(size=n_words)
+
+
+def _run_symmetric(params, i, j, logx, fx, batch: int) -> dict:
+    """The symmetric kernel over the cells in ``batch``-row Arrow
+    batches, read back as {id: (dw, dwc, db, dbc, n)} plus the loss."""
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [i[s:s + batch], j[s:s + batch], logx[s:s + batch], fx[s:s + batch]],
+            names=["i", "j", "logx", "fx"],
+        )
+        for s in range(0, len(i), batch)
+    ]
+    (out,) = _make_symmetric_grad_kernel(SimpleNamespace(value=params))(iter(batches))
+    rows = out.to_pylist()
+    assert rows[-1]["id"] == -1 and rows[-1]["dw"] is None
+    got = {
+        r["id"]: (np.array(r["dw"]), np.array(r["dwc"]), r["db"], r["dbc"], r["dn"])
+        for r in rows[:-1]
+    }
+    return got, rows[-1]["db"]
+
+
+def _assert_close(got: dict, want: dict, loss: float, want_loss: float) -> None:
+    assert set(got) == set(want)
+    for wid, (dw, dwc, db, dbc, n) in want.items():
+        g = got[wid]
+        np.testing.assert_allclose(g[0], dw, rtol=1e-12, atol=1e-12)
+        np.testing.assert_allclose(g[1], dwc, rtol=1e-12, atol=1e-12)
+        np.testing.assert_allclose([g[2], g[3]], [db, dbc], rtol=1e-12, atol=1e-12)
+        assert g[4] == n
+    assert loss == pytest.approx(want_loss, rel=1e-12)
+
+
+def test_symmetric_kernel_matches_bruteforce():
+    """The broadcast-regime kernel, without Spark, on the cells of one
+    i-partition of a symmetric X: every held id's centre and context
+    gradient sums and pair count equal a cell-by-cell sum over ALL
+    mirrored cells (diagonal ones included), and the loss is the
+    partition's own cells' ½·f·diff². Batches of 7 rows split ids
+    across several Arrow batches."""
+    rng = np.random.default_rng(5)
+    n_words, dim = 13, 5
+    W, WC, b, bc = params = _params(rng, n_words, dim)
+    i, j, logx, fx = _symmetric_cells(rng, n_words, 60)
+    held = np.isin(i, np.arange(0, n_words, 2))  # this task's ids
+    want: dict = {}
+    loss = 0.0
+    for a, c, lx, f in zip(i, j, logx, fx):  # every cell, both sides
+        diff = W[a] @ WC[c] + b[a] + bc[c] - lx
+        for wid, side, vec in ((a, 0, WC[c]), (c, 1, W[a])):
+            if wid % 2:
+                continue
+            acc = want.setdefault(int(wid), [np.zeros(dim), np.zeros(dim), 0.0, 0.0, 0])
+            acc[side] = acc[side] + f * diff * vec
+            acc[2 + side] += f * diff
+            acc[4] += side == 0
+        if a % 2 == 0:
+            loss += 0.5 * f * diff * diff
+    ids = i[held]
+    assert max(np.bincount(ids)) > 7, "no id spans several batches"
+    got, got_loss = _run_symmetric(params, ids, j[held], logx[held], fx[held], 7)
+    _assert_close(got, {k: tuple(v) for k, v in want.items()}, got_loss, loss)
+
+
+def test_symmetric_kernel_matches_summed_join_layout_partials():
+    """The join-layout kernel (used above the broadcast cap) reads each
+    cell's own params and emits per-batch (id, side) partials; summed
+    per id and side, over the same symmetric X, they are the symmetric
+    kernel's totals, and the loss rows agree."""
+    rng = np.random.default_rng(9)
+    n_words, dim = 11, 4
+    W, WC, b, bc = params = _params(rng, n_words, dim)
+    i, j, logx, fx = _symmetric_cells(rng, n_words, 50)
 
     def vecs(m):
         return pa.array(list(m), type=pa.list_(pa.float64()))
 
-    joined = pa.RecordBatch.from_arrays(
-        [i, j, logx, fx, vecs(W[i]), b[i], vecs(WC[j]), bc[j]],
-        names=["i", "j", "logx", "fx", "w", "b", "wc", "bc"],
-    )
-    own = pa.RecordBatch.from_arrays([i, j, logx, fx], names=["i", "j", "logx", "fx"])
-    params = SimpleNamespace(value=(W, WC, b, bc))  # a Broadcast's read side
-
-    (want,) = _grad_kernel(iter([joined]))
-    (got,) = _make_broadcast_grad_kernel(params)(iter([own]))
-    assert got.num_rows > 2 * n_words  # partials per side plus the loss row
-    assert got.serialize().to_pybytes() == want.serialize().to_pybytes()
+    joined = [
+        pa.RecordBatch.from_arrays(
+            [i[s], j[s], logx[s], fx[s], vecs(W[i[s]]), b[i[s]], vecs(WC[j[s]]), bc[j[s]]],
+            names=["i", "j", "logx", "fx", "w", "b", "wc", "bc"],
+        )
+        for s in (slice(0, 40), slice(40, None))
+    ]
+    want: dict = {}
+    loss = 0.0
+    for out in _grad_kernel(iter(joined)):
+        for r in out.to_pylist():
+            if r["side"] == -1:
+                loss += r["dbias"]
+                continue
+            acc = want.setdefault(r["id"], [np.zeros(dim), np.zeros(dim), 0.0, 0.0, 0])
+            acc[r["side"]] = acc[r["side"]] + np.array(r["dvec"])
+            acc[2 + r["side"]] += r["dbias"]
+            acc[4] += r["dn"] if r["side"] == 0 else 0
+    got, got_loss = _run_symmetric(params, i, j, logx, fx, 16)
+    _assert_close(got, {k: tuple(v) for k, v in want.items()}, got_loss, loss)

@@ -136,3 +136,24 @@ def test_rebuild_replaces_the_centroid_table(emb, tmp_path, monkeypatch):
     assert kept_ids.tolist() == [0, 1, 2, 3]
     assert np.array_equal(kept_cv, cv) and np.array_equal(kept_cnorm, cnorm)
     assert sorted(os.listdir(path)) == ["centroids", "lists"]
+
+
+def test_failed_rebuild_keeps_the_whole_index(emb, tmp_path, monkeypatch):
+    """A rebuild that fails in the centroid write, after Spark wrote
+    the new ``lists/``, leaves the previous index whole: its centroids
+    and only its list directories, with no temp directory beside it."""
+    path = str(tmp_path / "index")
+    ivf_build_index(emb, path, n_lists=4)
+
+    def fail(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", fail)
+    with pytest.raises(OSError, match="disk full"):
+        ivf_build_index(emb, path, n_lists=6)
+    assert len(_read_centroids(path)[0]) == 4
+    lists = os.listdir(os.path.join(path, "lists"))
+    assert sorted(d for d in lists if d.startswith("list_id=")) == [
+        f"list_id={k}" for k in range(4)
+    ]
+    assert os.listdir(tmp_path) == ["index"]
