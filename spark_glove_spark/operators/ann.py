@@ -6,7 +6,15 @@ partitioned by bucket (partition pruning turns a probe into a
 single-partition read); recall is tuned by n_planes (fewer bits →
 bigger buckets → higher recall, more compute) and multi-probe (flip
 each bit of the probe's bucket — n_planes extra buckets ≈ +30-40%
-recall for ~n× bucket reads, still ≪ full scan).
+recall for ~n× bucket reads, still ≪ full scan). Single- and
+multi-table LSH are one function, :func:`lsh_knn` (``n_tables``).
+
+IVF and IVF-PQ, in memory, persisted, filtered, drift-monitored or
+stream-ingested, run one implementation of each step: the quantizer
+fit (:func:`_lloyd` over :func:`_training_sample`), the assign
+(:func:`_assign_lists`), the probe-list ranking on the driver
+(:func:`_probe_lists_np`) and the scorer (:func:`_score_lists`, or
+:func:`_ivfpq_score` over :func:`_ivfpq_encode`'s codes).
 
 Rows-only to the driver (bucket membership is plan-seed-specific);
 tests/test_dedup.py asserts recall floors vs the exact H15 baseline
@@ -48,11 +56,25 @@ def lsh_knn(
     k: int = 10,
     n_planes: int = 4,
     seed: int = 42,
-    multiprobe: bool = True,
+    n_tables: int = 1,
     corpus_filter: Column | None = None,
 ) -> DataFrame:
-    """H16: per-probe top-k within the probe's bucket (+ 1-bit-flip
-    neighbor buckets when multiprobe). probes: (probe_id, embedding).
+    """H16: per-probe top-k over the probe's bucket and its n_planes
+    1-bit-flip neighbor buckets (multi-probe), in each of ``n_tables``
+    independent hyperplane sets (table t is seeded ``seed + 1000·t``);
+    candidates from every table and flip are deduped before the top-k.
+    probes: (probe_id, embedding).
+
+    Independent tables decorrelate the misses that doom a single table
+    on unclustered vectors: measured recall vs exact top-10 is 0.94
+    (sf0.001) / 0.80 (sf0.01) at 4 planes × 3 tables, vs 0.48/0.50
+    with one. The budget grows with them: the expected candidate
+    fraction at 3 tables is 1-(1-5/16)³ ≈ 0.68 of the corpus here, the
+    recall-first end of the tradeoff (h16_lsh_multitable), while
+    h16_lsh_ann keeps the single-table budget point. At 100 TB each
+    table is a bucket-partitioned layout; probing L tables is L
+    partition-pruned reads, and the dedup+top-k is WindowGroupLimit-
+    bounded per probe.
 
     ``corpus_filter``: optional metadata predicate applied to the
     bucketed corpus BEFORE the probe join — the same pre-filtering
@@ -60,86 +82,15 @@ def lsh_knn(
     matching sub-corpus; see that docstring for why post-filtering
     the top-k is wrong). At scale the predicate and the bucket equi-
     join compose on the bucket-partitioned corpus scan. Selective
-    filters thin every bucket, so callers should raise multiprobe
-    coverage (or drop n_planes) just as filtered IVF widens n_probe."""
-    corpus = lsh_bucketed(vectors, n_planes, seed)
-    if corpus_filter is not None:
-        corpus = corpus.where(corpus_filter)
-    p = lsh_bucketed(probes, n_planes, seed).select(
-        "probe_id", F.col("embedding").alias("q"), F.col("bucket").alias("pbucket")
-    )
-    if multiprobe:
-        flips = F.array(
-            F.col("pbucket"),
-            *[
-                F.col("pbucket").bitwiseXOR(F.lit(2**i)).cast("long")
-                for i in range(n_planes)
-            ],
-        )
-        p = p.select(
-            "probe_id", "q", F.explode(flips).alias("pbucket")
-        )
-    scored = (
-        corpus.join(
-            F.broadcast(p), corpus["bucket"] == p["pbucket"]
-        )
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            "label",
-            F.round(dot(F.col("embedding"), F.col("q")), 6).alias("cos"),
-        )
-        .distinct()  # multiprobe can hit the same (probe, vec) twice
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-@query("h16_lsh_ann", section="H16")
-def h16_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H16: LSH-accelerated ANN, same probe set as the exact H15
-
-    baseline (vec_id % 100 == 0) so recall is directly comparable."""
-    e = table(spark, sf_dir, "embeddings")
-    probes = e.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    return lsh_knn(e, probes, k=10)
-
-
-def lsh_knn_multitable(
-    vectors: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Classic multi-TABLE LSH (VERDICT r3 item 6): ``n_tables``
-    independent hyperplane sets, each probed with the 1-bit-flip
-    neighborhood, candidates unioned then deduped. Independent tables
-    decorrelate the misses that doom a single table on unclustered
-    vectors: measured recall vs exact top-10 is 0.94 (sf0.001) / 0.80
-    (sf0.01) at 4 planes × 3 tables, vs 0.48/0.50 single-table.
-    Budget: expected candidate fraction 1-(1-5/16)³ ≈ 0.68 of the
-    corpus here — the recall-first end of the tradeoff; drop planes/
-    tables for the budget-first end (the declared h16_lsh_ann keeps
-    the single-table budget point so the two ends stay measurable
-    side by side). At 100 TB each table is a bucket-partitioned
-    layout; probing L tables is L partition-pruned reads, and the
-    dedup+top-k is WindowGroupLimit-bounded per probe."""
+    filters thin every bucket, so callers should drop n_planes (wider
+    buckets) just as filtered IVF widens n_probe."""
     parts = []
     for t in range(n_tables):
         tseed = seed + 1000 * t
         corpus = lsh_bucketed(vectors, n_planes, tseed)
-        p = lsh_bucketed(
-            probes.select("probe_id", "embedding"), n_planes, tseed
-        ).select(
+        if corpus_filter is not None:
+            corpus = corpus.where(corpus_filter)
+        p = lsh_bucketed(probes, n_planes, tseed).select(
             "probe_id",
             F.col("embedding").alias("q"),
             F.col("bucket").alias("pbucket"),
@@ -163,15 +114,27 @@ def lsh_knn_multitable(
             )
         )
     scored = parts[0]
-    for q in parts[1:]:
-        scored = scored.unionByName(q)
-    scored = scored.distinct()  # tables + flips can repeat a pair
+    for part in parts[1:]:
+        scored = scored.unionByName(part)
+    scored = scored.distinct()  # tables and flips can repeat a pair
     w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), "vec_id")
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .drop("rn")
     )
+
+
+@query("h16_lsh_ann", section="H16")
+def h16_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """H16: LSH-accelerated ANN, same probe set as the exact H15
+
+    baseline (vec_id % 100 == 0) so recall is directly comparable."""
+    e = table(spark, sf_dir, "embeddings")
+    probes = e.where(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    return lsh_knn(e, probes, k=10)
 
 
 @query("h16_lsh_multitable", section="H16")
@@ -184,7 +147,7 @@ def h16_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    return lsh_knn_multitable(e, probes, k=10)
+    return lsh_knn(e, probes, k=10, n_tables=3)
 
 
 # Quantizer training sample bound: enough for a coarse quantizer of
@@ -196,7 +159,14 @@ _SAMPLE_CAP = 32_768
 def _lloyd(sample, n_lists: int, max_iter: int, seed: int):
     """Seeded numpy Lloyd iterations; k-means++-free init (distinct
     random sample rows) is plenty for a COARSE quantizer. Empty cells
-    are re-seeded from the farthest points so n_lists cells survive."""
+    are re-seeded from the farthest point so n_lists cells survive.
+    Every mean comes from one bincount + scatter-add, O(n) per
+    iteration at any n_lists: per-centre masks cost O(n·k) Python
+    passes (measured: they, not the distance matrix, dominated a
+    447-list fit). ``np.add.at`` sums a cell's members in row order,
+    as ``members.mean(axis=0)`` does, so the centres are the per-centre
+    loop's bit for bit (tests/test_ivf_probe.py keeps that loop as the
+    reference); convergence is judged over the occupied cells only."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -210,39 +180,18 @@ def _lloyd(sample, n_lists: int, max_iter: int, seed: int):
             + (centers * centers).sum(axis=1)[None, :]
         )
         assign = d.argmin(axis=1)
-        k = len(centers)
-        if k <= _IVF_LITERAL_MAX:
-            # legacy per-center loop: bit-exact with the seeds the
-            # small-index equality tests pin (summation order differs
-            # from the bincount path below)
-            moved = 0.0
-            for c in range(k):
-                members = sample[assign == c]
-                if len(members) == 0:
-                    far = d.min(axis=1).argmax()
-                    centers[c] = sample[far]
-                    continue
-                new = members.mean(axis=0)
-                moved = max(moved, float(((new - centers[c]) ** 2).sum()))
-                centers[c] = new
-        else:
-            # wide quantizer: the per-center masks cost O(n*k) Python
-            # passes per iteration (measured: they, not the distance
-            # matrix, dominated a 447-list fit); one bincount +
-            # scatter-add computes every mean in O(n)
-            counts = np.bincount(assign, minlength=k)
-            sums = np.zeros_like(centers)
-            np.add.at(sums, assign, sample)
-            occupied = counts > 0
-            new_centers = centers.copy()
-            new_centers[occupied] = (
-                sums[occupied] / counts[occupied][:, None]
-            )
-            if not occupied.all():
-                far = d.min(axis=1).argmax()
-                new_centers[~occupied] = sample[far]
-            moved = float(((new_centers - centers) ** 2).sum(axis=1).max())
-            centers = new_centers
+        counts = np.bincount(assign, minlength=len(centers))
+        sums = np.zeros_like(centers)
+        np.add.at(sums, assign, sample)
+        occupied = counts > 0
+        new_centers = centers.copy()
+        new_centers[occupied] = sums[occupied] / counts[occupied][:, None]
+        moved = float(
+            ((new_centers[occupied] - centers[occupied]) ** 2).sum(axis=1).max()
+        )
+        if not occupied.all():
+            new_centers[~occupied] = sample[d.min(axis=1).argmax()]
+        centers = new_centers
         if moved < 1e-12:
             break
     return centers
@@ -293,15 +242,20 @@ def ivf_knn(
     corpus). At 100 TB the sample read is one scan of the embedding
     column and the quality loss of sampling a coarse quantizer is
     negligible — exactly the FAISS train/add split.
+
+    Each later step is the persisted index's own: the assign
+    (:func:`_assign_lists`), the list ranking on the driver
+    (:func:`_probe_lists_np`) and the scorer (:func:`_score_lists`), so
+    the result equals :func:`ivf_probe_index` over an index built at
+    the same seed (tests/test_dedup.py, tests/test_ivf_probe.py).
     """
-    centers = _ivf_centroids(vectors, n_lists, seed, max_iter)
-    cents = _centroid_literals(centers)
-    assigned = vectors.withColumn("list_id", _nearest_list_expr(cents))
+    centers = _lloyd(_training_sample(vectors, seed), n_lists, max_iter, seed)
+    assigned = _assign_lists(vectors, centers)
     if corpus_filter is not None:
         # pre-filter: prune BEFORE the candidate join so the scored
         # set is exactly the matching sub-corpus's inverted lists
         assigned = assigned.where(corpus_filter)
-    plists = _probe_lists(probes, cents, n_probe)
+    plists, _ = _probe_lists_np(probes, _centroid_table(centers), n_probe)
     return _score_lists(assigned, plists, k)
 
 
@@ -323,18 +277,20 @@ def _training_sample(vectors: DataFrame, seed: int):
     return flat.reshape(t.num_rows, -1).astype(np.float64)
 
 
-def _ivf_centroids(vectors: DataFrame, n_lists: int, seed: int, max_iter: int):
-    """Driver-side coarse-quantizer fit over :func:`_training_sample`."""
-    return _lloyd(_training_sample(vectors, seed), n_lists, max_iter, seed)
+def _centroid_table(centers):
+    """An in-memory quantizer as :func:`_read_centroids` returns a
+    persisted one: ``(list_id, cv, cnorm)`` in list_id order, cnorm
+    being ‖c‖² of each row, the value a build stores."""
+    import numpy as np
+
+    cnorm = np.array([float((c * c).sum()) for c in centers])
+    return np.arange(len(centers)), centers, cnorm
 
 
-def _centroid_literals(centers, cnorms=None) -> Column:
+def _centroid_literals(centers) -> Column:
     """The centroid table as ONE array-of-structs literal (n_lists ×
-    (list_id, cv, cnorm)) — stays codegen, no join, no MLlib.
-    ``cnorms`` defaults to ‖c‖² of each center; a persisted index
-    passes the column it stored (:func:`_read_centroids`)."""
-    if cnorms is None:
-        cnorms = [(c * c).sum() for c in centers]
+    (list_id, cv, cnorm)) — stays codegen, no join, no MLlib."""
+    _, cv, cnorm = _centroid_table(centers)
     return F.array(
         *[
             F.struct(
@@ -342,7 +298,7 @@ def _centroid_literals(centers, cnorms=None) -> Column:
                 lit_double_array(c).alias("cv"),
                 F.lit(float(n)).alias("cnorm"),
             )
-            for i, (c, n) in enumerate(zip(centers, cnorms))
+            for i, (c, n) in enumerate(zip(cv, cnorm))
         ]
     )
 
@@ -409,29 +365,24 @@ def _nearest_list_expr(cents: Column) -> Column:
     )[0]["list_id"]
 
 
-def _probe_lists(probes: DataFrame, cents: Column, n_probe: int) -> DataFrame:
-    """Probe → its n_probe nearest lists, SAME metric as assignment
-    (euclidean argmin) so a probe's own cell is always searched."""
-    pc = probes.select(
-        "probe_id", F.col("embedding").alias("q"), F.explode(cents).alias("c")
-    ).select(
-        "probe_id",
-        "q",
-        F.col("c.list_id").alias("list_id"),
-        (F.col("c.cnorm") - 2 * dot(F.col("q"), F.col("c.cv"))).alias("cdist"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cdist").asc(), "list_id")
-    return (
-        pc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_probe)
-        .select("probe_id", "q", "list_id")
-    )
+def _assign_lists(vectors: DataFrame, centers) -> DataFrame:
+    """``vectors`` plus each row's nearest centroid as ``list_id`` —
+    the one assign of every IVF and IVF-PQ lane. Up to
+    ``_IVF_LITERAL_MAX`` lists it is the codegen literal expression
+    (:func:`_nearest_list_expr`), wider the Arrow-batched numpy kernel
+    (:func:`_assign_lists_np`)."""
+    if len(centers) <= _IVF_LITERAL_MAX:
+        return vectors.withColumn(
+            "list_id", _nearest_list_expr(_centroid_literals(centers))
+        )
+    return _assign_lists_np(vectors, centers)
 
 
 def _nearest_lists_np(Q, cv, cnorm, n_probe: int):
     """Row indices into ``cv`` of each probe's ``n_probe`` nearest
-    centroids: the ranking :func:`_probe_lists` computes in Spark,
-    reproduced bit for bit on the driver. ``q·c`` is the same
+    centroids, ranked on the driver exactly as a Spark window over
+    ``cnorm − 2·dot(q, cv)`` would rank them (the reference kept in
+    tests/test_ivf_probe.py). ``q·c`` is the same
     left-to-right double fold as ``functions.vector.dot`` (a BLAS
     ``Q @ cv.T`` sums in another order and can flip a near-tie),
     ``cdist = cnorm − 2·q·c``, and the stable sort over rows kept in
@@ -446,11 +397,15 @@ def _nearest_lists_np(Q, cv, cnorm, n_probe: int):
 
 
 def _probe_lists_np(
-    probes: DataFrame, list_ids, cv, cnorm, n_probe: int
+    probes: DataFrame, centroids, n_probe: int
 ) -> tuple[DataFrame, list[int]]:
-    """Driver-side :func:`_probe_lists` for a persisted index: ONE
-    collect of the probes (bounded — the scoring join broadcasts them
-    n_probe times over anyway), the ranking in
+    """Probe → its n_probe nearest lists, by the assignment's metric
+    (euclidean argmin) so a probe's own cell is always searched: the
+    one list ranking of every IVF and IVF-PQ probe path. ``centroids``
+    is ``(list_id, cv, cnorm)`` (:func:`_read_centroids` for a
+    persisted index, :func:`_centroid_table` for an in-memory one).
+    ONE collect of the probes (bounded — the scoring join broadcasts
+    them n_probe times over anyway), the ranking in
     :func:`_nearest_lists_np`, and the (probe_id, q, list_id) rows
     handed back to Spark as one Arrow table, ``q`` being the probe's
     own embedding column with its type unchanged. Also returns the
@@ -458,6 +413,7 @@ def _probe_lists_np(
     import numpy as np
     import pyarrow as pa
 
+    list_ids, cv, cnorm = centroids
     pt = probes.select("probe_id", "embedding").toArrow()
     emb = pt.column("embedding")
     Q = (  # explicit width: zero probes make a (0, dim) matrix
@@ -532,18 +488,14 @@ def ivf_build_index(
         n_rows = len(sample) if len(sample) < _SAMPLE_CAP else vectors.count()
         n_lists = ivf_list_schedule(n_rows)[0]
     centers = _lloyd(sample, n_lists, max_iter, seed)
-    if n_lists <= _IVF_LITERAL_MAX:
-        cents = _centroid_literals(centers)
-        assigned = vectors.withColumn("list_id", _nearest_list_expr(cents))
-    else:  # wide index: codegen literals stop paying — numpy kernel
-        # ...and cluster the write: without it every task writes into
-        # every list directory (tasks x n_lists small files — 14k at
-        # 447 lists, the lakehouse small-file trap); one shuffle keyed
-        # by list_id lands ONE file per list, and each list holds
+    assigned = _assign_lists(vectors, centers)
+    if n_lists > _IVF_LITERAL_MAX:
+        # cluster a wide index's write: without it every task writes
+        # into every list directory (tasks x n_lists small files — 14k
+        # at 447 lists, the lakehouse small-file trap); one shuffle
+        # keyed by list_id lands ONE file per list, and each list holds
         # >= _IVF_MIN_LIST_ROWS rows so write parallelism stays wide
-        assigned = _assign_lists_np(vectors, centers).repartition(
-            F.col("list_id")
-        )
+        assigned = assigned.repartition(F.col("list_id"))
 
     def write(tmp: str) -> None:
         assigned.write.partitionBy("list_id").parquet(os.path.join(tmp, "lists"))
@@ -611,10 +563,11 @@ def _publish_index(path: str, write) -> None:
 def _write_centroids(path: str, centers) -> None:
     """A persisted IVF/IVF-PQ index's centroids, as
     :func:`_read_centroids` reads them."""
+    _, cv, cnorm = _centroid_table(centers)
     _write_driver_table(
         path,
         "centroids",
-        [(i, c.tolist(), float((c * c).sum())) for i, c in enumerate(centers)],
+        [(i, c.tolist(), float(n)) for i, (c, n) in enumerate(zip(cv, cnorm))],
         "list_id int, cv array<double>, cnorm double",
     )
 
@@ -677,10 +630,10 @@ def ivf_probe_index(
     fraction falls as the index widens."""
     import os
 
-    list_ids, cv, cnorm = _read_centroids(path)
+    centroids = _read_centroids(path)
     if n_probe is None:
-        n_probe = _ivf_n_probe(len(list_ids))
-    plists, wanted = _probe_lists_np(probes, list_ids, cv, cnorm, n_probe)
+        n_probe = _ivf_n_probe(len(centroids[0]))
+    plists, wanted = _probe_lists_np(probes, centroids, n_probe)
     assigned = spark.read.parquet(os.path.join(path, "lists")).where(
         F.col("list_id").isin(wanted)
     )
@@ -812,14 +765,14 @@ def pipeline_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cell_occupancy(vectors: DataFrame, cents: Column) -> dict[int, int]:
+def _cell_occupancy(vectors: DataFrame, centers) -> dict[int, int]:
     """Inverted-list occupancy histogram of ``vectors`` under a FIXED
     coarse quantizer — ONE map pass + an n_lists-row aggregate, then a
     bounded collect (≤ n_lists rows). This is the drift monitor's whole
     per-epoch cost: at 100 TB it is a scan-local count-by-cell, no pair
     structure, no vector math beyond the assignment argmin."""
     rows = (
-        vectors.select(_nearest_list_expr(cents).alias("list_id"))
+        _assign_lists(vectors.select("embedding"), centers)
         .groupBy("list_id")
         .count()
         .collect()
@@ -926,9 +879,8 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     path0 = build(0, corpus0, "initial")
-    _, cv0, cnorm0 = _read_centroids(path0)
-    cents0 = _centroid_literals(cv0, cnorm0)
-    serving_occ = _cell_occupancy(corpus0, cents0)
+    cv0 = _read_centroids(path0)[1]
+    serving_occ = _cell_occupancy(corpus0, cv0)
 
     arrived = corpus0
     audit = []
@@ -937,7 +889,7 @@ def pipeline_ann_drift_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frozen-quantizer assignment of ONLY the new epoch (the i23
         # discipline): the monitor never re-scans history
         psi = _occupancy_psi(
-            serving_occ, _cell_occupancy(delta, cents0), n_lists=10
+            serving_occ, _cell_occupancy(delta, cv0), n_lists=10
         )
         arrived = arrived.unionByName(delta)
         rebuilt = psi > _DRIFT_REBUILD_PSI
@@ -1091,23 +1043,47 @@ def _pq_encode_expr(cvs: list[list[list[float]]], vec: Column) -> Column:
     return F.array(*[encode_subspace(j) for j in range(len(cvs))])
 
 
+def _ivfpq_encode(
+    vectors: DataFrame, coarse, cvs: list[list[list[float]]], keep: list[str]
+) -> DataFrame:
+    """``(*keep, list_id, codes)``: each vector's coarse list
+    (:func:`_assign_lists`) and the m PQ codes of its residual
+    x − c(x) — the encode of the persisted build and of the in-memory
+    :func:`ivfpq_knn` alike."""
+    residual = F.zip_with(
+        F.col("embedding"),
+        F.element_at(_coarse_cv_lit(coarse), F.col("list_id") + 1),
+        lambda x, c: x - c,
+    )
+    return _assign_lists(vectors.select(*keep, "embedding"), coarse).select(
+        *keep, "list_id", _pq_encode_expr(cvs, residual).alias("codes")
+    )
+
+
 def _ivfpq_score(
-    cand: DataFrame,
+    codes: DataFrame,
+    plists: DataFrame,
     cvs: list[list[list[float]]],
-    coarse_cv: Column,
+    coarse,
     corpus: DataFrame,
     k: int,
     shortlist: int,
 ) -> DataFrame:
-    """Shared scoring tail of the in-memory and persisted IVF-PQ probe
-    paths (sharing it is what makes the equality test meaningful):
-    ``cand`` = (probe_id, vec_id, list_id, codes, q) candidates from
-    the probed lists; residual ADC approx-dot = ⟨q, c_list⟩ +
-    Σ_j ⟨codebook_j[code_j], q_j⟩ ranks a per-probe shortlist;
-    survivors join BACK to the corpus by vec_id (broadcast —
-    ≤ shortlist × probes rows) for the exact float re-rank. Ties
-    break on vec_id at both boundaries."""
+    """Shared candidate step and scoring tail of the in-memory and
+    persisted IVF-PQ probe paths (sharing it is what makes the
+    equality test meaningful): ``codes`` (vec_id, list_id, codes, ...)
+    joins the (probe_id, q, list_id) rows of :func:`_probe_lists_np`;
+    residual ADC approx-dot = ⟨q, c_list⟩ + Σ_j ⟨codebook_j[code_j],
+    q_j⟩ ranks a per-probe shortlist; survivors join BACK to the
+    corpus by vec_id (broadcast — ≤ shortlist × probes rows) for the
+    exact float re-rank. Ties break on vec_id at both boundaries."""
     m, subdim = len(cvs), len(cvs[0][0])
+    coarse_cv = _coarse_cv_lit(coarse)
+    cand = (
+        codes.join(F.broadcast(plists), "list_id")
+        .where(F.col("vec_id") != F.col("probe_id"))
+        .select("probe_id", "vec_id", "list_id", "codes", "q")
+    )
 
     def adc_term(j: int):
         cv_lit = F.array(
@@ -1171,23 +1147,13 @@ def ivfpq_build_index(
 
     coarse, books = _ivfpq_quantizers(vectors, n_lists, m, ksub, seed, max_iter)
     cvs = _pq_cv_lists(books)
-    cents = _centroid_literals(coarse)
-    coarse_cv = _coarse_cv_lit(coarse)
-    assigned = vectors.withColumn("list_id", _nearest_list_expr(cents))
-    residual = F.zip_with(
-        F.col("embedding"),
-        F.element_at(coarse_cv, F.col("list_id") + 1),
-        lambda x, c: x - c,
-    )
     # the index row = ids + codes + every FILTERABLE metadata column
     # (label, tenant, license, ...) — everything EXCEPT the float
     # vector, so "vector search + WHERE clause" predicates push into
     # the pruned code scan itself (see ivfpq_probe_index's
     # corpus_filter) while index bytes stay ∝ m codes + metadata
     meta = [c for c in vectors.columns if c != "embedding"]
-    coded = assigned.select(
-        *meta, "list_id", _pq_encode_expr(cvs, residual).alias("codes")
-    )
+    coded = _ivfpq_encode(vectors, coarse, cvs, meta)
 
     def write(tmp: str) -> None:
         coded.write.partitionBy("list_id").parquet(os.path.join(tmp, "lists"))
@@ -1232,7 +1198,7 @@ def ivfpq_probe_index(
 
     import pyarrow.parquet as pq
 
-    list_ids, cv, cnorm = _read_centroids(path)
+    centroids = _read_centroids(path)
     books = pq.read_table(os.path.join(path, "codebooks")).sort_by(
         [("s", "ascending"), ("code", "ascending")]
     )
@@ -1240,18 +1206,13 @@ def ivfpq_probe_index(
     for s, v in zip(books.column("s").to_pylist(), books.column("cv").to_pylist()):
         by_s.setdefault(s, []).append(v)
     cvs = [by_s[s] for s in sorted(by_s)]
-    plists, wanted = _probe_lists_np(probes, list_ids, cv, cnorm, n_probe)
+    plists, wanted = _probe_lists_np(probes, centroids, n_probe)
     codes = spark.read.parquet(os.path.join(path, "lists")).where(
         F.col("list_id").isin(wanted)
     )
     if corpus_filter is not None:
         codes = codes.where(corpus_filter)
-    cand = (
-        codes.join(F.broadcast(plists), "list_id")
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", "list_id", "codes", "q")
-    )
-    return _ivfpq_score(cand, cvs, _coarse_cv_lit(cv), corpus, k, shortlist)
+    return _ivfpq_score(codes, plists, cvs, centroids[1], corpus, k, shortlist)
 
 
 def ivfpq_knn(
@@ -1270,29 +1231,14 @@ def ivfpq_knn(
     probing a persisted index at the same seed (the equality tooth),
     without the disk roundtrip: coarse-assign + encode on the fly,
     prune to each probe's n_probe lists, ADC-shortlist, exact
-    re-rank."""
+    re-rank. The encode (:func:`_ivfpq_encode`), the list ranking
+    (:func:`_probe_lists_np`) and the candidate step and scorer
+    (:func:`_ivfpq_score`) are the persisted index's own."""
     coarse, books = _ivfpq_quantizers(vectors, n_lists, m, ksub, seed, max_iter)
     cvs = _pq_cv_lists(books)
-    cents = _centroid_literals(coarse)
-    coarse_cv = _coarse_cv_lit(coarse)
-    assigned = vectors.select(
-        "vec_id", "embedding", _nearest_list_expr(cents).alias("list_id")
-    )
-    residual = F.zip_with(
-        F.col("embedding"),
-        F.element_at(coarse_cv, F.col("list_id") + 1),
-        lambda x, c: x - c,
-    )
-    coded = assigned.select(
-        "vec_id", "list_id", _pq_encode_expr(cvs, residual).alias("codes")
-    )
-    plists = _probe_lists(probes, cents, n_probe)
-    cand = (
-        coded.join(F.broadcast(plists), "list_id")
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", "list_id", "codes", "q")
-    )
-    return _ivfpq_score(cand, cvs, coarse_cv, vectors, k, shortlist)
+    coded = _ivfpq_encode(vectors, coarse, cvs, ["vec_id"])
+    plists, _ = _probe_lists_np(probes, _centroid_table(coarse), n_probe)
+    return _ivfpq_score(coded, plists, cvs, coarse, vectors, k, shortlist)
 
 
 @query("h16_ivfpq_persisted", section="H16,A3,A1,G8", tags=("ann", "scale"))
@@ -1833,6 +1779,23 @@ _PL_PLANES = 4
 _PL_SCALE = 1000  # fixed-point quantization: qv[d] = floor(v*1000 + 0.5)
 
 
+def _pl_qv() -> Column:
+    """``qv``, the fixed-point form of ``embedding``: each component
+    widened to double, then floor(v·_PL_SCALE + 0.5) — IEEE-exact and
+    engine-identical, so the oracle SQL's copy of it matches bit for
+    bit. The one encoding every portable ANN twin scores on."""
+    return F.transform(
+        "embedding",
+        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
+    )
+
+
+def _pl_nn() -> Column:
+    """``nn`` = Σ qv², the exact int64 squared norm of ``qv``."""
+    zero = F.lit(0).cast("long")
+    return F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+
+
 def _pl_coef(j: int, d: int) -> int:
     """Deterministic LCG hyperplane coefficient in [-1000, 1000].
 
@@ -1923,10 +1886,7 @@ def h16_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape is unchanged: bucket equi-join, candidates ∝ bucket
     collisions, never n^2."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     base = e.select("vec_id", qv.alias("qv"))
     zero = F.lit(0).cast("long")
     bits = []
@@ -1942,9 +1902,7 @@ def h16_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         (b * F.lit(2 ** (_PL_PLANES - 1 - j)) for j, b in enumerate(bits)),
         start=F.lit(0),
     )
-    nn = F.aggregate(
-        F.transform("qv", lambda x: x * x), zero, lambda acc, x: acc + x
-    )
+    nn = _pl_nn()
     tagged = base.select(
         "vec_id", "qv", bucket.alias("bucket"), nn.alias("nn")
     )
@@ -2075,10 +2033,7 @@ def h16_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free map per vector), candidates are cell equi-join
     fan-out (n/k per probe expected), never n^2."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     base = defer_unpersist(e.select("vec_id", qv.alias("qv")).persist())
     cents = base.where(F.col("vec_id") < _IVP_K).select(
         F.col("vec_id").alias("cent_id"), F.col("qv").alias("cv")
@@ -2114,7 +2069,7 @@ def h16_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.aggregate(
         F.zip_with("qv", "qp", lambda x, y: x * y), zero, lambda acc, x: acc + x
     )
-    nn_v = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn_v = _pl_nn()
     nn_p = F.aggregate(F.transform("qp", lambda x: x * x), zero, lambda a, x: a + x)
     cos_raw = num.cast("double") / F.sqrt((nn_v * nn_p).cast("double"))
     scored = cand.select(
@@ -2243,10 +2198,7 @@ def h16_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist is WindowGroupLimit-bounded, and exact math touches
     <= _PQP_SHORTLIST rows per probe regardless of corpus size."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     base = defer_unpersist(e.select("vec_id", qv.alias("qv")).persist())
     zero = F.lit(0).cast("long")
 
@@ -2317,7 +2269,7 @@ def h16_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.aggregate(
         F.zip_with("qv", "qp", lambda x, y: x * y), zero, lambda acc, x: acc + x
     )
-    nn_v = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn_v = _pl_nn()
     nn_p = F.aggregate(F.transform("qp", lambda x: x * x), zero, lambda a, x: a + x)
     cos_raw = num.cast("double") / F.sqrt((nn_v * nn_p).cast("double"))
     scored = shortlist.select(
@@ -2485,10 +2437,7 @@ def h16_opq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_OPQ_SHORTLIST}-row shortlist per probe."""
     perm = _opq_perm()
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     zero = F.lit(0).cast("long")
 
     def rot_dim(d: int):
@@ -2575,7 +2524,7 @@ def h16_opq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.aggregate(
         F.zip_with("qv", "qp", lambda x, y: x * y), zero, lambda acc, x: acc + x
     )
-    nn_v = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn_v = _pl_nn()
     nn_p = F.aggregate(F.transform("qp", lambda x: x * x), zero, lambda a, x: a + x)
     cos_raw = num.cast("double") / F.sqrt((nn_v * nn_p).cast("double"))
     scored = shortlist.select(
@@ -2731,10 +2680,7 @@ def h16_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected, never n^2), ADC is m*subdim integer ops per candidate,
     and exact math is shortlist-bounded."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     base = defer_unpersist(e.select("vec_id", qv.alias("qv")).persist())
     zero = F.lit(0).cast("long")
 
@@ -2839,7 +2785,7 @@ def h16_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.aggregate(
         F.zip_with("qv", "qp", lambda x, y: x * y), zero, lambda acc, x: acc + x
     )
-    nn_v = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn_v = _pl_nn()
     nn_p = F.aggregate(F.transform("qp", lambda x: x * x), zero, lambda a, x: a + x)
     cos_raw = num.cast("double") / F.sqrt((nn_v * nn_p).cast("double"))
     scored = shortlist.select(
@@ -2956,14 +2902,10 @@ def _bq_packed(spark: SparkSession, sf_dir: str):
     scan touches), ``vecs`` the quantized int vectors + norms for the
     shortlist rerank."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     base = e.select("vec_id", qv.alias("qv"))
-    zero = F.lit(0).cast("long")
     packed = _bq_pack(base)
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn = _pl_nn()
     vecs = base.select("vec_id", "qv", nn.alias("nn"))
     return packed, vecs
 
@@ -3544,15 +3486,8 @@ def _nsw_search(
     zero = F.lit(0).cast("long")
     if base_in is None:
         e = parallelized(table(spark, sf_dir, "embeddings"))
-        qv = F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)
-            ),
-        )
-        nn = F.aggregate(
-            F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x
-        )
+        qv = _pl_qv()
+        nn = _pl_nn()
         base = defer_unpersist(
             e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
         )
@@ -4104,15 +4039,8 @@ def _hnsw_search(
     zero = F.lit(0).cast("long")
     if base_in is None:
         e = parallelized(table(spark, sf_dir, "embeddings"))
-        qv = F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)
-            ),
-        )
-        nn = F.aggregate(
-            F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x
-        )
+        qv = _pl_qv()
+        nn = _pl_nn()
         base = defer_unpersist(
             e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
         )
@@ -4336,7 +4264,8 @@ def h16_bq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"v1 code table covers {audit[1][1]} of {n_all} corpus rows"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         audit,
         "snapshot int, code_rows long, n_results long,"
         " delta_results long, mean_hamming double",
@@ -4499,12 +4428,8 @@ def h16_nsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_glove_spark.sources import txlog
 
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
-    zero = F.lit(0).cast("long")
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    qv = _pl_qv()
+    nn = _pl_nn()
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
@@ -4520,7 +4445,8 @@ def h16_nsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             txlog.create(edges, edges_path)
         else:
             txlog.overwrite(edges, edges_path)
-        row = spark.createDataFrame(
+        row = _arrow_frame(
+            spark,
             [(version, watermark, txlog.read(spark, edges_path).count())],
             "build_version int, watermark long, edge_rows long",
         )
@@ -4562,7 +4488,8 @@ def h16_nsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"v0-pinned graph served {audit[0][4]} delta nodes it predates"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         audit,
         "build_version int, watermark long, edge_rows long,"
         " n_results long, delta_results long, mean_cos double",
@@ -4683,12 +4610,8 @@ def h16_nsw_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_glove_spark.sources import txlog
 
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
-    zero = F.lit(0).cast("long")
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    qv = _pl_qv()
+    nn = _pl_nn()
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
@@ -4797,14 +4720,10 @@ def h16_bq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank fetch is <= probes x _BQ_SHORT ids — the filtered tier
     costs LESS than the unfiltered one, by the selectivity."""
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
-    zero = F.lit(0).cast("long")
+    qv = _pl_qv()
     base = e.select("vec_id", qv.alias("qv"), "label")
     packed = _bq_pack(base, keep=("label",))
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn = _pl_nn()
     vecs = base.select("vec_id", "qv", nn.alias("nn"))
     res = (
         _bq_search(packed, vecs, cand_pred=F.col("label") % 3 == 0)
@@ -4850,12 +4769,8 @@ def h16_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_glove_spark.sources import txlog
 
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
-    zero = F.lit(0).cast("long")
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    qv = _pl_qv()
+    nn = _pl_nn()
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
@@ -4899,7 +4814,8 @@ def h16_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         if sorted(per_layer) != [0, 1, 2]:
             raise AssertionError(f"build v{version} lost a layer: {per_layer}")
-        row = spark.createDataFrame(
+        row = _arrow_frame(
+            spark,
             [(version, watermark, sum(per_layer.values()))],
             "build_version int, watermark long, edge_rows long",
         )
@@ -4944,7 +4860,8 @@ def h16_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"v0-pinned hierarchy served {audit[0][4]} delta nodes it predates"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         audit,
         "build_version int, watermark long, edge_rows long,"
         " n_results long, delta_results long, mean_cos double",
@@ -5058,7 +4975,8 @@ def _hn_insert_epoch(
     added = allnew.count()
     txlog.append(allnew, edges_path, operation=f"graph-insert-{version}")
     txlog.append(
-        spark.createDataFrame(
+        _arrow_frame(
+            spark,
             [(version, new_hi, added)],
             "build_version int, watermark long, edge_rows long",
         ),
@@ -5106,12 +5024,9 @@ def h16_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_glove_spark.sources import txlog
 
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     zero = F.lit(0).cast("long")
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn = _pl_nn()
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
@@ -5142,7 +5057,8 @@ def h16_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     txlog.create(v0, edges_path)
     txlog.create(
-        spark.createDataFrame(
+        _arrow_frame(
+            spark,
             [(0, w0, txlog.read(spark, edges_path).count())],
             "build_version int, watermark long, edge_rows long",
         ),
@@ -5233,7 +5149,8 @@ def h16_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"incremental graph recall {audit[2][5]} below the 0.2 floor"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         audit,
         "build_version int, watermark long, edge_rows long,"
         " new_nodes long, n_results long, recall double",
@@ -5281,12 +5198,9 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_glove_spark.sources import txlog
 
     e = parallelized(table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
+    qv = _pl_qv()
     zero = F.lit(0).cast("long")
-    nn = F.aggregate(F.transform("qv", lambda x: x * x), zero, lambda a, x: a + x)
+    nn = _pl_nn()
     base = defer_unpersist(
         e.select("vec_id", qv.alias("qv")).withColumn("nn", nn).persist()
     )
@@ -5318,7 +5232,8 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     txlog.create(v0, edges_path)
     txlog.create(
-        spark.createDataFrame(
+        _arrow_frame(
+            spark,
             [(0, w0, txlog.read(spark, edges_path).count())],
             "build_version int, watermark long, edge_rows long",
         ),
@@ -5358,7 +5273,8 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     txlog.overwrite(kept, edges_path)
     txlog.append(
-        spark.createDataFrame(
+        _arrow_frame(
+            spark,
             [(3, w2, txlog.read(spark, edges_path).count())],
             "build_version int, watermark long, edge_rows long",
         ),
@@ -5429,7 +5345,8 @@ def h16_hnsw_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"compaction cost recall {r_pre} -> {r_post} (> 0.02 budget)"
         )
-    return spark.createDataFrame(
+    return _arrow_frame(
+        spark,
         [
             ("pre_compaction", pre_rows, int(over), r_pre),
             ("post_compaction", post_rows, 0, r_post),

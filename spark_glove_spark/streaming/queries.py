@@ -1849,8 +1849,8 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h16_ivf_persisted = batch index, pipeline_ann_index_lifecycle =
     versioned rebuilds, this = continuous arrival): the coarse
     quantizer is fit ONCE on the historical corpus and FROZEN;
-    arriving vectors only ASSIGN to the fixed centroids (a pure
-    codegen expression over literals — no refit, no shuffle) and
+    arriving vectors only ASSIGN to the fixed centroids (the batch
+    index's own assign, ``_assign_lists`` — no refit, no shuffle) and
     append to the lists txlog table, one idempotent commit per epoch
     (SetTransaction watermark — a restarted stream re-delivering an
     epoch no-ops, the pipeline_streaming_curate contract).
@@ -1862,7 +1862,8 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, so arrival order and batching cannot change it).
     Output: the probe results served from the accumulated lists
     (rows-only: k-means cells are model-specific; the equality tooth
-    and the shared probe helpers tie it to the tested batch path).
+    and the shared list ranking and scorer, ``_probe_lists_np`` and
+    ``_score_lists``, tie it to the tested batch path).
 
     100 TB/day: per-trigger cost is one map-only assignment pass over
     the batch plus one bounded txlog commit; the quantizer never
@@ -1870,17 +1871,18 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy decision the catalog makes explicit); probes pay the same
     pruned-list scans as the batch index."""
     from spark_glove_spark.operators.ann import (
-        _centroid_literals,
-        _ivf_centroids,
-        _nearest_list_expr,
-        _probe_lists,
+        _assign_lists,
+        _centroid_table,
+        _lloyd,
+        _probe_lists_np,
         _score_lists,
+        _training_sample,
     )
 
     e = table(spark, sf_dir, "embeddings")
     # train half: quantizer fit once on the historical corpus; the
-    # stream below only assigns against these frozen literals
-    cents = _centroid_literals(_ivf_centroids(e, 10, 42, 10))
+    # stream below only assigns against these frozen centroids
+    centers = _lloyd(_training_sample(e, 42), 10, 10, 42)
     # streamed source AND the returned plan read from this tempdir
     # lazily — reclaim at the next declared query, not never (the
     # h16_ivf_persisted leak class, r10 review)
@@ -1897,9 +1899,7 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def assign(batch_df: DataFrame) -> list[DataFrame] | None:
         if batch_df.count() == 0:
             return None
-        return [
-            batch_df.withColumn("list_id", _nearest_list_expr(cents)).coalesce(1)
-        ]
+        return [_assign_lists(batch_df, centers).coalesce(1)]
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         txlog.commit_epoch(epoch_id, writes, lambda: assign(batch_df))
@@ -1910,7 +1910,7 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("replay collapsed to a single micro-batch")
     refire_last_epoch(process, e.limit(5), writes)
     acc = txlog.read(spark, lists_tbl)
-    direct = e.withColumn("list_id", _nearest_list_expr(cents))
+    direct = _assign_lists(e, centers)
     # MULTISET equality, not set equality: vec_ids are unique in the
     # source, so equal counts + equal sets ⇒ no row landed twice — a
     # set-only compare would dedupe away exactly the double-applied-
@@ -1932,7 +1932,8 @@ def i23_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("probe_id"), "embedding"
     )
     # single consumer (the broadcast in _score_lists): no pin needed
-    return _score_lists(acc, _probe_lists(probes, cents, 3), 10)
+    plists, _ = _probe_lists_np(probes, _centroid_table(centers), 3)
+    return _score_lists(acc, plists, 10)
 
 
 def _bq_codes_empty(e: DataFrame) -> DataFrame:
@@ -1948,13 +1949,9 @@ def _bq_codes_empty(e: DataFrame) -> DataFrame:
 def _bq_batch_codes(batch_df: DataFrame) -> DataFrame:
     """Sign-packed ``(vec_id, w_lo, w_hi)`` codes of an embeddings
     micro-batch — the batch packing of h16_bq_portable, per epoch."""
-    from spark_glove_spark.operators.ann import _PL_SCALE, _bq_pack
+    from spark_glove_spark.operators.ann import _bq_pack, _pl_qv
 
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(float(_PL_SCALE)) + F.lit(0.5)),
-    )
-    return _bq_pack(batch_df.select("vec_id", qv.alias("qv")))
+    return _bq_pack(batch_df.select("vec_id", _pl_qv().alias("qv")))
 
 
 @query(

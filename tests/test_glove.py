@@ -339,6 +339,20 @@ def test_fit_releases_superseded_checkpoints(spark, docs):
     assert held_after(2) == held_after(5) <= 2
 
 
+def test_fit_above_cap_releases_superseded_checkpoints(spark, docs):
+    """The same bound above the broadcast cap (``broadcast_max_weights=0``),
+    where each iteration checkpoints its parameter table and the fit
+    releases the one it supersedes."""
+    jsc = spark.sparkContext._jsc
+
+    def held_after(iterations: int) -> int:
+        before = set(jsc.getPersistentRDDs().keySet())
+        Glove(iterations=iterations, broadcast_max_weights=0, **CFG).fit(docs)
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    assert held_after(2) == held_after(5) <= 2
+
+
 def test_fit_rejects_empty_cooccurrence(spark):
     """A corpus whose vocabulary never co-occurs (six one-word docs)
     has no X cell to train on: the fit raises a ValueError, as for an
